@@ -8,8 +8,8 @@ Stages
                  partition compressor)
   bm25_batch     50-query batch BM25 top-10, naive DataFrame path
   wand_batch     same workload over compressed chunks (WAND batch plan:
-                 prune=False, one scoring pass; single-query latency below
-                 uses the pruned block-max plan)
+                 one scoring pass; single-query latency below
+                 uses the early-exit block-max plan)
   build_synth    serving index build (raw postings + compression + derived
                  tables) over the deterministic synthetic web-page corpus
                  (~500k·sf docs) — the scaling-efficiency workload
@@ -131,7 +131,7 @@ def main() -> None:
     # --- batch query: WAND batch plan over compressed ----------------------
     stages["wand_batch"], rows_w = min_of_2(
         lambda: wand_topk(
-            qt, comp, idx.dictionary, idx.avgdl, k=10, prune=False,
+            qt, comp, idx.dictionary, idx.avgdl, k=10,
             term_list=tl,
         ).collect()
     )
@@ -140,7 +140,7 @@ def main() -> None:
 
     # --- per-query latency over the compressed index (p50/p95) -------------
     # single-task sequential WAND: ONE job per query (scan → groupBy(qid)
-    # → early-exit θ loop in the task) vs the phased plan's 4 barriers.
+    # → early-exit θ loop in the task).
     # Hot-serving form: the dictionary is collected ONCE into the serving
     # process (the reference's RAM-pinned vocabulary, Search.java's
     # long-lived loop) so each query's job plants (qid, term, idf) as a

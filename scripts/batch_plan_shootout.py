@@ -1,18 +1,18 @@
 #!/usr/bin/env python
 """Batch-serving plan shootout at the 4000-query saturation batch: can a
-PRUNED plan beat the barrier-free prune=False bridge plan?
+PRUNED plan beat the barrier-free one-pass bridge plan (wand_topk)?
 
-Round-3 finding (BASELINE.md): the 3-barrier phased WAND (prune=True)
-loses to prune=False for batches — barrier elimination beats chunk
-skipping. The open question (VERDICT r3 ask #3) is whether pruning can
+Round-3 finding (BASELINE.md): a 3-barrier phased WAND variant lost to
+the one-pass plan for batches — barrier elimination beats chunk
+skipping — and has since been removed (BATCH_PLANS.json keeps its
+118.2 q/s at 32 cores). The open question (VERDICT r3 ask #3) is whether pruning can
 pay WITHOUT barriers: the per-query greedy plan (wand_topk_single's
 DataFrame batch form) walks each query's chunks impact-ordered with a
 running θ INSIDE one task — chunk skipping with zero extra barriers and
 no global top-k window at all (tasks emit ranked rows directly).
 
 Measures, same index, same 4000-query workload, min-of-2 after warmup:
-  bridge    — wand_topk(prune=False): the r3 batch baseline
-  phased    — wand_topk(prune=True): the 3-barrier pruned plan
+  bridge    — wand_topk: the one-pass batch baseline
   greedy    — wand_topk_single(DataFrame batch): barrier-free pruned
   sharded   — wand_topk_sharded + hot idf_map: the file-parallel champion
 
@@ -127,13 +127,7 @@ def main() -> None:
         def bridge(qt_, tl_):
             return wand_topk(
                 qt_, sidx.compressed, sidx.dictionary, sidx.avgdl, k=K,
-                prune=False, chunk_bits=sidx.chunk_bits, term_list=tl_,
-            )
-
-        def phased(qt_, tl_):
-            return wand_topk(
-                qt_, sidx.compressed, sidx.dictionary, sidx.avgdl, k=K,
-                prune=True, chunk_bits=sidx.chunk_bits, term_list=tl_,
+                chunk_bits=sidx.chunk_bits, term_list=tl_,
             )
 
         def greedy(qt_, tl_):
@@ -143,7 +137,6 @@ def main() -> None:
             )
 
         plans["bridge"] = bridge
-        plans["phased"] = phased
         plans["greedy"] = greedy
 
         ref_ranks = None

@@ -204,13 +204,13 @@ def main() -> None:
         # --- union baseline (wide k=3K raw, rounded top-K in driver) ---
         wand_topk(
             wqt, union.compressed, union.dictionary, union.avgdl, k=K,
-            prune=False, chunk_bits=union.chunk_bits,
+            chunk_bits=union.chunk_bits,
             term_list=query_term_list(wq, stem=True),
         ).collect()  # warmup
         t0 = time.perf_counter()
         u_rows = wand_topk(
             qt, union.compressed, union.dictionary, union.avgdl, k=3 * K,
-            prune=False, chunk_bits=union.chunk_bits, term_list=tl,
+            chunk_bits=union.chunk_bits, term_list=tl,
         ).collect()
         u_sec = time.perf_counter() - t0
         union_ranks = _rounded_topk_py(u_rows)
@@ -221,11 +221,11 @@ def main() -> None:
 
         # --- federated over 4 legs: must be rank-identical -------------
         federated_wand_topk(
-            wqt, legs, k=K, prune=False, round_dp=6
+            wqt, legs, k=K, round_dp=6
         ).collect()  # warmup
         t0 = time.perf_counter()
         f_rows = federated_wand_topk(
-            qt, legs, k=K, prune=False, round_dp=6
+            qt, legs, k=K, round_dp=6
         ).collect()
         f_sec = time.perf_counter() - t0
         fed_ranks: dict = {}
@@ -246,17 +246,17 @@ def main() -> None:
         ttl = query_term_list(tq, stem=True)
         t_rows = wand_topk(
             tqt, union.compressed, union.dictionary, union.avgdl, k=3 * K,
-            prune=False, chunk_bits=union.chunk_bits, term_list=ttl,
+            chunk_bits=union.chunk_bits, term_list=ttl,
         ).collect()
         topical_union_ranks = _rounded_topk_py(t_rows)
 
         def run_selective(leg_set, tag):
             selective_wand_topk(
-                wqt, leg_set, k=K, m=M_SELECT, prune=False, round_dp=6
+                wqt, leg_set, k=K, m=M_SELECT, round_dp=6
             ).collect()  # warmup
             t0 = time.perf_counter()
             s_rows = selective_wand_topk(
-                tqt, leg_set, k=K, m=M_SELECT, prune=False, round_dp=6
+                tqt, leg_set, k=K, m=M_SELECT, round_dp=6
             ).collect()
             s_sec = time.perf_counter() - t0
             sel: dict = {}

@@ -10,7 +10,7 @@ of a guess (VERDICT r3 ask #5).
 Protocol: one serving index over the synthetic corpus; batches of 1000
 3-term queries whose vocabulary is an evenly-strided sample of the
 dictionary at increasing coverage fractions; each batch served twice via
-wand_topk(prune=False) — WITH the IN-list (term_list=sample) and WITHOUT
+wand_topk (one-pass plan) — WITH the IN-list (term_list=sample) and WITHOUT
 (term_list=[] disables the literal filter; the broadcast inner join with
 qterms still drops unmatched terms, so results are identical — asserted
 per level). min-of-2 after a warmup, fresh-session protocol matching
@@ -103,7 +103,7 @@ def main() -> None:
             for tag, tl in (("inlist", sample), ("join_only", [])):
                 wand_topk(
                     qt.limit(40), sidx.compressed, sidx.dictionary,
-                    sidx.avgdl, k=K, prune=False,
+                    sidx.avgdl, k=K,
                     chunk_bits=sidx.chunk_bits, term_list=tl,
                 ).collect()  # warmup shape
                 best = 1e18
@@ -111,7 +111,7 @@ def main() -> None:
                     t0 = time.perf_counter()
                     rows = wand_topk(
                         qt, sidx.compressed, sidx.dictionary, sidx.avgdl,
-                        k=K, prune=False, chunk_bits=sidx.chunk_bits,
+                        k=K, chunk_bits=sidx.chunk_bits,
                         term_list=tl,
                     ).collect()
                     best = min(best, time.perf_counter() - t0)

@@ -67,13 +67,13 @@ def main() -> None:
         def run_full():
             return wand_topk(
                 qt, full.compressed, full.dictionary, full.avgdl, k=10,
-                prune=False, term_list=tl, chunk_bits=full.chunk_bits,
+                term_list=tl, chunk_bits=full.chunk_bits,
             ).collect()
 
         def run_parts(values):
             return wand_topk_partitioned(
                 spark, f"{tmp}/parts", qt, values, k=10,
-                prune=False, term_list=tl,
+                term_list=tl,
             ).collect()
 
         run_full()

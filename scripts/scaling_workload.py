@@ -14,8 +14,8 @@ Measured stages are the north rule's two:
   The full serving index, persisted.
 - query = 4000-query batch BM25 top-10 over the COMPRESSED chunks, via
   BOTH serving plans against the persisted index: the WAND batch plan
-  (prune=False: one scoring pass, no probe/θ barriers — see
-  queryeng/wand.py planner note) and the doc-sharded file-parallel plan
+  (wand_topk: one scoring pass, no barriers — see the
+  queryeng/wand.py plan note) and the doc-sharded file-parallel plan
   (queryeng/sharded.py). 4000 queries is the SATURATION batch: throughput
   scaling is a saturated-throughput criterion, and small batches finish
   in seconds at 8 cores, so fixed per-JOB cost (scheduler, barrier
@@ -202,7 +202,7 @@ def main() -> None:
             # warmup the query plan shape (small batch)
             wand_topk(
                 qterms_df(spark, wq_q, stem=True), sidx.compressed,
-                sidx.dictionary, sidx.avgdl, k=10, prune=False,
+                sidx.dictionary, sidx.avgdl, k=10,
                 chunk_bits=sidx.chunk_bits,
                 term_list=query_term_list(wq_q, stem=True),
             ).collect()
@@ -212,7 +212,7 @@ def main() -> None:
                 t0 = time.perf_counter()
                 rows = wand_topk(
                     qt, sidx.compressed, sidx.dictionary, sidx.avgdl, k=10,
-                    prune=False, chunk_bits=sidx.chunk_bits, term_list=tl,
+                    chunk_bits=sidx.chunk_bits, term_list=tl,
                 ).collect()
                 query_sec = min(query_sec, time.perf_counter() - t0)
             out.update(

@@ -79,7 +79,7 @@ def main(argv: list[str] | None = None) -> None:
         report["smoke_query_rows"] = len(rows)
         comp = spark.read.parquet(f"{args.output}/index/postings_comp")
         wrows = wand_topk(
-            qt, comp, idx.dictionary, idx.avgdl, k=10, prune=False
+            qt, comp, idx.dictionary, idx.avgdl, k=10
         ).collect()
         report["smoke_wand_rows"] = len(wrows)
         # rank-compare at the rounded-score grain: numpy vs Spark float

@@ -199,7 +199,7 @@ def main(argv: list[str] | None = None) -> None:
         rows = wand_topk_partitioned(
             spark, args.index,
             qterms_df(spark, queries, stem=not args.no_stem),
-            values, k=args.k, prune=False,
+            values, k=args.k,
         ).collect()
         report = {
             "cmd": "query-partitioned", "index": args.index,
@@ -208,9 +208,6 @@ def main(argv: list[str] | None = None) -> None:
         }
     else:  # query
         from themis_search_engine_spark.indexing import load_serving_index
-        from themis_search_engine_spark.indexing.merge import (
-            serving_bound_scales,
-        )
         from themis_search_engine_spark.queryeng import qterms_df
         from themis_search_engine_spark.queryeng.wand import wand_topk
 
@@ -222,8 +219,7 @@ def main(argv: list[str] | None = None) -> None:
         rows = wand_topk(
             qterms_df(spark, queries, stem=stem), idx.compressed,
             idx.dictionary, idx.avgdl, k=args.k,
-            chunk_bits=idx.chunk_bits, prune=False,
-            bound_scales=serving_bound_scales(spark, args.index),
+            chunk_bits=idx.chunk_bits,
         ).collect()
         report = {
             "cmd": "query", "index": args.index, "n_queries": len(queries),

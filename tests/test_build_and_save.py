@@ -101,8 +101,7 @@ def test_build_and_save_serving_equals_logical_build(spark, tmp_path):
     wand = sorted(
         (r["qid"], r["rank"], r["doc_id"], round(r["score"], 9))
         for r in wand_topk(qt, sv2.compressed, sv2.dictionary, sv2.avgdl,
-                           k=5, prune=False,
-                           chunk_bits=sv2.chunk_bits).collect()
+                           k=5, chunk_bits=sv2.chunk_bits).collect()
     )
     assert naive == wand and len(naive) > 0
 
@@ -142,8 +141,7 @@ def test_serving_chunk_bits_persisted_and_reload_exact(spark, tmp_path):
     wand = sorted(
         (r["qid"], r["rank"], r["doc_id"])
         for r in wand_topk(qt, idx.compressed, idx.dictionary, idx.avgdl,
-                           k=5, prune=False,
-                           chunk_bits=idx.chunk_bits).collect()
+                           k=5, chunk_bits=idx.chunk_bits).collect()
     )
     assert naive == wand and len(naive) > 0
 

@@ -78,8 +78,9 @@ def test_merge_equals_full_rebuild(spark, docs, full_idx, tmp_path):
 
     qt = qterms_df(spark, QUERYSET, stem=False)
     scales = serving_bound_scales(spark, p)
-    got = wand_topk(qt, merged.compressed, merged.dictionary, merged.avgdl,
-                    k=10, chunk_bits=CB, bound_scales=scales)
+    got = wand_topk_single(qt, merged.compressed, merged.dictionary,
+                           merged.avgdl, k=10, chunk_bits=CB,
+                           bound_scales=scales)
     want = wand_topk(qt, full_idx.compressed, full_idx.dictionary,
                      full_idx.avgdl, k=10, chunk_bits=CB)
     assert _ranked(got) == _ranked(want)
@@ -87,8 +88,9 @@ def test_merge_equals_full_rebuild(spark, docs, full_idx, tmp_path):
     # reload from disk: persisted layout carries everything needed
     re = load_serving_index(spark, p)
     assert re.n_docs == merged.n_docs and re.avgdl == merged.avgdl
-    got2 = wand_topk(qt, re.compressed, re.dictionary, re.avgdl, k=10,
-                     chunk_bits=re.chunk_bits, bound_scales=scales)
+    got2 = wand_topk_single(qt, re.compressed, re.dictionary, re.avgdl,
+                            k=10, chunk_bits=re.chunk_bits,
+                            bound_scales=scales)
     assert _ranked(got2) == _ranked(want)
 
 
@@ -232,7 +234,8 @@ def test_avgdl_shift_pruning_stays_sound(spark, tmp_path):
     """Delta docs 20× longer than base: merged avgdl far above the base
     segment's encode-time avgdl, so unscaled base core_max would UNDER-
     state true chunk bounds (bm25_core rises with avgdl) and pruned WAND
-    could skip true top-k chunks. With bound_scales, pruned == unpruned."""
+    could skip true top-k chunks. With bound_scales, the early-exit plan
+    equals the one-pass plan."""
     base_rows = [
         (i, f"alpha beta gamma doc{i}") for i in range(0, 24, 2)
     ]
@@ -251,12 +254,59 @@ def test_avgdl_shift_pruning_stays_sound(spark, tmp_path):
     assert lo == 1.0
 
     qt = qterms_df(spark, {1: "alpha beta", 2: "gamma"}, stem=False)
-    pruned = wand_topk(qt, merged.compressed, merged.dictionary,
-                       merged.avgdl, k=3, chunk_bits=2, probe_chunks=1,
-                       bound_scales=(hi, lo))
+    pruned = wand_topk_single(qt, merged.compressed, merged.dictionary,
+                              merged.avgdl, k=3, chunk_bits=2,
+                              bound_scales=(hi, lo))
     exact = wand_topk(qt, merged.compressed, merged.dictionary,
-                      merged.avgdl, k=3, chunk_bits=2, prune=False)
+                      merged.avgdl, k=3, chunk_bits=2)
     assert _ranked(pruned) == _ranked(exact)
+
+
+def test_early_exit_needs_bound_scales(spark, tmp_path):
+    """The early-exit plans must apply bound_scales: short base docs
+    encoded at avgdl 2 carry chunk bounds far below their scores at the
+    merged avgdl, while delta docs (encoded at the merged avgdl) score
+    between the two. Unscaled, the walk visits the delta chunk first,
+    fills the top-k and stops before the base chunk holding the true
+    top-k; scaled, it matches the one-pass plan."""
+    from themis_search_engine_spark.queryeng.sharded import collect_idf_map
+    from themis_search_engine_spark.queryeng.wand import wand_topk_local
+
+    base_rows = [(i, f"gamma b{i}") for i in range(3)] + [
+        (i, f"beta b{i}") for i in range(3, 12)
+    ]
+    filler = " ".join(f"w{j}" for j in range(100))
+    delta_rows = [
+        (i, "gamma " + " ".join(f"d{i}x{j}" for j in range(5)))
+        for i in range(12, 15)
+    ] + [(i, filler) for i in range(15, 24)]
+    base = spark.createDataFrame(base_rows, "doc_id long, text string")
+    delta = spark.createDataFrame(delta_rows, "doc_id long, text string")
+    p = str(tmp_path / "idx")
+    build_and_save_serving(base, p, stem=False, chunk_bits=2, partitions=2)
+    merged = merge_serving_delta(spark, p, delta, stem=False, partitions=2)
+    scales = serving_bound_scales(spark, p)
+    assert scales[0] > 10.0
+
+    qt = qterms_df(spark, {1: "gamma"}, stem=False)
+    exact = _ranked(wand_topk(qt, merged.compressed, merged.dictionary,
+                              merged.avgdl, k=3, chunk_bits=2))
+    assert [d for _, _, d, _ in exact] == [0, 1, 2]
+
+    def single(bs):
+        return _ranked(wand_topk_single(
+            qt, merged.compressed, merged.dictionary, merged.avgdl, k=3,
+            chunk_bits=2, bound_scales=bs,
+        ))
+
+    assert single(scales) == exact
+    assert single((1.0, 1.0)) != exact  # the scenario needs the scales
+    local = wand_topk_local(
+        f"{p}/postings_comp", {1: ["gamma"]},
+        collect_idf_map(merged.dictionary), merged.avgdl, k=3,
+        chunk_bits=2, bound_scales=scales,
+    )
+    assert sorted(local["doc_id"]) == [0, 1, 2]
 
 
 # --- snapshot-pinned reader --------------------------------------------------
@@ -298,7 +348,7 @@ def test_pinned_snapshot_survives_concurrent_merge(spark, tmp_path):
     def run(ix, scales):
         return sorted(
             (r["qid"], r["rank"], r["doc_id"], round(r["score"], 6))
-            for r in wand_topk(
+            for r in wand_topk_single(
                 qt, ix.compressed, ix.dictionary, ix.avgdl, k=5,
                 chunk_bits=ix.chunk_bits, bound_scales=scales,
             ).collect()

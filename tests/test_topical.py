@@ -157,14 +157,13 @@ def test_selective_recall_lift_over_random(spark, topical_docs, tmp_path):
     qt = qterms_df(spark, queries, stem=True)
     want = {}
     for r in wand_topk(qt, union.compressed, union.dictionary, union.avgdl,
-                       k=5, prune=False,
-                       chunk_bits=union.chunk_bits).collect():
+                       k=5, chunk_bits=union.chunk_bits).collect():
         want.setdefault(r["qid"], set()).add(r["doc_id"])
 
     def recall(leg_set):
         got = {}
         for r in selective_wand_topk(qt, tuple(leg_set), k=5, m=2,
-                                     prune=False, round_dp=6).collect():
+                                     round_dp=6).collect():
             got.setdefault(r["qid"], set()).add(r["doc_id"])
         vals = [
             len(got.get(q, set()) & docs) / len(docs)
@@ -204,13 +203,12 @@ def test_build_and_load_topical_serving(spark, topical_docs, tmp_path):
     qt = qterms_df(spark, synth_topical_queries(10, N_TOPICS), stem=True)
     got = sorted(
         (r["qid"], r["doc_id"])
-        for r in selective_wand_topk(qt, legs, k=5, m=2, prune=False,
-                                     round_dp=6).collect()
+        for r in selective_wand_topk(qt, legs, k=5, m=2, round_dp=6).collect()
     )
     want = sorted(
         (r["qid"], r["doc_id"])
         for r in selective_wand_topk(qt, tuple(built), k=5, m=2,
-                                     prune=False, round_dp=6).collect()
+                                     round_dp=6).collect()
     )
     assert got == want and len(got) > 0
 

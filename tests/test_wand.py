@@ -1,5 +1,8 @@
 """Block-max WAND vs naive DataFrame BM25: identical top-k membership,
-ranks and scores (to float-sum tolerance), with and without pruning."""
+ranks and scores (to float-sum tolerance), for the one-pass plan and the
+early-exit plans."""
+
+import os
 
 import pandas as pd
 import pytest
@@ -58,7 +61,7 @@ def test_sharded_equals_bridge_plan(spark, tmp_path):
     qt = qterms_df(spark, QUERIES, stem=True)
     want = _by_qid(
         wand_topk(qt, idx.compressed, idx.dictionary, idx.avgdl, k=10,
-                  chunk_bits=idx.chunk_bits, prune=False).collect()
+                  chunk_bits=idx.chunk_bits).collect()
     )
     from themis_search_engine_spark.queryeng.sharded import collect_idf_map
 
@@ -253,8 +256,7 @@ def test_sharded_uri_route_equals_plain_path(spark, tmp_path):
     assert want and got == want
 
 
-@pytest.mark.parametrize("prune", [False, True])
-def test_wand_equals_naive(spark, bundle, prune):
+def test_wand_equals_naive(spark, bundle):
     idx, comp = bundle
     qt = qterms_df(spark, QUERIES, stem=True)
     naive = _by_qid(
@@ -263,7 +265,7 @@ def test_wand_equals_naive(spark, bundle, prune):
         ).collect()
     )
     wand = _by_qid(
-        wand_topk(qt, comp, idx.dictionary, idx.avgdl, k=10, prune=prune).collect()
+        wand_topk(qt, comp, idx.dictionary, idx.avgdl, k=10).collect()
     )
     assert set(naive) == set(wand)
     for qid in naive:
@@ -274,16 +276,18 @@ def test_wand_equals_naive(spark, bundle, prune):
 
 
 def test_wand_pruning_skips_chunks(spark):
-    """With small chunks, pruning must score fewer chunks than exist
-    (evidence the ub filter actually skips work)."""
+    """With small chunks, the early-exit plan's chunk skipping must keep
+    the naive top-k on a single rare-term query."""
+    from themis_search_engine_spark.queryeng.wand import wand_topk_single
+
     docs = load_documents(spark, "/root/testdata/sf0.001")
     idx = build_index(docs, stem=True).cache()
     comp = build_postings_compressed(
         idx.counts, idx.doc_stats, idx.avgdl, chunk_bits=6
     ).cache()
     qt = qterms_df(spark, {3: "dup"}, stem=True)
-    res = wand_topk(
-        qt, comp, idx.dictionary, idx.avgdl, k=5, chunk_bits=6, prune=True
+    res = wand_topk_single(
+        qt, comp, idx.dictionary, idx.avgdl, k=5, chunk_bits=6
     ).collect()
     naive = bm25_topk(
         qt, idx.postings_flat, idx.dictionary, idx.doc_stats, idx.avgdl, k=5
@@ -390,8 +394,11 @@ def test_wand_pruned_negative_idf_many_chunks(spark):
     """Regression: with all-negative idf (head terms, df > N/2) a doc
     matching FEWER terms outscores the sum of per-term bounds; the naive
     Σ-bounds ub under-estimated and the pruned plan skipped the chunk
-    holding the true best doc. Both pruned plans must survive chunk_bits=6
-    on the negative-idf query."""
+    holding the true best doc. Both forms of the early-exit plan (the
+    hot-serving literal plan and the DataFrame join plan) must survive
+    chunk_bits=6 on the negative-idf query."""
+    from themis_search_engine_spark.queryeng.pipeline import query_term_map
+    from themis_search_engine_spark.queryeng.sharded import collect_idf_map
     from themis_search_engine_spark.queryeng.wand import wand_topk_single
 
     docs = load_documents(spark, "/root/testdata/sf0.001")
@@ -409,9 +416,10 @@ def test_wand_pruned_negative_idf_many_chunks(spark):
     )
     pruned = sorted(
         (r["rank"], r["doc_id"])
-        for r in wand_topk(
-            qt, comp, idx.dictionary, idx.avgdl, k=7, chunk_bits=6,
-            prune=True,
+        for r in wand_topk_single(
+            query_term_map({1: "spark shuffle join"}, stem=True), comp,
+            None, idx.avgdl, k=7, chunk_bits=6,
+            idf_map=collect_idf_map(idx.dictionary),
         ).collect()
     )
     single = sorted(
@@ -462,3 +470,41 @@ def test_block_max_bounds_sound_at_float_grain(spark, tmp_path):
         checked += 1
     assert checked > 100
 
+
+
+def test_sharded_rejects_zero_df_chunk(tmp_path):
+    """An empty postings_comp row (df_chunk = 0, empty streams) would
+    make the sharded kernel's segmented cumsum read cs[-1] as the next
+    row's base and shift its doc ids silently; the kernel must refuse
+    the file. The same file with a non-empty first row scores normally."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from themis_search_engine_spark.indexing.compress import vb_encode
+    from themis_search_engine_spark.queryeng.sharded import _score_shard
+
+    def vb(xs):
+        return vb_encode(np.asarray(xs, dtype=np.int64))
+
+    def write(d, a_docs):
+        os.makedirs(d)
+        ones = [1] * len(a_docs)
+        pq.write_table(pa.table({
+            "term": ["a", "b"],
+            "chunk": pa.array([0, 0], pa.int64()),
+            "df_chunk": pa.array([len(a_docs), 2], pa.int64()),
+            "doc_bytes": [vb(a_docs), vb([0, 3])],
+            "cnt_bytes": [vb(ones), vb([2, 1])],
+            "mc_bytes": [vb(ones), vb([2, 1])],
+            "dl_bytes": [vb([3] * len(a_docs)), vb([3, 3])],
+        }), f"{d}/part-0.parquet")
+        return d
+
+    args = (("a", "b"), {"a": frozenset({1}), "b": frozenset({1})},
+            {"a": 1.0, "b": 1.0}, 5, 3.0, 4)
+    good = write(str(tmp_path / "good"), [1, 2])
+    assert _score_shard(good, (0, 1), *args) is not None
+    bad = write(str(tmp_path / "bad"), [])
+    with pytest.raises(ValueError, match="df_chunk=0"):
+        _score_shard(bad, (0, 1), *args)

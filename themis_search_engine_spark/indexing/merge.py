@@ -33,8 +33,9 @@ chunked serving layout of :func:`build_and_save_serving`:
       core_max · max(1, avgdl_cur/avgdl_enc)   (upper bounds, idf > 0)
       core_min · min(1, avgdl_cur/avgdl_enc)   (the negative-idf bound)
   The layout persists min/max encode-time avgdl across segments in
-  global_stats; ServingIndex derives the two conservative scales and
-  wand_topk applies them (bound_scales=). Scales only loosen pruning —
+  global_stats; ServingIndex derives the two conservative scales and the
+  pruning plans (wand_topk_single / wand_topk_local) apply them
+  (bound_scales=). Scales only loosen pruning —
   never scores — and are 1.0 for a freshly built (single-segment) index.
 - rank identity with a full rebuild is exact, not approximate: total
   token length is persisted as a LONG (total_len), so the merged
@@ -74,10 +75,12 @@ from .compress import DEFAULT_CHUNK_BITS, compress_files
 
 
 def _base_totals(spark: SparkSession, path: str) -> dict:
-    """Read the base layout's global stats; reconstruct total_len for
-    pre-merge layouts that persisted only avgdl (exactness: total_len is
-    Σ length over doc_stats — zero-token docs hold no stats row and
-    contribute 0, matching the build's avgdl = Σ length / N)."""
+    """Read the base layout's global stats; reconstruct total_len and
+    max_doc_id for layouts that predate them with one doc_stats scan
+    (exactness: total_len is Σ length over doc_stats — zero-token docs
+    hold no stats row and contribute 0, matching the build's avgdl =
+    Σ length / N). ``n_terms`` (dictionary cardinality) is -1 when the
+    layout did not persist it."""
     gs = spark.read.parquet(f"{path}/global_stats")
     row = gs.collect()[0]
     cols = set(gs.columns)
@@ -86,6 +89,7 @@ def _base_totals(spark: SparkSession, path: str) -> dict:
         "avgdl": float(row["avgdl"]),
         "chunk_bits": int(row["chunk_bits"]) if "chunk_bits" in cols
         else DEFAULT_CHUNK_BITS,
+        "n_terms": int(row["n_terms"]) if "n_terms" in cols else -1,
     }
     if "total_len" in cols and "max_doc_id" in cols:
         out["total_len"] = int(row["total_len"])
@@ -115,7 +119,8 @@ def _base_totals(spark: SparkSession, path: str) -> dict:
 def serving_bound_scales(spark: SparkSession, path: str) -> tuple[float, float]:
     """(hi, lo) pruning-soundness scales for the index at ``path``: the
     most conservative correction across all segments' encode-time avgdl
-    (1.0, 1.0 for a single-segment index). Pass to wand_topk(bound_scales=)."""
+    (1.0, 1.0 for a single-segment index). Pass as ``bound_scales=`` to
+    wand_topk_single / wand_topk_local."""
     return _scales_from(_base_totals(spark, path))
 
 

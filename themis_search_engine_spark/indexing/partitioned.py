@@ -192,7 +192,8 @@ def load_partitioned_serving(
     tables (excluded partitions contribute zero I/O — this IS the filter);
     dictionary/avgdl are the global ones, so scores match the semi-join
     filtered plan exactly. bound_scales cover the selected parts' encode
-    avgdls per the merge-path soundness rule.
+    avgdls per the merge-path soundness rule, for callers that run a
+    pruning plan (queryeng.wand.wand_topk_single) over the subset.
     """
     with open(f"{path}/parts.json") as fh:
         manifest = json.load(fh)
@@ -232,7 +233,6 @@ def wand_topk_partitioned(
     values: list[str] | None = None,
     k: int = 10,
     *,
-    prune: bool = True,
     term_list: list[str] | None = None,
 ) -> DataFrame:
     """Filtered block-max WAND: top-k over only the docs whose attribute
@@ -244,6 +244,5 @@ def wand_topk_partitioned(
     ps = load_partitioned_serving(spark, path, values)
     return wand_topk(
         qterms, ps.compressed, ps.dictionary, ps.avgdl, k=k,
-        chunk_bits=ps.chunk_bits, prune=prune, term_list=term_list,
-        bound_scales=ps.bound_scales,
+        chunk_bits=ps.chunk_bits, term_list=term_list,
     )

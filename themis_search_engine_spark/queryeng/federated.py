@@ -93,6 +93,51 @@ def federated_scores(
     ]
 
 
+def _global_topk(legs: list[DataFrame], k: int, round_dp) -> DataFrame:
+    """(qid, doc_id, score, rank): global top-k over the union of per-leg
+    candidate frames at the (round(score, round_dp) desc, doc_id asc)
+    grain; ``round_dp=None`` ranks on raw scores."""
+    merged = reduce(DataFrame.unionByName, legs)
+    score_key = (
+        F.round("score", round_dp) if round_dp is not None else F.col("score")
+    )
+    w = Window.partitionBy("qid").orderBy(F.desc(score_key), F.asc("doc_id"))
+    out_score = (
+        F.round("score", round_dp).alias("score")
+        if round_dp is not None
+        else F.col("score")
+    )
+    return (
+        merged.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select("qid", "doc_id", out_score, "rank")
+    )
+
+
+def _batch_terms(qterms: DataFrame, term_list: list[str] | None) -> list:
+    """The batch's distinct terms: ``term_list`` if the caller knows it,
+    else ONE collect (not one per leg)."""
+    if term_list is not None:
+        return term_list
+    return [r["term"] for r in qterms.select("term").distinct().collect()]
+
+
+def _wand_leg(qterms, ix, gdict, avgdl, k, terms) -> DataFrame:
+    """(qid, doc_id, score) top-``k`` of one compressed leg under the
+    merged global stats, raw grain, with the leg's own scan-filter
+    decision (federated_wand_topk docstring)."""
+    from .planner import choose_scan_filter
+    from .wand import wand_topk
+
+    use_inlist = choose_scan_filter(
+        len(terms), getattr(ix, "n_terms", -1)
+    )["filter"] == "inlist"
+    return wand_topk(
+        qterms, ix.compressed, gdict, avgdl, k=k,
+        chunk_bits=ix.chunk_bits, term_list=terms, inlist=use_inlist,
+    ).select("qid", "doc_id", "score")
+
+
 def federated_topk(
     qterms: DataFrame,
     indexes,
@@ -137,17 +182,7 @@ def federated_topk(
         .drop("r")
         for leg in legs
     ]
-    merged = reduce(DataFrame.unionByName, pruned)
-    out_score = (
-        F.round("score", round_dp).alias("score")
-        if round_dp is not None
-        else F.col("score")
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("qid", "doc_id", out_score, "rank")
-    )
+    return _global_topk(pruned, k, round_dp)
 
 
 def federated_wand_topk(
@@ -156,26 +191,16 @@ def federated_wand_topk(
     k: int = 10,
     *,
     round_dp: int | None = None,
-    prune: bool = True,
     overfetch: int = 3,
     term_list: list[str] | None = None,
 ) -> DataFrame:
     """(qid, doc_id, score, rank): federated top-k over COMPRESSED
     serving indexes (indexing.build.ServingIndex / load_serving_index)
-    through the block-max WAND plans — the production path of the
-    federated story: per-crawl indexes stay in their own on-disk chunk
-    layouts, and only global stats are merged at query time.
-
-    Soundness under merged stats: WAND's chunk metadata (core_min/
-    core_max) is idf-FREE — query time multiplies it by whatever
-    dictionary is passed, so the merged idf needs no correction — but it
-    WAS encoded under each leg's own avgdl. Passing bound_scales
-    (max(1, g/enc), min(1, g/enc)) per leg keeps stale upper bounds
-    sound exactly as multi-segment delta merges do (indexing/merge.py
-    derives the monotonicity argument); exact scoring decodes lengths
-    and uses the merged avgdl, so scores are union-index-exact either
-    way. Legs that are themselves multi-segment should fold their own
-    serving_bound_scales into the encode avgdl span before calling.
+    through the one-pass chunk plan (wand.wand_topk) — the production
+    path of the federated story: per-crawl indexes stay in their own
+    on-disk chunk layouts, and only global stats are merged at query
+    time. Exact scoring decodes lengths and uses the merged avgdl and
+    idf, so scores are union-index-exact.
 
     Per-leg results over-fetch ``overfetch``·k at raw-score grain, then
     the global merge ranks at ``round_dp`` — the same wide-then-rounded
@@ -189,46 +214,13 @@ def federated_wand_topk(
     legs the batch vocabulary covers densely skip the 2× literal-
     predicate tax, sparse legs keep row-group pruning.
     """
-    from .planner import choose_scan_filter
-    from .wand import wand_topk
-
     gdict, _n, avgdl = merged_global_stats(indexes)
-    terms = (
-        term_list
-        if term_list is not None
-        else [r["term"] for r in qterms.select("term").distinct().collect()]
-    )
-    legs = []
-    for ix in indexes:
-        enc = float(ix.avgdl)
-        scales = (
-            max(1.0, avgdl / enc) if enc else 1.0,
-            min(1.0, avgdl / enc) if enc else 1.0,
-        )
-        use_inlist = choose_scan_filter(
-            len(terms), getattr(ix, "n_terms", -1)
-        )["filter"] == "inlist"
-        wide = wand_topk(
-            qterms, ix.compressed, gdict, avgdl, k=overfetch * k,
-            chunk_bits=ix.chunk_bits, prune=prune, bound_scales=scales,
-            term_list=terms, inlist=use_inlist,
-        )
-        legs.append(wide.select("qid", "doc_id", "score"))
-    merged = reduce(DataFrame.unionByName, legs)
-    score_key = (
-        F.round("score", round_dp) if round_dp is not None else F.col("score")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc(score_key), F.asc("doc_id"))
-    out_score = (
-        F.round("score", round_dp).alias("score")
-        if round_dp is not None
-        else F.col("score")
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("qid", "doc_id", out_score, "rank")
-    )
+    terms = _batch_terms(qterms, term_list)
+    legs = [
+        _wand_leg(qterms, ix, gdict, avgdl, overfetch * k, terms)
+        for ix in indexes
+    ]
+    return _global_topk(legs, k, round_dp)
 
 
 def selective_wand_topk(
@@ -238,72 +230,37 @@ def selective_wand_topk(
     m: int = 2,
     *,
     round_dp: int | None = None,
-    prune: bool = True,
     overfetch: int = 3,
     term_list: list[str] | None = None,
 ) -> DataFrame:
     """Selective search on the SERVING path: CORI-route each query to
-    its top-m compressed legs, then block-max WAND with merged global
-    stats and per-leg bound scales — :func:`selective_topk`'s routing
-    composed with :func:`federated_wand_topk`'s physical plan. Same
-    contracts: routing bounds recall, scores stay union-index-exact,
-    unselected legs run zero tasks. ``term_list`` as in
-    :func:`federated_wand_topk`; each selected leg takes its own
-    scan-filter decision (the leg's routed sub-batch vocabulary vs ITS
-    dictionary cardinality).
+    its top-m compressed legs, then the one-pass chunk plan with merged
+    global stats — :func:`selective_topk`'s routing composed with
+    :func:`federated_wand_topk`'s physical plan. Same contracts: routing
+    bounds recall, scores stay union-index-exact, unselected legs run
+    zero tasks. ``term_list`` as in :func:`federated_wand_topk`. Every
+    selected leg plants the FULL batch vocabulary into its scan (not
+    just its routed sub-batch's terms) and takes its scan-filter decision
+    from that vocabulary size vs ITS dictionary cardinality; the
+    broadcast qterms join drops the other terms either way.
     """
-    from .planner import choose_scan_filter
-    from .wand import wand_topk
-
-    sel = select_shards(qterms, indexes, m).collect()
-    by_shard: dict[int, list] = {}
-    for r in sel:
-        by_shard.setdefault(r["shard"], []).append(r["qid"])
+    by_shard = _route(qterms, indexes, m)
     gdict, _n, avgdl = merged_global_stats(indexes)
-    terms = (
-        term_list
-        if term_list is not None
-        else [r["term"] for r in qterms.select("term").distinct().collect()]
-    )
-    legs = []
-    for i, ix in enumerate(indexes):
-        qids = by_shard.get(i)
-        if not qids:
-            continue
-        enc = float(ix.avgdl)
-        scales = (
-            max(1.0, avgdl / enc) if enc else 1.0,
-            min(1.0, avgdl / enc) if enc else 1.0,
+    terms = _batch_terms(qterms, term_list)
+    legs = [
+        _wand_leg(
+            qterms.where(F.col("qid").isin(by_shard[i])), ix, gdict, avgdl,
+            overfetch * k, terms,
         )
-        use_inlist = choose_scan_filter(
-            len(terms), getattr(ix, "n_terms", -1)
-        )["filter"] == "inlist"
-        wide = wand_topk(
-            qterms.where(F.col("qid").isin(qids)), ix.compressed, gdict,
-            avgdl, k=overfetch * k, chunk_bits=ix.chunk_bits, prune=prune,
-            bound_scales=scales, term_list=terms, inlist=use_inlist,
-        )
-        legs.append(wide.select("qid", "doc_id", "score"))
+        for i, ix in enumerate(indexes)
+        if i in by_shard
+    ]
     if not legs:
         spark = qterms.sparkSession
         return spark.createDataFrame(
             [], "qid long, doc_id long, score double, rank long"
         )
-    merged = reduce(DataFrame.unionByName, legs)
-    score_key = (
-        F.round("score", round_dp) if round_dp is not None else F.col("score")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc(score_key), F.asc("doc_id"))
-    out_score = (
-        F.round("score", round_dp).alias("score")
-        if round_dp is not None
-        else F.col("score")
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("qid", "doc_id", out_score, "rank")
-    )
+    return _global_topk(legs, k, round_dp)
 
 
 # --- selective search: CORI shard selection ---------------------------------
@@ -392,6 +349,14 @@ def select_shards(
     )
 
 
+def _route(qterms: DataFrame, indexes, m: int) -> dict[int, list]:
+    """shard → the qids CORI selected it for (unselected shards absent)."""
+    by_shard: dict[int, list] = {}
+    for r in select_shards(qterms, indexes, m).collect():
+        by_shard.setdefault(r["shard"], []).append(r["qid"])
+    return by_shard
+
+
 def selective_topk(
     qterms: DataFrame,
     indexes,
@@ -412,10 +377,7 @@ def selective_topk(
     never scans a byte. That is the 10³-shard win: per-query fan-out is
     m, not |shards|.
     """
-    sel = select_shards(qterms, indexes, m).collect()
-    by_shard: dict[int, list] = {}
-    for r in sel:
-        by_shard.setdefault(r["shard"], []).append(r["qid"])
+    by_shard = _route(qterms, indexes, m)
     gdict, _n, avgdl = merged_global_stats(indexes)
     score_key = (
         F.round("score", round_dp) if round_dp is not None else F.col("score")
@@ -424,7 +386,6 @@ def selective_topk(
     w1 = Window.partitionBy("qid", "salt").orderBy(
         F.desc(score_key), F.asc("doc_id")
     )
-    w = Window.partitionBy("qid").orderBy(F.desc(score_key), F.asc("doc_id"))
     legs = []
     for i, ix in enumerate(indexes):
         qids = by_shard.get(i)
@@ -445,14 +406,4 @@ def selective_topk(
         return spark.createDataFrame(
             [], "qid long, doc_id long, score double, rank long"
         )
-    merged = reduce(DataFrame.unionByName, legs)
-    out_score = (
-        F.round("score", round_dp).alias("score")
-        if round_dp is not None
-        else F.col("score")
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("qid", "doc_id", out_score, "rank")
-    )
+    return _global_topk(legs, k, round_dp)

@@ -1,6 +1,6 @@
 """Physical plan selection for serving queries.
 
-The engine has FOUR rank-identical physical plans for BM25 top-k over a
+The engine has THREE rank-identical physical plans for BM25 top-k over a
 persisted compressed index (PLANS.md records each shape):
 
 * ``local``   — :func:`~themis_search_engine_spark.queryeng.wand.wand_topk_local`:
@@ -9,22 +9,23 @@ persisted compressed index (PLANS.md records each shape):
   ONE Spark job, a task per query running true early-exit WAND.
 * ``sharded`` — :func:`~themis_search_engine_spark.queryeng.sharded.wand_topk_sharded`:
   doc-range shards, decode-once-per-batch; the batch THROUGHPUT plan.
-* ``batch``   — :func:`~themis_search_engine_spark.queryeng.wand.wand_topk`
-  (prune=False): the portable distributed plan (works without a
-  persisted layout, e.g. straight off ``build_index`` output).
+
+Inputs with no persisted layout (``build_index`` output, federated and
+partitioned legs) call :func:`~themis_search_engine_spark.queryeng.wand.wand_topk`
+directly; it is not a serving plan.
 
 The reference has exactly one plan (Search.java's sequential loop); a
-user switching over shouldn't need to learn four. :func:`choose_query_plan`
+user switching over shouldn't need to learn three. :func:`choose_query_plan`
 is the dispatcher decision as a PURE function — the inputs are the only
 things the choice actually depends on (batch size, head-term pressure,
-latency-vs-throughput intent, whether a persisted layout exists), so
-tests pin the whole matrix — and :func:`search_serving` is the facade
-that loads a saved index, prices the query terms with one IN-filtered
-dictionary scan, picks the plan, and runs it.
+latency-vs-throughput intent), so tests pin the whole matrix — and
+:func:`search_serving` is the facade that loads a saved index, prices the
+query terms with one IN-filtered dictionary scan, picks the plan, and
+runs it.
 
 Head-term rule: the single-task plans (``local``, ``single``) serialize
 each query in one process/task, so a query containing a term whose df
-exceeds ``head_df_frac`` of the corpus would pull that term's full
+exceeds ``HEAD_DF_FRAC`` of the corpus would pull that term's full
 postings through one lane — exactly the documented bound in
 wand_topk_local's docstring. Such queries route to the shard-parallel
 plan regardless of batch size.
@@ -35,82 +36,56 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+PLANS = ("local", "single", "sharded")
+INTERACTIVE_MAX = 4   # largest interactive batch served in-process
+SINGLE_MAX = 16       # largest batch served one task per query
+HEAD_DF_FRAC = 0.05   # df fraction above which a term is a head term
+
 
 def choose_query_plan(
     n_queries: int,
     *,
     max_df_frac: float = 0.0,
     interactive: bool = False,
-    has_persisted: bool = True,
-    interactive_max: int = 4,
-    single_max: int = 16,
-    head_df_frac: float = 0.05,
 ) -> dict:
-    """{"plan": local|single|sharded|batch, "reasons": [...]} — pure
+    """{"plan": local|single|sharded, "reasons": [...]} — pure
     deterministic plan choice.
 
     ``max_df_frac``: highest document-frequency fraction among the
     batch's terms (0 when nothing matched the dictionary).
     ``interactive``: caller wants latency (a serving loop), not batch
-    throughput. ``has_persisted``: a saved chunk layout exists on
-    driver-shared storage (``local``/``sharded`` need it).
+    throughput.
     """
     reasons = []
-    head = max_df_frac > head_df_frac
+    head = max_df_frac > HEAD_DF_FRAC
     if head:
         reasons.append(
             f"head term: max df fraction {max_df_frac:.3f} > "
-            f"{head_df_frac} — single-lane plans would serialize its "
+            f"{HEAD_DF_FRAC} — single-lane plans would serialize its "
             "full postings"
         )
-    if interactive and n_queries <= interactive_max:
+    if interactive and n_queries <= INTERACTIVE_MAX:
         if head:
-            if has_persisted:
-                reasons.append(
-                    "interactive head-term query served shard-parallel"
-                )
-                return {"plan": "sharded", "reasons": reasons}
-            reasons.append("no persisted layout: distributed batch plan")
-            return {"plan": "batch", "reasons": reasons}
-        if has_persisted:
             reasons.append(
-                f"interactive batch of {n_queries} <= {interactive_max}: "
-                "in-process WAND, zero Spark jobs"
+                "interactive head-term query served shard-parallel"
             )
-            return {"plan": "local", "reasons": reasons}
+            return {"plan": "sharded", "reasons": reasons}
         reasons.append(
-            "no persisted layout: one-job sequential WAND"
+            f"interactive batch of {n_queries} <= {INTERACTIVE_MAX}: "
+            "in-process WAND, zero Spark jobs"
         )
-        return {"plan": "single", "reasons": reasons}
-    if n_queries <= single_max and not head:
+        return {"plan": "local", "reasons": reasons}
+    if n_queries <= SINGLE_MAX and not head:
         reasons.append(
-            f"small batch {n_queries} <= {single_max}, no head term: "
+            f"small batch {n_queries} <= {SINGLE_MAX}, no head term: "
             "one job, true early-exit WAND per query-task"
         )
         return {"plan": "single", "reasons": reasons}
-    if has_persisted:
-        reasons.append(
-            f"batch of {n_queries}: decode-once-per-batch doc-sharded "
-            "throughput plan"
-        )
-        return {"plan": "sharded", "reasons": reasons}
-    if not head:
-        # measured (BATCH_PLANS.json, 1.2M docs / 4000-query batch): the
-        # per-query greedy tasks prune with a running θ and emit ranked
-        # rows directly — 3.2x the one-pass chunk plan's throughput with
-        # zero extra barriers. The chunk plan only wins when a head term
-        # would serialize one query's postings through one task.
-        reasons.append(
-            f"batch of {n_queries} without persisted layout, no head "
-            "term: barrier-free greedy WAND per query-task (3.2x the "
-            "one-pass chunk plan, BATCH_PLANS.json)"
-        )
-        return {"plan": "single", "reasons": reasons}
     reasons.append(
-        f"head-term batch of {n_queries} without persisted layout: "
-        "distributed one-pass chunk plan"
+        f"batch of {n_queries}: decode-once-per-batch doc-sharded "
+        "throughput plan"
     )
-    return {"plan": "batch", "reasons": reasons}
+    return {"plan": "sharded", "reasons": reasons}
 
 
 def choose_scan_filter(
@@ -174,34 +149,26 @@ def search_serving(
 ) -> DataFrame:
     """(qid, doc_id, score, rank) — BM25 top-k over the saved serving
     index at ``path``, physical plan chosen automatically (override with
-    ``plan`` in {"local","single","sharded","batch"}). All four plans
-    are rank-identical (score desc, doc_id asc), so the choice is purely
-    physical. ``queries``: qid → normalized (and stemmed, if the index
-    is) term lists — queryeng.pipeline.query_term_map's shape.
+    ``plan`` in :data:`PLANS`; anything else raises ``ValueError``). All
+    three plans are rank-identical (score desc, doc_id asc), so the
+    choice is purely physical. ``queries``: qid → normalized (and
+    stemmed, if the index is) term lists — queryeng.pipeline.query_term_map's
+    shape.
 
-    Cost before the query itself: one global_stats read and ONE
+    Cost before the query itself: one global_stats read (plus one
+    doc_stats scan on layouts that predate persisted totals) and ONE
     IN-filtered dictionary scan bounded by the batch's vocabulary (the
     per-batch idf/df pricing). Long-lived serving loops should hoist
     both and call the plan functions directly (bench.py's hot form).
     """
-    from ..indexing.build import DEFAULT_CHUNK_BITS
-    from ..indexing.merge import serving_bound_scales
+    from ..indexing.merge import _base_totals, _scales_from
     from .sharded import wand_topk_sharded
-    from .wand import wand_topk, wand_topk_local, wand_topk_single
+    from .wand import wand_topk_local, wand_topk_single
 
-    g = spark.read.parquet(f"{path}/global_stats")
-    row = g.collect()[0]
-    n_docs = int(row["n_docs"])
-    avgdl = float(row["avgdl"])
-    n_terms_dict = (
-        int(row["n_terms"]) if "n_terms" in g.columns else -1
-    )
-    cb = (
-        int(row["chunk_bits"])
-        if "chunk_bits" in g.columns else DEFAULT_CHUNK_BITS
-    )
-    max_doc_id = int(row["max_doc_id"]) if "max_doc_id" in g.columns else 0
-    bs = serving_bound_scales(spark, path)
+    if plan is not None and plan not in PLANS:
+        raise ValueError(f"unknown plan {plan!r}; have {PLANS}")
+    g = _base_totals(spark, path)
+    n_docs, avgdl, cb = g["n_docs"], g["avgdl"], g["chunk_bits"]
 
     vocab = sorted({t for ts in queries.values() for t in ts})
     priced = (
@@ -216,17 +183,15 @@ def search_serving(
         max(int(r["df"]) for r in priced) / max(n_docs, 1) if priced else 0.0
     )
 
-    decision = (
-        {"plan": plan, "reasons": ["forced by caller"]}
-        if plan is not None
-        else choose_query_plan(
-            len(queries), max_df_frac=max_df_frac, interactive=interactive
+    chosen = plan or choose_query_plan(
+        len(queries), max_df_frac=max_df_frac, interactive=interactive
+    )["plan"]
+    if chosen == "sharded":
+        return wand_topk_sharded(
+            spark, f"{path}/postings_comp", queries, None, avgdl,
+            g["max_doc_id"], k, chunk_bits=cb, idf_map=idf_map,
         )
-    )
-    chosen = decision["plan"]
-    use_inlist = (
-        choose_scan_filter(len(vocab), n_terms_dict)["filter"] == "inlist"
-    )
+    bs = _scales_from(g)
     if chosen == "local":
         pdf = wand_topk_local(
             f"{path}/postings_comp", queries, idf_map, avgdl, k,
@@ -235,28 +200,12 @@ def search_serving(
         return spark.createDataFrame(
             pdf, "qid int, doc_id long, score double, rank int"
         )
-    if chosen == "single":
-        comp = spark.read.parquet(f"{path}/postings_comp")
-        return wand_topk_single(
-            queries, comp, None, avgdl, k,
-            chunk_bits=cb, idf_map=idf_map, bound_scales=bs,
-            inlist=use_inlist,
-        )
-    if chosen == "sharded":
-        return wand_topk_sharded(
-            spark, f"{path}/postings_comp", queries, None, avgdl,
-            max_doc_id, k, chunk_bits=cb, idf_map=idf_map,
-        )
-    if chosen == "batch":
-        comp = spark.read.parquet(f"{path}/postings_comp")
-        qt = spark.createDataFrame(
-            [(int(q), t) for q, ts in queries.items() for t in ts],
-            "qid long, term string",
-        )
-        dictionary = spark.read.parquet(f"{path}/dictionary")
-        return wand_topk(
-            qt, comp, dictionary, avgdl, k, prune=False,
-            chunk_bits=cb, term_list=vocab, bound_scales=bs,
-            inlist=use_inlist,
-        )
-    raise ValueError(f"unknown plan {chosen!r}")
+    comp = spark.read.parquet(f"{path}/postings_comp")
+    use_inlist = (
+        choose_scan_filter(len(vocab), g["n_terms"])["filter"] == "inlist"
+    )
+    return wand_topk_single(
+        queries, comp, None, avgdl, k,
+        chunk_bits=cb, idf_map=idf_map, bound_scales=bs,
+        inlist=use_inlist,
+    )

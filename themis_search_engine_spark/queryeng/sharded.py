@@ -3,7 +3,7 @@ CHUNKS of the persisted compressed index, posting bytes never crossing
 the JVM↔Python row bridge.
 
 Why this plan exists (measured, BASELINE.md): the applyInPandas batch plan
-(queryeng/wand.py, prune=False) ships every matched compressed chunk row
+(queryeng/wand.py wand_topk) ships every matched compressed chunk row
 through Spark's JVM→Python grouped-map bridge — ~120 MB/s aggregate on
 this box and barely scaling with cores — and, because the qterms join
 duplicates chunk rows per query, a head-term chunk row is re-shipped and
@@ -149,6 +149,16 @@ def _score_shard(
     chunk_col = tbl["chunk"].to_numpy(zero_copy_only=False)
     term_col = tbl["term"].to_pylist()
     df_col = tbl["df_chunk"].to_numpy(zero_copy_only=False).astype(np.int64)
+    if (df_col < 1).any():
+        # the segmented cumsum below indexes cs[r_ends[:-1] - 1]: a
+        # df_chunk = 0 row would wrap to cs[-1] and shift every later
+        # row's doc ids without an error
+        bad = int(np.argmax(df_col < 1))
+        raise ValueError(
+            f"corrupt postings_comp at {comp_path}: df_chunk="
+            f"{int(df_col[bad])} < 1 for term {term_col[bad]!r} chunk "
+            f"{int(chunk_col[bad])}"
+        )
 
     # whole-shard batched decode in ~1 MiB slabs: amortizes vb_decode's
     # numpy fixed cost without letting its intermediates (7-8 full-size

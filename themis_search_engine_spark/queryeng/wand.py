@@ -2,42 +2,39 @@
 
 The reference scores every candidate then fully sorts (OkapiBM25.java:
 291-308). The north rule asks for a block-max WAND *physical* design with
-identical semantics ("score everything, sort, take k"). Sequential WAND
-doesn't map onto a cluster, so this is the distributed adaptation:
+identical semantics ("score everything, sort, take k"). Three plans here
+share one exact chunk scorer (:func:`_score_chunk_rows`):
 
- phase 0  chunk upper bounds from chunk METADATA only (no posting bytes
-          touched). Per term, bound_t = max(idf·core_max, idf·core_min)
-          (the min is the tight one for negative idf). Per chunk the doc
-          bound must respect OR semantics — a doc matches any SUBSET of
-          the query terms, so ub = Σ_t max(bound_t, 0) when any bound is
-          positive, else max_t bound_t (with all-negative bounds, matching
-          MORE terms only lowers the score, so the best single term bounds
-          every candidate; a plain Σ_t bound_t would UNDER-estimate and
-          skip the true top-k).
- phase 1  score the top-P chunks per qid by ub exactly → threshold θ =
-          k-th best score found (lower bound of the final k-th score).
- phase 2  score only chunks with ub ≥ θ (the WAND skip: chunks whose best
-          possible doc can't reach the current top-k are never decoded) →
-          union with phase 1, global top-k.
+* :func:`wand_topk` — the DataFrame-input plan, for inputs with no
+  persisted layout (``build_index`` output, registry queries, federated
+  and partitioned legs): one scoring pass over every matched chunk, no
+  barriers, no pruning. Exact chunk scoring is applyInPandas per
+  (qid, chunk): varbyte-decode each term's slice, accumulate into a dense
+  per-offset float64 array (chunks are doc-range aligned across terms, so
+  accumulation is O(postings) numpy scatter-add), emit the chunk-local
+  top-k — a doc outside its chunk's top-k can't be in the global top-k.
+* :func:`wand_topk_single` — sequential block-max WAND, one task per
+  query: walk chunks in descending upper-bound order with a running
+  threshold θ and stop at the first chunk whose bound is below θ.
+* :func:`wand_topk_local` — the same sequential kernel in-process over
+  the persisted layout, zero Spark jobs.
 
-Planner note (measured; BENCH_SCALING.json + BATCH_PLANS.json): the
-PHASED pruned path here is the distributed-latency plan — a single query
-over a big corpus decodes only the chunks that can reach the top-k, but
-the probe→θ→rest chain costs three synchronization barriers per job, so
-for batches it loses to ``prune=False`` (r3 finding). Round 4 closed the
-loop: pruning pays for batches when it's BARRIER-FREE —
-:func:`wand_topk_single`'s per-query greedy tasks (running θ inside the
-task, ranked rows emitted directly, no global window) measure 3.2x this
-module's prune=False plan at the 4000-query/1.2M-doc batch, rank-
-identical. Plan ranking for big batches: sharded > single(greedy) >
-batch(prune=False) > phased; the planner routes accordingly, keeping
-prune=False only for head-term batches without a persisted layout.
+Chunk upper bounds come from chunk METADATA only (no posting bytes
+touched). Per term, bound_t = max(idf·core_max, idf·core_min) (the min is
+the tight one for negative idf). Per chunk the doc bound must respect OR
+semantics — a doc matches any SUBSET of the query terms, so
+ub = Σ_t max(bound_t, 0) when any bound is positive, else max_t bound_t
+(with all-negative bounds, matching MORE terms only lowers the score, so
+the best single term bounds every candidate; a plain Σ_t bound_t would
+UNDER-estimate and skip the true top-k).
 
-Exact chunk scoring is applyInPandas per (qid, chunk): varbyte-decode each
-term's slice, accumulate into a dense per-offset float64 array (chunks are
-doc-range aligned across terms, so accumulation is O(postings) numpy
-scatter-add), emit the chunk-local top-k — a doc outside its chunk's top-k
-can't be in the global top-k.
+Plan note (measured; BATCH_PLANS.json, 1.2M docs / 4000 queries / 32
+cores): sharded 460.9 q/s, greedy ``wand_topk_single`` 256.4, a phased
+probe→θ→rest variant of :func:`wand_topk` 118.2, the one-pass plan 112.8.
+The phased variant paid three synchronization barriers per job and no
+dispatcher ever chose it, so it was removed; pruning lives in the
+barrier-free per-query plans. :mod:`.planner` picks among ``local``,
+``single`` and ``sharded`` for persisted layouts.
 
 Rank/score identity with the naive DataFrame path is asserted in tests
 (modulo float-sum order at ~1e-15, with deterministic doc_id tie-breaks).
@@ -131,25 +128,21 @@ def wand_topk(
     k: int = 10,
     *,
     chunk_bits: int = DEFAULT_CHUNK_BITS,
-    probe_chunks: int = 2,
-    prune: bool = True,
     term_list: list[str] | None = None,
-    bound_scales: tuple[float, float] = (1.0, 1.0),
     inlist: bool = True,
 ) -> DataFrame:
-    """(qid, doc_id, score, rank) — top-k per query over compressed chunks.
+    """(qid, doc_id, score, rank) — top-k per query over compressed chunks
+    in one scoring pass (module docstring).
 
     ``term_list``: the batch's distinct (already-stemmed) terms, if the
     caller knows them driver-side (qterms_df callers always do) — saves the
     collect job that would otherwise derive them.
 
-    ``bound_scales`` = (hi, lo) with hi >= 1 >= lo: pruning-soundness
-    factors for multi-segment indexes whose chunks were encoded under an
-    older avgdl (indexing/merge.py module docstring derives them from the
-    BM25 core's monotonicity in avgdl). They scale only the core_min/
-    core_max pruning METADATA — exact scoring always decodes dl_bytes and
-    uses the current ``avgdl``, so scores are unaffected; hi/lo merely
-    keep stale upper bounds sound (at the cost of slightly looser skips).
+    Scoring decodes dl_bytes and uses the current ``avgdl``, and no chunk
+    is skipped, so multi-segment indexes whose chunk metadata was encoded
+    under an older avgdl need no bound correction here (the pruning plans
+    :func:`wand_topk_single` / :func:`wand_topk_local` take
+    ``bound_scales`` for that).
     """
     from .bm25 import MAX_PRUNE_LITERALS
 
@@ -165,80 +158,11 @@ def wand_topk(
     q = F.broadcast(qterms.select("qid", "term").join(
         dictionary.select("term", "idf"), "term"
     ))
-    joined = compressed.join(q, "term")
-
-    scorer = _chunk_scorer(k, avgdl, chunk_bits)
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-
-    if not prune:
-        # batch plan: one scoring pass over all matched chunks, no barriers
-        ranked = (
-            joined.groupBy("qid", "chunk")
-            .applyInPandas(scorer, _SCORED_SCHEMA)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-        )
-        return ranked
-
-    joined = joined.localCheckpoint(eager=False)  # reused by both phases
-
-    # phase 0: chunk upper bounds from metadata only (see module docstring
-    # for the subset-of-terms bound; Σ of raw bounds is unsound under
-    # negative idf). For idf > 0 the binding term is core_max·hi; for
-    # idf < 0 it is core_min·lo — greatest() picks the right one in both
-    # sign cases because hi >= lo.
-    hi, lo = bound_scales
-    bound_t = F.greatest(
-        F.col("idf") * (F.col("core_max") * F.lit(float(hi))),
-        F.col("idf") * (F.col("core_min") * F.lit(float(lo))),
-    )
-    ub = (
-        joined.groupBy("qid", "chunk")
-        .agg(
-            F.sum(F.greatest(bound_t, F.lit(0.0))).alias("pos_sum"),
-            F.max(bound_t).alias("best_single"),
-        )
-        .select(
-            "qid", "chunk",
-            F.when(F.col("pos_sum") > 0, F.col("pos_sum"))
-            .otherwise(F.col("best_single")).alias("ub"),
-        )
-    )
-    wub = Window.partitionBy("qid").orderBy(F.desc("ub"), F.asc("chunk"))
-    ub_ranked = ub.withColumn("ubrank", F.row_number().over(wub))
-    ub_ranked = ub_ranked.localCheckpoint(eager=False)
-
-    # phase 1: exact-score the probe chunks → per-qid threshold θ (k-th best)
-    probe_keys = ub_ranked.where(F.col("ubrank") <= probe_chunks).select(
-        "qid", "chunk"
-    )
-    probe_scored = (
-        joined.join(probe_keys, ["qid", "chunk"])
-        .groupBy("qid", "chunk")
-        .applyInPandas(scorer, _SCORED_SCHEMA)
-    )
-    probe_scored = probe_scored.localCheckpoint(eager=False)
-    theta = (
-        probe_scored.withColumn("r", F.row_number().over(w))
-        .where(F.col("r") == k)
-        .select("qid", F.col("score").alias("theta"))
-    )
-
-    # phase 2: remaining chunks that could still beat θ
-    rest_keys = (
-        ub_ranked.where(F.col("ubrank") > probe_chunks)
-        .join(theta, "qid", "left")
-        .where(F.col("theta").isNull() | (F.col("ub") >= F.col("theta")))
-        .select("qid", "chunk")
-    )
-    rest_scored = (
-        joined.join(rest_keys, ["qid", "chunk"])
-        .groupBy("qid", "chunk")
-        .applyInPandas(scorer, _SCORED_SCHEMA)
-    )
-
     return (
-        probe_scored.unionByName(rest_scored)
+        compressed.join(q, "term")
+        .groupBy("qid", "chunk")
+        .applyInPandas(_chunk_scorer(k, avgdl, chunk_bits), _SCORED_SCHEMA)
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
@@ -266,7 +190,8 @@ def _query_wand_runner(
         idf = pdf["idf"].to_numpy(dtype=np.float64)
         # per-term bound, then the OR-semantics chunk bound (module
         # docstring): Σ max(bound, 0) if any positive, else best single.
-        # hi/lo keep stale multi-segment metadata sound (wand_topk doc).
+        # hi/lo keep stale multi-segment metadata sound
+        # (wand_topk_single doc).
         contrib = np.maximum(
             idf * (pdf["core_max"].to_numpy(dtype=np.float64) * hi),
             idf * (pdf["core_min"].to_numpy(dtype=np.float64) * lo),
@@ -326,11 +251,20 @@ def wand_topk_single(
     Each query's matched chunk rows gather in one task; the task walks
     chunks in descending upper-bound order, keeps a running top-k and
     threshold θ, and STOPS at the first chunk whose ub < θ — exactly the
-    classic WAND loop, impossible in the phased distributed plan without
-    paying 3 driver barriers per batch (wand_topk prune=True). Use for
+    classic WAND loop, with no driver barrier between chunks. Use for
     interactive/small batches; parallelism is ACROSS queries, so a single
     head-term query over a 10^12-doc corpus serializes in one task — at
-    that scale use wand_topk (pruned for latency, prune=False for batch).
+    that scale use queryeng.sharded.wand_topk_sharded (or wand_topk when
+    no persisted layout exists).
+
+    ``bound_scales`` = (hi, lo) with hi >= 1 >= lo: pruning-soundness
+    factors for multi-segment indexes whose chunks were encoded under an
+    older avgdl (indexing/merge.py module docstring derives them from the
+    BM25 core's monotonicity in avgdl; merge.serving_bound_scales reads
+    them for a saved index). They scale only the core_min/core_max
+    pruning METADATA — exact scoring always decodes dl_bytes and uses the
+    current ``avgdl``, so scores are unaffected; hi/lo merely keep stale
+    upper bounds sound (at the cost of slightly looser skips).
 
     HOT-SERVING form: pass ``qterms`` as a driver-side ``{qid: [terms]}``
     map plus ``idf_map`` (queryeng.sharded.collect_idf_map — the

@@ -22,7 +22,7 @@ from .queryeng import bm25_topk, qterms_df
 from .queryeng.bm25 import bm25_score_all, topk
 from .queryeng.existential import existential
 from .queryeng.vsm import vsm_score_all
-from .session import _ship_package
+from .session import _ship_package, scratch_dir
 
 _CACHE: dict[tuple, InvertedIndex] = {}
 
@@ -197,8 +197,8 @@ def q_bm25_topk_wand(spark, sf_dir):
 
 
 def q_bm25_topk_wand_batch(spark, sf_dir):
-    """WAND batch plan (prune=False: one chunk-scoring pass, no probe/θ
-    barriers) over chunks from the streaming sorted-partition compressor
+    """WAND batch plan (one chunk-scoring pass) over chunks from the
+    streaming sorted-partition compressor
     (compress.build_postings_compressed_sorted) — the serving-path physical
     plan of scripts/scaling_workload.py, against the same naive SQL oracle."""
     from .indexing.compress import build_postings_compressed_sorted
@@ -207,8 +207,7 @@ def q_bm25_topk_wand_batch(spark, sf_dir):
     idx = get_index(spark, sf_dir)
     comp = build_postings_compressed_sorted(idx.counts, idx.doc_stats, idx.avgdl)
     wide = wand_topk(
-        _qt(spark, stem=False), comp, idx.dictionary, idx.avgdl, k=30,
-        prune=False,
+        _qt(spark, stem=False), comp, idx.dictionary, idx.avgdl, k=30
     )
     return _rounded_rank_topk(wide.select("qid", "doc_id", "score"), 10)
 
@@ -233,14 +232,12 @@ def _delta_merged_bundle(spark, sf_dir):
     """Even-half build + odd-half delta merge, built once per sf_dir —
     shared by the delta-merge and compaction queries (compaction copies
     the directory before rewriting, so this bundle stays valid)."""
-    import tempfile
-
     from .indexing.build import build_and_save_serving
     from .indexing.merge import merge_serving_delta, serving_bound_scales
 
     if sf_dir not in _MCACHE:
         docs = load_documents(spark, sf_dir).select("doc_id", "text")
-        p = tempfile.mkdtemp(prefix="themis_delta_merge_") + "/idx"
+        p = scratch_dir("themis_delta_merge_") + "/idx"
         # chunk_bits=8 so the interleaved halves land in the SAME chunks →
         # every consulted (term, chunk) group really is fragmented
         build_and_save_serving(
@@ -259,11 +256,12 @@ def q_delta_merge_topk(spark, sf_dir):
     index built over the even-doc_id half, delta-merged with the odd half,
     must produce BM25 top-k rank-identical to the full-corpus oracle (same
     naive SQL twin as bm25_topk_wand). Exercises fragment accumulation in
-    the WAND scorer and the stale-bound scales of multi-segment pruning."""
-    from .queryeng.wand import wand_topk
+    the WAND scorer and the stale-bound scales of multi-segment pruning
+    (the early-exit plan, wand_topk_single)."""
+    from .queryeng.wand import wand_topk_single
 
     idx, scales, _ = _delta_merged_bundle(spark, sf_dir)
-    wide = wand_topk(
+    wide = wand_topk_single(
         _qt(spark, stem=False), idx.compressed, idx.dictionary, idx.avgdl,
         k=30, chunk_bits=idx.chunk_bits, bound_scales=scales,
     )
@@ -281,14 +279,13 @@ def q_compacted_topk(spark, sf_dir):
     (1.0, 1.0). Reuses the delta-merged bundle (copied first — compaction
     rewrites segments in place and must not invalidate the shared one)."""
     import shutil
-    import tempfile
 
     from .indexing.merge import compact_serving_index, serving_bound_scales
     from .queryeng.wand import wand_topk
 
     if sf_dir not in _COMPACT_CACHE:
         _, _, src = _delta_merged_bundle(spark, sf_dir)
-        p = tempfile.mkdtemp(prefix="themis_compact_") + "/idx"
+        p = scratch_dir("themis_compact_") + "/idx"
         shutil.copytree(src, p)
         idx = compact_serving_index(spark, p, partitions=16)
         assert serving_bound_scales(spark, p) == (1.0, 1.0)
@@ -309,14 +306,13 @@ def _tombstoned_bundle(spark, sf_dir):
     doc tombstoned via indexing.merge.delete_serving_docs (NOT compacted)
     — the live-index delete state both delete queries start from."""
     import shutil
-    import tempfile
 
     from .indexing.build import load_serving_index
     from .indexing.merge import delete_serving_docs, load_tombstones
 
     if sf_dir not in _TOMBSTONE_CACHE:
         _, _, src = _delta_merged_bundle(spark, sf_dir)
-        p = tempfile.mkdtemp(prefix="themis_tombstone_") + "/idx"
+        p = scratch_dir("themis_tombstone_") + "/idx"
         shutil.copytree(src, p)
         ids = load_documents(spark, sf_dir).select("doc_id").where(
             "doc_id % 7 = 0"
@@ -359,14 +355,13 @@ def q_compacted_deletes_topk(spark, sf_dir):
     first — compaction rewrites in place."""
     import os
     import shutil
-    import tempfile
 
     from .indexing.merge import compact_serving_index, serving_bound_scales
     from .queryeng.wand import wand_topk
 
     if sf_dir not in _DELCOMPACT_CACHE:
         _, _, src = _tombstoned_bundle(spark, sf_dir)
-        p = tempfile.mkdtemp(prefix="themis_delcompact_") + "/idx"
+        p = scratch_dir("themis_delcompact_") + "/idx"
         shutil.copytree(src, p)
         idx = compact_serving_index(spark, p, partitions=16)
         assert not os.path.exists(f"{p}/tombstones")  # deletes are spent
@@ -392,8 +387,6 @@ def _recrawl_bundle(spark, sf_dir):
     superseded prevs tombstoned, 'unchanged' pages never re-tokenized
     (the O(|changed|)-not-O(crawl) property that makes recrawl ingestion
     viable at 10^12 pages)."""
-    import tempfile
-
     from .indexing.build import build_and_save_serving, load_serving_index
     from .indexing.merge import load_tombstones, update_serving_docs
     from .pipeline_ops.websnap import snapshot_diff, snapshot_view
@@ -412,7 +405,7 @@ def _recrawl_bundle(spark, sf_dir):
         dead_ids = diff.where("status = 'changed'").select(
             F.col("prev_doc_id").alias("doc_id")
         )
-        p = tempfile.mkdtemp(prefix="themis_recrawl_") + "/idx"
+        p = scratch_dir("themis_recrawl_") + "/idx"
         build_and_save_serving(
             docs.join(base_ids, "doc_id", "semi").select("doc_id", "text"),
             p, stem=False, chunk_bits=8, partitions=16,
@@ -458,14 +451,13 @@ def q_recrawl_compacted_topk(spark, sf_dir):
     it, the old one where it didn't). Copies the recrawl bundle first —
     compaction rewrites in place."""
     import shutil
-    import tempfile
 
     from .indexing.merge import compact_serving_index, load_tombstones
     from .queryeng.wand import wand_topk
 
     if sf_dir not in _RECRAWL_COMPACT_CACHE:
         _, _, src = _recrawl_bundle(spark, sf_dir)
-        p = tempfile.mkdtemp(prefix="themis_recrawl_compact_") + "/idx"
+        p = scratch_dir("themis_recrawl_compact_") + "/idx"
         shutil.copytree(src, p)
         idx = compact_serving_index(spark, p, partitions=16)
         assert load_tombstones(spark, p) is None  # deletes are spent
@@ -484,13 +476,11 @@ _SCACHE: dict[str, tuple] = {}
 def _serving_bundle(spark, sf_dir):
     """Persisted full-corpus serving index, built once per sf_dir —
     shared by the sharded and in-process serving queries."""
-    import tempfile
-
     from .indexing.build import build_and_save_serving
 
     if sf_dir not in _SCACHE:
         docs = load_documents(spark, sf_dir).select("doc_id", "text")
-        p = tempfile.mkdtemp(prefix="themis_sharded_") + "/idx"
+        p = scratch_dir("themis_sharded_") + "/idx"
         idx = build_and_save_serving(
             docs, p, stem=False, chunk_bits=8, partitions=16
         )
@@ -1275,15 +1265,13 @@ def q_bm25_topk_wand_filtered(spark, sf_dir):
     pruning, no filter join) — score-identical to the semi-join plan, so
     it shares sql_bm25_topk_filtered's oracle
     (indexing/partitioned.py)."""
-    import tempfile
-
     from .indexing.partitioned import (
         build_partitioned_serving,
         wand_topk_partitioned,
     )
 
     if sf_dir not in _PCACHE:
-        p = tempfile.mkdtemp(prefix="themis_parts_") + "/pidx"
+        p = scratch_dir("themis_parts_") + "/pidx"
         build_partitioned_serving(
             load_documents(spark, sf_dir).select("doc_id", "text", "lang"),
             p, "lang", stem=False, chunk_bits=8, partitions=8,
@@ -1489,14 +1477,12 @@ def _gram_artifact_dir(spark, sf_dir):
     form: gram-sorted parquet, queried via load_* + gram IN-list
     row-group pruning) so the infix/regex/grep queries exercise the
     PERSISTED path, not the derive-per-query fallback."""
-    import tempfile
-
     from .queryeng.grepdocs import save_doc_trigrams
     from .queryeng.trigram import save_trigram_terms
 
     if sf_dir not in _GRAM_CACHE:
         idx = get_index(spark, sf_dir)
-        base = tempfile.mkdtemp(prefix="themis_grams_")
+        base = scratch_dir("themis_grams_")
         save_trigram_terms(idx.dictionary, f"{base}/trigram_terms")
         save_doc_trigrams(
             load_documents(spark, sf_dir), f"{base}/doc_trigrams"
@@ -2069,8 +2055,8 @@ def q_routed_topk(spark, sf_dir):
     """QPP-driven plan routing (queryeng/qpp.route_by_difficulty): the
     batch splits at the midpoint max_idf — queries with a rare anchor term
     take the naive IN-pushed plan (candidate set already small), head-
-    term-only queries take the block-max WAND pruned plan. Routing picks
-    the PHYSICAL plan only; both legs are rank-identical to the same
+    term-only queries take the compressed-chunk plan (wand_topk).
+    Routing picks the PHYSICAL plan only; both legs are rank-identical to the same
     naive SQL oracle, so the union must hash-match sql_bm25_topk
     unchanged — the correctness claim of plan routing is precisely that
     it is invisible in results."""
@@ -2182,8 +2168,6 @@ def q_federated_wand_topk(spark, sf_dir):
     encode-time avgdl) queried through block-max WAND with merged global
     stats and per-leg bound scales — must hash-match the UNCHANGED
     single-index naive oracle, like every WAND plan."""
-    import tempfile
-
     from .indexing.build import build_and_save_serving, load_serving_index
     from .queryeng.federated import federated_wand_topk
 
@@ -2191,7 +2175,7 @@ def q_federated_wand_topk(spark, sf_dir):
         docs = load_documents(spark, sf_dir).select("doc_id", "text")
         legs = []
         for i in (0, 1):
-            p = tempfile.mkdtemp(prefix="themis_fedw_") + "/idx"
+            p = scratch_dir("themis_fedw_") + "/idx"
             build_and_save_serving(
                 docs.where(F.pmod("doc_id", F.lit(2)) == i), p,
                 stem=False, partitions=16,
@@ -2213,8 +2197,6 @@ def q_selective_wand_topk(spark, sf_dir):
     legs, then WAND with merged stats — must hash-match the SAME
     selection oracle as the logical-table selective_topk (routing and
     scores are plan-independent; only the physical path differs)."""
-    import tempfile
-
     from .indexing.build import build_and_save_serving, load_serving_index
     from .queryeng.federated import selective_wand_topk
 
@@ -2223,7 +2205,7 @@ def q_selective_wand_topk(spark, sf_dir):
         docs = load_documents(spark, sf_dir).select("doc_id", "text")
         legs = []
         for i in range(4):
-            p = tempfile.mkdtemp(prefix="themis_selw_") + "/idx"
+            p = scratch_dir("themis_selw_") + "/idx"
             build_and_save_serving(
                 docs.where(F.pmod("doc_id", F.lit(4)) == i), p,
                 stem=False, partitions=8,
@@ -2248,16 +2230,15 @@ def q_snapshot_pinned_topk(spark, sf_dir):
     generation), then a SECOND delta of %4==3 lands AFTER the pin — the
     pinned reader must rank exactly as a fresh build over the corpus
     WITHOUT the later delta (oracle: corpus_where doc_id%4<>3). Proves
-    the reader is immune to commits that land after its pin."""
-    import tempfile
-
+    the reader is immune to commits that land after its pin. Scored by
+    the early-exit plan with the pin's bound scales."""
     from .indexing.build import build_and_save_serving
     from .indexing.merge import merge_serving_delta, pin_serving_snapshot
-    from .queryeng.wand import wand_topk
+    from .queryeng.wand import wand_topk_single
 
     if sf_dir not in _PIN_CACHE:
         docs = load_documents(spark, sf_dir).select("doc_id", "text")
-        p = tempfile.mkdtemp(prefix="themis_pin_") + "/idx"
+        p = scratch_dir("themis_pin_") + "/idx"
         build_and_save_serving(
             docs.where("doc_id % 4 in (0, 2)"), p, stem=False, partitions=8
         )
@@ -2270,7 +2251,7 @@ def q_snapshot_pinned_topk(spark, sf_dir):
         )
         _PIN_CACHE[sf_dir] = (snap,)
     (snap,) = _PIN_CACHE[sf_dir]
-    wide = wand_topk(
+    wide = wand_topk_single(
         _qt(spark, stem=False), snap.compressed, snap.dictionary,
         snap.avgdl, k=30, chunk_bits=snap.chunk_bits,
         bound_scales=snap.bound_scales,

@@ -33,7 +33,7 @@ from .pipeline_ops import (
     token_stats,
 )
 from .pipeline_ops.multimodal import media_meta_pipeline
-from .session import _ship_package
+from .session import _ship_package, scratch_dir
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -318,8 +318,6 @@ def q_ann_ivf_topk_delta(spark, sf_dir):
     delta-appended into the cell directories — queries over the merged
     layout must be identical to a full build, so it shares the IVF
     oracle."""
-    import tempfile
-
     from .pipeline_ops.simsearch import (
         build_ivf_index,
         ivf_add_delta,
@@ -328,7 +326,7 @@ def q_ann_ivf_topk_delta(spark, sf_dir):
 
     embs = _embs(spark, sf_dir)
     if sf_dir not in _IVFD_CACHE:
-        p = tempfile.mkdtemp(prefix="themis_ivf_delta_") + "/ivf"
+        p = scratch_dir("themis_ivf_delta_") + "/ivf"
         build_ivf_index(
             embs.where("vec_id % 2 = 0 OR vec_id % 25 = 0"), p, every_m=25
         )
@@ -455,13 +453,11 @@ def q_ann_ivf_topk_persisted(spark, sf_dir):
     """IVF over the PERSISTED partitionBy(cell) layout: probed cells are
     directory-level partition pruning (simsearch.ivf_topk_persisted) —
     result-identical to the in-memory ivf_topk, so it shares its oracle."""
-    import tempfile
-
     from .pipeline_ops.simsearch import build_ivf_index, ivf_topk_persisted
 
     embs = _embs(spark, sf_dir)
     if sf_dir not in _IVF_CACHE:
-        p = tempfile.mkdtemp(prefix="themis_ivf_") + "/ivf"
+        p = scratch_dir("themis_ivf_") + "/ivf"
         build_ivf_index(embs, p, every_m=25)
         _IVF_CACHE[sf_dir] = p
     out = ivf_topk_persisted(

@@ -49,6 +49,21 @@ def get_spark(
     return spark
 
 
+def scratch_dir(prefix: str) -> str:
+    """A fresh temporary directory removed when the interpreter exits.
+
+    For process-lifetime caches (the registry's per-corpus serving
+    indexes and artifacts): they must outlive any one call but not the
+    process, or long soak runs fill the temp filesystem."""
+    import atexit
+    import shutil
+    import tempfile
+
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executors (the --py-files mechanism).
 

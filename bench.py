@@ -152,8 +152,8 @@ def main() -> None:
     hot_idf = collect_idf_map(idx.dictionary)  # one-time serving state
 
     # --- batch query: greedy single-lane plan (one task per query) ----------
-    # the plan the planner actually routes non-head batches to
-    # (planner.choose_query_plan "single"); same workload as the naive /
+    # the greedy early-exit plan (wand_topk_single, called directly: it
+    # is not one of search_serving's plans); same workload as the naive /
     # bridge / sharded stages so all four measured plans stay comparable.
     qmap_all = query_term_map(queries, stem=True)
     stages["wand_greedy"], rows_g = min_of_2(

@@ -169,6 +169,50 @@ def test_compact_restores_single_segment(spark, docs, full_idx, tmp_path):
     assert log[-1]["postings"] > 0 and log[-1]["chunk_rows"] > 0
 
 
+def test_fresh_build_totals_need_no_doc_stats(spark, docs, full_idx,
+                                              tmp_path):
+    """The build persists every global_stats column, so _base_totals on a
+    fresh index never reads doc_stats: with doc_stats/ deleted it still
+    returns the totals a doc_stats aggregate gives."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from themis_search_engine_spark.indexing.build import GLOBAL_STATS_SCHEMA
+    from themis_search_engine_spark.indexing.merge import _base_totals
+
+    p = str(tmp_path / "idx")
+    idx = build_and_save_serving(docs, p, stem=False, chunk_bits=CB,
+                                 partitions=8)
+    want = idx.doc_stats.agg(F.sum("length").alias("t"),
+                             F.max("doc_id").alias("m")).collect()[0]
+    cols = [c.split()[0] for c in GLOBAL_STATS_SCHEMA.split(", ")]
+    assert spark.read.parquet(f"{p}/global_stats").columns == cols
+    shutil.rmtree(f"{p}/doc_stats")
+    g = _base_totals(spark, p)
+    assert g["total_len"] == int(want["t"])
+    assert g["max_doc_id"] == int(want["m"])
+    assert g["n_docs"] == full_idx.n_docs and g["avgdl"] == idx.avgdl
+    assert g["chunk_bits"] == CB
+    assert g["n_terms"] == idx.dictionary.count()
+    assert (g["min_enc_avgdl"], g["max_enc_avgdl"]) == (idx.avgdl,) * 2
+
+
+def test_n_terms_survives_merge_and_compact(spark, docs, tmp_path):
+    """Merge and compaction rewrite global_stats through the build's
+    writer, so the dictionary cardinality stays current instead of
+    dropping to unknown (-1)."""
+    p = str(tmp_path / "idx")
+    first = build_and_save_serving(docs.where("doc_id < 200"), p,
+                                   stem=False, chunk_bits=CB, partitions=8)
+    merged = merge_serving_delta(spark, p, docs.where("doc_id >= 200"),
+                                 stem=False, partitions=8)
+    assert merged.n_terms == merged.dictionary.count() >= first.n_terms > 0
+    compacted = compact_serving_index(spark, p, partitions=8)
+    assert compacted.n_terms == compacted.dictionary.count()
+    assert compacted.n_terms == merged.n_terms
+
+
 def test_describe_index_tracks_lifecycle(spark, docs, tmp_path):
     """describe_index reports fragmentation and envelope looseness rising
     through merges and collapsing after compaction."""

@@ -229,3 +229,34 @@ def test_stale_doc_trigrams_fails_loudly_then_delta_merge_heals(
     assert sorted(map(tuple, via_art_d.collect())) == sorted(
         map(tuple, via_live_d.collect())
     )
+
+
+def test_registry_grams_follow_serving_rebuild(spark):
+    """The registry's persisted trigram artifacts are keyed by the
+    serving index they are stamped against: a rebuild at the same sf_dir
+    in one process gets fresh grams, and a merge past the stamp fails
+    loudly at load instead of serving stale grams."""
+    from themis_search_engine_spark import registry
+
+    sf = "/root/testdata/sf0.001"
+    try:
+        assert registry._load_grams(spark, sf, "trigram_terms").count() > 0
+        first = dict(registry._GRAM_CACHE)
+        registry._SCACHE.pop(sf)  # rebuild the serving index in-process
+        assert registry._load_grams(spark, sf, "doc_trigrams").count() > 0
+        sp2 = registry._serving_bundle(spark, sf)[1]
+        new = {k: v for k, v in registry._GRAM_CACHE.items()
+               if k not in first}
+        assert list(new) == [(sf, sp2)]
+        assert new[(sf, sp2)] not in first.values()
+
+        fresh = spark.createDataFrame(
+            [(10**6, "fresh spark join text")], "doc_id long, text string"
+        )
+        merge_serving_delta(spark, sp2, fresh, stem=False, partitions=2)
+        for kind in ("trigram_terms", "doc_trigrams"):
+            with pytest.raises(StaleSecondaryIndexError):
+                registry._load_grams(spark, sf, kind)
+    finally:
+        # later tests get an unmerged serving index for this sf_dir
+        registry._SCACHE.pop(sf, None)

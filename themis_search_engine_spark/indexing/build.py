@@ -289,6 +289,73 @@ def build_and_save(
     return load_index(spark, path)
 
 
+GLOBAL_STATS_SCHEMA = (
+    "n_docs long, avgdl double, chunk_bits int, total_len long, "
+    "min_enc_avgdl double, max_enc_avgdl double, max_doc_id long, "
+    "n_terms long"
+)
+
+
+def write_serving_stats(
+    spark: SparkSession,
+    path: str,
+    *,
+    n_docs: int,
+    avgdl: float,
+    chunk_bits: int,
+    total_len: int,
+    max_doc_id: int,
+    min_enc_avgdl: float,
+    max_enc_avgdl: float,
+) -> None:
+    """Refresh the dictionary from ``postings_comp`` and then overwrite
+    ``global_stats`` with :data:`GLOBAL_STATS_SCHEMA`. The build, delta
+    merge and compaction all finish through here, so every serving layout
+    carries the same columns:
+
+    - ``chunk_bits`` is a layout constant: doc ids decode as
+      ``chunk << chunk_bits``, so a reader that assumes another value
+      scores the wrong doc ids.
+    - ``max_doc_id`` bounds the chunk space. Doc ids need not be dense in
+      ``[0, n_docs)``, so shard planners size coverage from it, never
+      from the count.
+    - ``total_len`` (a long) makes a merged avgdl the exact double a
+      rebuild computes, and lets readers skip a ``doc_stats`` scan.
+    - ``min_enc_avgdl``/``max_enc_avgdl`` span the encode-time avgdl of
+      every segment (the pruning-bound scales, indexing/merge.py).
+    - ``n_terms`` (dictionary cardinality, from parquet footers) feeds
+      planner.choose_scan_filter without a count job per batch.
+
+    df sums ``df_chunk`` across fragments, which is exact because
+    segments hold disjoint doc sets. idf changes for every term when N
+    changes, so the whole (small) dictionary is recomputed."""
+    import pyarrow.dataset as pads
+
+    from .compress import _resolve_fs
+
+    comp = spark.read.parquet(f"{path}/postings_comp")
+    dictionary = (
+        comp.groupBy("term")
+        .agg(F.sum("df_chunk").alias("df"))
+        .withColumn(
+            "idf",
+            F.log2(
+                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+            ),
+        )
+    )
+    dictionary.write.mode("overwrite").parquet(f"{path}/dictionary")
+    _ensure_schema_file(dictionary, f"{path}/dictionary")
+    fs, p = _resolve_fs(f"{path}/dictionary")
+    n_terms = pads.dataset(p, filesystem=fs, format="parquet").count_rows()
+    spark.createDataFrame(
+        [(int(n_docs), float(avgdl), int(chunk_bits), int(total_len),
+          float(min_enc_avgdl), float(max_enc_avgdl), int(max_doc_id),
+          int(n_terms))],
+        GLOBAL_STATS_SCHEMA,
+    ).write.mode("overwrite").parquet(f"{path}/global_stats")
+
+
 def _ensure_schema_file(df: DataFrame, path: str) -> None:
     """Layout invariant: every persisted index table has at least one
     parquet file. Spark writes NO data files for an empty frame, leaving
@@ -351,8 +418,10 @@ def build_and_save_serving(
                 (compress_files — no shuffle, and the posting stream never
                 crosses the row-oriented JVM↔Python bridge).
       then      dictionary from the compressed chunks: Σ df_chunk per term,
-                a scan of two tiny columns; n_postings from the per-file
-                compression metrics.
+                a scan of two tiny columns, then the one global_stats
+                write (:func:`write_serving_stats`, shared with merge and
+                compaction); n_postings from the per-file compression
+                metrics.
 
     The raw table doubles as postings_flat for the naive/oracle BM25 path
     (tf = cnt/maxcnt recomputed on read — identical IEEE division), so
@@ -476,21 +545,9 @@ def build_and_save_serving(
         n_docs = docs.count()
         if n_docs:  # metrics lost for a NON-empty corpus: a real bug
             raise
-    avgdl = float(gs_row["total"] or 0.0) / n_docs if n_docs else 0.0
-    # chunk_bits is part of the index LAYOUT: doc_id bases decode as
-    # chunk << chunk_bits, so a reader defaulting to a different value
-    # scores silently wrong doc_ids. Persist it with the global stats.
-    # max_doc_id bounds the CHUNK SPACE: doc_ids need not be dense in
-    # [0, n_docs) (filtered corpora, sparse id assigners), so shard
-    # planners must size coverage from the real id ceiling, not the
-    # count — deriving it from n_docs silently drops every chunk above
-    # n_docs >> chunk_bits.
+    total_len = int(gs_row["total"] or 0)
+    avgdl = float(total_len) / n_docs if n_docs else 0.0
     max_doc_id = int(gs_row["max_doc_id"] or 0)
-    global_stats = spark.createDataFrame(
-        [(n_docs, avgdl, cb, max_doc_id)],
-        "n_docs long, avgdl double, chunk_bits int, max_doc_id long",
-    )
-    global_stats.write.mode("overwrite").parquet(f"{path}/global_stats")
     t["doc_stats"] = _time.perf_counter() - t0
 
     t0 = _time.perf_counter()
@@ -505,31 +562,11 @@ def build_and_save_serving(
     t["compress"] = _time.perf_counter() - t0
 
     t0 = _time.perf_counter()
-    comp = spark.read.parquet(f"{path}/postings_comp")
-    dictionary = (
-        comp.groupBy("term")
-        .agg(F.sum("df_chunk").alias("df"))
-        .withColumn(
-            "idf",
-            F.log2(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
+    write_serving_stats(
+        spark, path, n_docs=n_docs, avgdl=avgdl, chunk_bits=cb,
+        total_len=total_len, max_doc_id=max_doc_id,
+        min_enc_avgdl=avgdl, max_enc_avgdl=avgdl,
     )
-    dictionary.write.mode("overwrite").parquet(f"{path}/dictionary")
-    _ensure_schema_file(dictionary, f"{path}/dictionary")
-    # rewrite global_stats WITH the dictionary cardinality: one tiny row,
-    # and it makes the serving-time IN-list-vs-join decision free
-    # (planner.choose_scan_filter needs batch_vocab / n_terms; a count
-    # job per batch would defeat the point). Mutation paths that rewrite
-    # global_stats without n_terms simply lose the column — readers
-    # treat it as unknown and fall back to the literal-cap rule.
-    n_terms = spark.read.parquet(f"{path}/dictionary").count()
-    spark.createDataFrame(
-        [(n_docs, avgdl, cb, max_doc_id, n_terms)],
-        "n_docs long, avgdl double, chunk_bits int, max_doc_id long, "
-        "n_terms long",
-    ).write.mode("overwrite").parquet(f"{path}/global_stats")
     t["dictionary"] = _time.perf_counter() - t0
 
     idx = load_serving_index(spark, path)

@@ -70,28 +70,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..textproc import term_counts_arrow
-from .build import ServingIndex, load_serving_index
+from .build import ServingIndex, load_serving_index, write_serving_stats
 from .compress import DEFAULT_CHUNK_BITS, compress_files
 
 
 def _base_totals(spark: SparkSession, path: str) -> dict:
-    """Read the base layout's global stats; reconstruct total_len and
-    max_doc_id for layouts that predate them with one doc_stats scan
-    (exactness: total_len is Σ length over doc_stats — zero-token docs
-    hold no stats row and contribute 0, matching the build's avgdl =
-    Σ length / N). ``n_terms`` (dictionary cardinality) is -1 when the
-    layout did not persist it."""
-    gs = spark.read.parquet(f"{path}/global_stats")
-    row = gs.collect()[0]
-    cols = set(gs.columns)
+    """Read the layout's global stats with pyarrow (no Spark job, a
+    fresh read on every call, so a merge between two calls is seen by
+    the second). Layouts that predate ``total_len``/``max_doc_id`` get
+    them from one Spark doc_stats scan (exactness: total_len is Σ length
+    over doc_stats — zero-token docs hold no stats row and contribute 0,
+    matching the build's avgdl = Σ length / N). ``n_terms`` (dictionary
+    cardinality) is -1 when the layout did not persist it."""
+    import pyarrow.parquet as pq
+
+    from .compress import _resolve_fs
+
+    fs, gs_path = _resolve_fs(f"{path}/global_stats")
+    row = pq.read_table(gs_path, filesystem=fs).to_pylist()[0]
     out = {
         "n_docs": int(row["n_docs"]),
         "avgdl": float(row["avgdl"]),
-        "chunk_bits": int(row["chunk_bits"]) if "chunk_bits" in cols
-        else DEFAULT_CHUNK_BITS,
-        "n_terms": int(row["n_terms"]) if "n_terms" in cols else -1,
+        "chunk_bits": int(row.get("chunk_bits", DEFAULT_CHUNK_BITS)),
+        "n_terms": int(row.get("n_terms", -1)),
     }
-    if "total_len" in cols and "max_doc_id" in cols:
+    if "total_len" in row and "max_doc_id" in row:
         out["total_len"] = int(row["total_len"])
         out["max_doc_id"] = int(row["max_doc_id"])
     else:  # pre-merge / pre-max_doc_id layouts: one doc_stats scan
@@ -100,19 +103,10 @@ def _base_totals(spark: SparkSession, path: str) -> dict:
             .agg(F.sum("length").alias("t"), F.max("doc_id").alias("m"))
             .collect()[0]
         )
-        out["total_len"] = (
-            int(row["total_len"]) if "total_len" in cols else int(t["t"] or 0)
-        )
-        out["max_doc_id"] = (
-            int(row["max_doc_id"]) if "max_doc_id" in cols
-            else int(t["m"] or 0)
-        )
-    out["min_enc_avgdl"] = (
-        float(row["min_enc_avgdl"]) if "min_enc_avgdl" in cols else out["avgdl"]
-    )
-    out["max_enc_avgdl"] = (
-        float(row["max_enc_avgdl"]) if "max_enc_avgdl" in cols else out["avgdl"]
-    )
+        out["total_len"] = int(row.get("total_len", t["t"] or 0))
+        out["max_doc_id"] = int(row.get("max_doc_id", t["m"] or 0))
+    out["min_enc_avgdl"] = float(row.get("min_enc_avgdl", out["avgdl"]))
+    out["max_enc_avgdl"] = float(row.get("max_enc_avgdl", out["avgdl"]))
     return out
 
 
@@ -516,24 +510,11 @@ def compact_serving_index(
         shutil.rmtree(old, ignore_errors=True)
 
     n_docs = base["n_docs"]
-    comp = spark.read.parquet(f"{path}/postings_comp")
-    dictionary = (
-        comp.groupBy("term")
-        .agg(F.sum("df_chunk").alias("df"))
-        .withColumn(
-            "idf",
-            F.log2(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
+    write_serving_stats(
+        spark, path, n_docs=n_docs, avgdl=base["avgdl"], chunk_bits=cb,
+        total_len=base["total_len"], max_doc_id=base["max_doc_id"],
+        min_enc_avgdl=base["avgdl"], max_enc_avgdl=base["avgdl"],
     )
-    dictionary.write.mode("overwrite").parquet(f"{path}/dictionary")
-    spark.createDataFrame(
-        [(n_docs, base["avgdl"], cb, base["total_len"], base["avgdl"],
-          base["avgdl"], base["max_doc_id"])],
-        "n_docs long, avgdl double, chunk_bits int, total_len long, "
-        "min_enc_avgdl double, max_enc_avgdl double, max_doc_id long",
-    ).write.mode("overwrite").parquet(f"{path}/global_stats")
     t["compact_finalize"] = time.perf_counter() - t0
 
     _append_log(path, {
@@ -660,32 +641,15 @@ def merge_serving_delta(
     shutil.rmtree(raw_tmp, ignore_errors=True)
     shutil.rmtree(comp_tmp, ignore_errors=True)
 
-    # 5. dictionary refresh from chunk METADATA (two tiny columns over all
-    #    segments; df_chunk sums across fragments because segments hold
-    #    disjoint doc sets). idf changes for EVERY term when N changes, so
-    #    incremental df patching would still rewrite the whole (small)
-    #    dictionary — recompute is the simple exact choice.
+    # 5. dictionary + global_stats refresh from chunk METADATA (two tiny
+    #    columns over all segments; base posting bytes are never read)
     t0 = time.perf_counter()
-    comp = spark.read.parquet(f"{path}/postings_comp")
-    dictionary = (
-        comp.groupBy("term")
-        .agg(F.sum("df_chunk").alias("df"))
-        .withColumn(
-            "idf",
-            F.log2(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
+    write_serving_stats(
+        spark, path, n_docs=n_docs, avgdl=avgdl, chunk_bits=cb,
+        total_len=total_len, max_doc_id=max_doc_id,
+        min_enc_avgdl=min(base["min_enc_avgdl"], avgdl),
+        max_enc_avgdl=max(base["max_enc_avgdl"], avgdl),
     )
-    dictionary.write.mode("overwrite").parquet(f"{path}/dictionary")
-
-    min_enc = min(base["min_enc_avgdl"], avgdl)
-    max_enc = max(base["max_enc_avgdl"], avgdl)
-    spark.createDataFrame(
-        [(n_docs, avgdl, cb, total_len, min_enc, max_enc, max_doc_id)],
-        "n_docs long, avgdl double, chunk_bits int, total_len long, "
-        "min_enc_avgdl double, max_enc_avgdl double, max_doc_id long",
-    ).write.mode("overwrite").parquet(f"{path}/global_stats")
     t["delta_finalize"] = time.perf_counter() - t0
 
     # 6. merge log: per-merge lineage + metrics (north-rule evidence).

@@ -1,45 +1,48 @@
 """Physical plan selection for serving queries.
 
-The engine has THREE rank-identical physical plans for BM25 top-k over a
-persisted compressed index (PLANS.md records each shape):
+The engine serves BM25 top-k over a persisted compressed index with TWO
+rank-identical physical plans, both running the same slab kernel
+(:func:`~themis_search_engine_spark.queryeng.sharded._score_shard`);
+PLANS.md records each shape:
 
-* ``local``   — :func:`~themis_search_engine_spark.queryeng.wand.wand_topk_local`:
-  in-process pyarrow WAND, ZERO Spark jobs; tens of milliseconds.
-* ``single``  — :func:`~themis_search_engine_spark.queryeng.wand.wand_topk_single`:
-  ONE Spark job, a task per query running true early-exit WAND.
+* ``local``   — the kernel in the driver process over every chunk of the
+  index: no Spark job before, during or after the query.
 * ``sharded`` — :func:`~themis_search_engine_spark.queryeng.sharded.wand_topk_sharded`:
-  doc-range shards, decode-once-per-batch; the batch THROUGHPUT plan.
+  one Spark job, one task per doc-range shard, per-shard top-k merged on
+  the driver.
 
 Inputs with no persisted layout (``build_index`` output, federated and
 partitioned legs) call :func:`~themis_search_engine_spark.queryeng.wand.wand_topk`
-directly; it is not a serving plan.
+directly; it is not a serving plan. Neither is the per-row early-exit
+kernel :func:`~themis_search_engine_spark.queryeng.wand.wand_topk_local`,
+which callers holding their own hot state may call directly.
+
+Volume rule. The kernel decodes each (term, chunk) row once per batch,
+so its work is the batch's DECODE VOLUME: Σ df over the batch's distinct
+priced terms, which dictionary pricing returns for free. A job costs a
+fixed launch, task-scheduling and result-collect overhead and then
+splits the decode over the cores. So the batch runs in-process while
+the volume is at most :data:`LOCAL_MAX_VOLUME`, and shard-parallel
+above it. A head term is not a special case: its df simply counts
+toward the volume. The constant is measured (``SERVE_CROSSOVER.json``,
+``scripts/serve_crossover.py``): seconds per batch of both plans across
+batch sizes at 12k, 50k and 400k docs.
 
 The reference has exactly one plan (Search.java's sequential loop); a
-user switching over shouldn't need to learn three. :func:`choose_query_plan`
-is the dispatcher decision as a PURE function — the inputs are the only
-things the choice actually depends on (batch size, head-term pressure,
-latency-vs-throughput intent), so tests pin the whole matrix — and
-:func:`search_serving` is the facade that loads a saved index, prices the
-query terms with one IN-filtered dictionary scan, picks the plan, and
-runs it.
-
-Head-term rule: the single-task plans (``local``, ``single``) serialize
-each query in one process/task, so a query containing a term whose df
-exceeds ``HEAD_DF_FRAC`` of the corpus would pull that term's full
-postings through one lane — exactly the documented bound in
-wand_topk_local's docstring. Such queries route to the shard-parallel
-plan regardless of batch size.
+user switching over shouldn't need to learn two. :func:`choose_query_plan`
+is the decision as a PURE function of its inputs, so tests pin it, and
+:func:`search_serving` is the facade that reads the saved layout's
+metadata, prices the batch, picks the plan, and runs it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-PLANS = ("local", "single", "sharded")
-INTERACTIVE_MAX = 4   # largest interactive batch served in-process
-SINGLE_MAX = 16       # largest batch served one task per query
-HEAD_DF_FRAC = 0.05   # df fraction above which a term is a head term
+PLANS = ("local", "sharded")
+# largest decode volume (Σ df over the batch's priced terms) served
+# in-process; SERVE_CROSSOVER.json has the measurement behind it
+LOCAL_MAX_VOLUME = 800_000
 
 
 def choose_query_plan(
@@ -47,45 +50,37 @@ def choose_query_plan(
     *,
     max_df_frac: float = 0.0,
     interactive: bool = False,
+    volume: int | None = None,
 ) -> dict:
-    """{"plan": local|single|sharded, "reasons": [...]} — pure
-    deterministic plan choice.
+    """{"plan": local|sharded, "reasons": [...]} — pure deterministic
+    plan choice from the batch's decode ``volume`` (Σ df over its
+    distinct priced terms).
 
-    ``max_df_frac``: highest document-frequency fraction among the
-    batch's terms (0 when nothing matched the dictionary).
-    ``interactive``: caller wants latency (a serving loop), not batch
-    throughput.
+    ``max_df_frac`` and ``interactive`` are the inputs of the earlier
+    batch-size rule. They are still accepted so callers written against
+    it keep working, and neither changes the choice: a head term counts
+    toward the volume like any other term. Without a volume the choice
+    is ``local``, the plan every measured batch below the crossover
+    runs.
     """
-    reasons = []
-    head = max_df_frac > HEAD_DF_FRAC
-    if head:
-        reasons.append(
-            f"head term: max df fraction {max_df_frac:.3f} > "
-            f"{HEAD_DF_FRAC} — single-lane plans would serialize its "
-            "full postings"
+    if n_queries <= 0:
+        plan, why = "local", "empty batch"
+    elif volume is None:
+        plan, why = "local", (
+            f"batch of {n_queries}, decode volume not given: in-process "
+            "kernel"
         )
-    if interactive and n_queries <= INTERACTIVE_MAX:
-        if head:
-            reasons.append(
-                "interactive head-term query served shard-parallel"
-            )
-            return {"plan": "sharded", "reasons": reasons}
-        reasons.append(
-            f"interactive batch of {n_queries} <= {INTERACTIVE_MAX}: "
-            "in-process WAND, zero Spark jobs"
+    elif volume <= LOCAL_MAX_VOLUME:
+        plan, why = "local", (
+            f"decode volume {volume} <= {LOCAL_MAX_VOLUME}: in-process "
+            "kernel, no Spark job"
         )
-        return {"plan": "local", "reasons": reasons}
-    if n_queries <= SINGLE_MAX and not head:
-        reasons.append(
-            f"small batch {n_queries} <= {SINGLE_MAX}, no head term: "
-            "one job, true early-exit WAND per query-task"
+    else:
+        plan, why = "sharded", (
+            f"decode volume {volume} > {LOCAL_MAX_VOLUME}: one job of "
+            "doc-range shards pays for its launch"
         )
-        return {"plan": "single", "reasons": reasons}
-    reasons.append(
-        f"batch of {n_queries}: decode-once-per-batch doc-sharded "
-        "throughput plan"
-    )
-    return {"plan": "sharded", "reasons": reasons}
+    return {"plan": plan, "reasons": [why]}
 
 
 def choose_scan_filter(
@@ -144,68 +139,76 @@ def search_serving(
     queries: dict[int, list[str]],
     k: int = 10,
     *,
-    interactive: bool = False,
     plan: str | None = None,
 ) -> DataFrame:
     """(qid, doc_id, score, rank) — BM25 top-k over the saved serving
-    index at ``path``, physical plan chosen automatically (override with
-    ``plan`` in :data:`PLANS`; anything else raises ``ValueError``). All
-    three plans are rank-identical (score desc, doc_id asc), so the
+    index at ``path``, physical plan chosen by decode volume (override
+    with ``plan`` in :data:`PLANS`; anything else raises ``ValueError``).
+    Both plans are rank-identical (score desc, doc_id asc), so the
     choice is purely physical. ``queries``: qid → normalized (and
     stemmed, if the index is) term lists — queryeng.pipeline.query_term_map's
     shape.
 
-    Cost before the query itself: one global_stats read (plus one
-    doc_stats scan on layouts that predate persisted totals) and ONE
-    IN-filtered dictionary scan bounded by the batch's vocabulary (the
-    per-batch idf/df pricing). Long-lived serving loops should hoist
-    both and call the plan functions directly (bench.py's hot form).
+    Cost before the query itself: two pyarrow reads, no Spark job —
+    ``global_stats`` (1.2-1.5 ms on a 4-core box) and the dictionary
+    rows of the batch's vocabulary through an IN filter (3.3 ms for the
+    487 terms of a 200-query batch, 18 ms for a whole 4,983-term
+    dictionary).
+    Both are read fresh on every call, so a merge or compaction between
+    two calls is seen by the second one. Layouts that predate persisted
+    ``total_len``/``max_doc_id`` pay one Spark doc_stats scan instead.
+    The ``local`` plan then runs no job at all: the result comes back as
+    an Arrow-built driver-local frame.
     """
-    from ..indexing.merge import _base_totals, _scales_from
-    from .sharded import wand_topk_sharded
-    from .wand import wand_topk_local, wand_topk_single
+    from ..indexing.merge import _base_totals
+    from .sharded import (
+        _score_shard, batch_terms, merge_topk, result_frame,
+        wand_topk_sharded,
+    )
 
     if plan is not None and plan not in PLANS:
         raise ValueError(f"unknown plan {plan!r}; have {PLANS}")
     g = _base_totals(spark, path)
-    n_docs, avgdl, cb = g["n_docs"], g["avgdl"], g["chunk_bits"]
+    avgdl, cb = g["avgdl"], g["chunk_bits"]
+    comp_path = f"{path}/postings_comp"
 
-    vocab = sorted({t for ts in queries.values() for t in ts})
-    priced = (
-        spark.read.parquet(f"{path}/dictionary")
-        .where(F.col("term").isin(vocab))
-        .select("term", "df", "idf")
-        .collect()
-        if vocab else []
-    )
-    idf_map = {r["term"]: float(r["idf"]) for r in priced}
-    max_df_frac = (
-        max(int(r["df"]) for r in priced) / max(n_docs, 1) if priced else 0.0
-    )
-
+    priced = _price_terms(path, {t for ts in queries.values() for t in ts})
+    idf = {t: w for t, (_, w) in priced.items()}
     chosen = plan or choose_query_plan(
-        len(queries), max_df_frac=max_df_frac, interactive=interactive
+        len(queries), volume=sum(df for df, _ in priced.values())
     )["plan"]
     if chosen == "sharded":
         return wand_topk_sharded(
-            spark, f"{path}/postings_comp", queries, None, avgdl,
-            g["max_doc_id"], k, chunk_bits=cb, idf_map=idf_map,
+            spark, comp_path, queries, None, avgdl, g["max_doc_id"], k,
+            chunk_bits=cb, idf_map=idf,
         )
-    bs = _scales_from(g)
-    if chosen == "local":
-        pdf = wand_topk_local(
-            f"{path}/postings_comp", queries, idf_map, avgdl, k,
-            chunk_bits=cb, bound_scales=bs,
-        )
-        return spark.createDataFrame(
-            pdf, "qid int, doc_id long, score double, rank int"
-        )
-    comp = spark.read.parquet(f"{path}/postings_comp")
-    use_inlist = (
-        choose_scan_filter(len(vocab), g["n_terms"])["filter"] == "inlist"
+    by_term = batch_terms(queries, idf)
+    n_chunks = (max(g["max_doc_id"], 0) >> cb) + 1
+    blob = (
+        _score_shard(comp_path, (0, n_chunks), tuple(sorted(by_term)),
+                     by_term, idf, k, avgdl, cb)
+        if by_term else None
     )
-    return wand_topk_single(
-        queries, comp, None, avgdl, k,
-        chunk_bits=cb, idf_map=idf_map, bound_scales=bs,
-        inlist=use_inlist,
+    return result_frame(spark, merge_topk([blob], k))
+
+
+def _price_terms(path: str, vocab: set[str]) -> dict[str, tuple[int, float]]:
+    """term → (df, idf) for the dictionary rows of ``vocab``: one pyarrow
+    read with an IN filter, no Spark job. Terms absent from the
+    dictionary are absent from the result."""
+    if not vocab:
+        return {}
+    import pyarrow.parquet as pq
+
+    from ..indexing.compress import _resolve_fs
+
+    fs, p = _resolve_fs(f"{path}/dictionary")
+    tbl = pq.read_table(
+        p, filesystem=fs, columns=["term", "df", "idf"],
+        filters=[("term", "in", sorted(vocab))],
     )
+    return {
+        t: (int(d), float(w))
+        for t, d, w in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist(),
+                           tbl["idf"].to_pylist())
+    }

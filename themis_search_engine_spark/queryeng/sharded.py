@@ -39,6 +39,13 @@ shard answers the whole batch over its doc range, only top-k rows travel):
             the shard's chunks), ≤ shards × queries × k tiny rows; the
             global top-k is a single window over that.
 
+The same kernel also runs WITHOUT Spark: planner.search_serving's
+``local`` plan calls :func:`_score_shard` in the driver over the whole
+chunk range ``[0, n_chunks)`` when the batch's decode volume is below
+the measured crossover (SERVE_CROSSOVER.json). Both plans finish
+through :func:`merge_topk` and :func:`result_frame`, so their results
+are the same rows in the same frame shape.
+
 Decode batching was measured both ways and per-ROW decode wins at the
 default chunk_bits=16: rows average >1k postings, so vb_decode's numpy
 fixed cost is already amortized, while concatenating a whole chunk's
@@ -69,6 +76,7 @@ physical distribution, proven rank-identical in tests.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -76,6 +84,7 @@ from pyspark.sql.window import Window
 from ..indexing.compress import DEFAULT_CHUNK_BITS
 
 _OUT_SCHEMA = "qid int, doc_id long, score double"
+RESULT_SCHEMA = _OUT_SCHEMA + ", rank int"
 
 
 def _score_shard(
@@ -317,6 +326,54 @@ def _score_shard(
     return qa.tobytes(), da.tobytes(), sa.astype(np.float64).tobytes()
 
 
+def batch_terms(
+    queries: dict[int, list[str]], idf: dict[str, float]
+) -> dict[str, frozenset]:
+    """term → the qids that contain it, over the priced terms only
+    (terms absent from ``idf`` contribute nothing, exactly as the
+    join-based plans drop them) — :func:`_score_shard`'s ``by_term``."""
+    by_term: dict[str, set] = {}
+    for qid, ts in queries.items():
+        for t in ts:
+            if t in idf:
+                by_term.setdefault(t, set()).add(qid)
+    return {t: frozenset(qs) for t, qs in by_term.items()}
+
+
+def merge_topk(blobs, k: int) -> pd.DataFrame:
+    """Global top-k per query over :func:`_score_shard` results (packed
+    blobs; ``None`` for a shard that matched nothing) → a (qid, doc_id,
+    score, rank) pandas frame ordered by (qid, rank). Ties break by
+    doc_id ascending, like every other plan. One lexsort by (qid, score
+    desc, doc_id asc) and a vectorized rank-within-group — no per-qid
+    Python loop."""
+    blobs = [b for b in blobs if b is not None]
+    qa, da, sa = (
+        np.concatenate([np.frombuffer(b[i], dtype=dt) for b in blobs])
+        if blobs else np.empty(0, dtype=dt)
+        for i, dt in enumerate((np.int64, np.int64, np.float64))
+    )
+    order = np.lexsort((da, -sa, qa))
+    qs, ds, ss = qa[order], da[order], sa[order]
+    grp = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
+    pos = np.arange(len(qs)) - np.repeat(grp, np.diff(np.r_[grp, len(qs)]))
+    keep = pos < k
+    return pd.DataFrame({
+        "qid": qs[keep].astype(np.int32),
+        "doc_id": ds[keep],
+        "score": ss[keep],
+        "rank": (pos[keep] + 1).astype(np.int32),
+    })
+
+
+def result_frame(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
+    """A :func:`merge_topk` frame as a Spark DataFrame. The Arrow path
+    builds a driver-local relation, so collecting it runs no Spark job
+    (a 2,000-row tuple list cost 0.32-0.41 s to create and collect on a
+    4-core box; Arrow took 29-31 ms). An empty frame keeps the schema."""
+    return spark.createDataFrame(pdf, RESULT_SCHEMA)
+
+
 def collect_idf_map(
     dictionary: DataFrame, *, max_terms: int = 10_000_000
 ) -> dict[str, float]:
@@ -428,15 +485,10 @@ def wand_topk_sharded(
             for r in dictionary.where(F.col("term").isin(vocab))
             .select("term", "idf").collect()
         }
-    by_term_s: dict[str, set] = {}
-    for qid, ts in queries.items():
-        for t in ts:
-            if t in idf:
-                by_term_s.setdefault(t, set()).add(qid)
-    by_term = {t: frozenset(qs) for t, qs in by_term_s.items()}
+    by_term = batch_terms(queries, idf)
     kept_vocab = tuple(sorted(by_term))
     if not kept_vocab:
-        return spark.createDataFrame([], _OUT_SCHEMA + ", rank int")
+        return result_frame(spark, merge_topk([], k))
 
     n_chunks = (max(int(max_doc_id), 0) >> chunk_bits) + 1
     sc_ctx = spark.sparkContext
@@ -511,31 +563,7 @@ def wand_topk_sharded(
 
     if n_shards * len(queries) * k <= driver_merge_limit:
         # tiny result set: one collect job, numpy global top-k, no shuffle
-        blobs = [b for b in packed.collect() if b is not None]
-        if not blobs:
-            return spark.createDataFrame([], _OUT_SCHEMA + ", rank int")
-        qa = np.concatenate(
-            [np.frombuffer(b[0], dtype=np.int64) for b in blobs]
-        )
-        da = np.concatenate(
-            [np.frombuffer(b[1], dtype=np.int64) for b in blobs]
-        )
-        sa = np.concatenate(
-            [np.frombuffer(b[2], dtype=np.float64) for b in blobs]
-        )
-        # one lexsort by (qid, score desc, doc_id asc), then a vectorized
-        # rank-within-group — no per-qid Python loop
-        order = np.lexsort((da, -sa, qa))
-        qs, ds, ss = qa[order], da[order], sa[order]
-        grp = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
-        sizes = np.diff(np.r_[grp, len(qs)])
-        pos = np.arange(len(qs)) - np.repeat(grp, sizes)
-        keep = pos < k
-        out = [
-            (int(q), int(d), float(s), int(r) + 1)
-            for q, d, s, r in zip(qs[keep], ds[keep], ss[keep], pos[keep])
-        ]
-        return spark.createDataFrame(out, _OUT_SCHEMA + ", rank int")
+        return result_frame(spark, merge_topk(packed.collect(), k))
 
     def unpack(blob):
         if blob is None:

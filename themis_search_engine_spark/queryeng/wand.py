@@ -33,8 +33,9 @@ cores): sharded 460.9 q/s, greedy ``wand_topk_single`` 256.4, a phased
 probe→θ→rest variant of :func:`wand_topk` 118.2, the one-pass plan 112.8.
 The phased variant paid three synchronization barriers per job and no
 dispatcher ever chose it, so it was removed; pruning lives in the
-barrier-free per-query plans. :mod:`.planner` picks among ``local``,
-``single`` and ``sharded`` for persisted layouts.
+barrier-free per-query plans. For persisted layouts :mod:`.planner`
+picks between two plans that both run the sharded slab kernel; the
+per-row kernels here serve direct callers.
 
 Rank/score identity with the naive DataFrame path is asserted in tests
 (modulo float-sum order at ~1e-15, with deterministic doc_id tie-breaks).

@@ -1469,26 +1469,38 @@ ORACLE_SQL["suffix_topk"] = osql.sql_suffix_topk(SUFFIX_QUERYSET, 16, 10)
 INFIX_QUERYSET = {1: "uer", 2: "trea", 3: "ind", 4: "olum"}
 
 
-_GRAM_CACHE: dict[str, str] = {}
+_GRAM_CACHE: dict[tuple[str, str], str] = {}
 
 
-def _gram_artifact_dir(spark, sf_dir):
-    """Persist the trigram artifacts once per sf_dir (the r5 serving
-    form: gram-sorted parquet, queried via load_* + gram IN-list
-    row-group pruning) so the infix/regex/grep queries exercise the
-    PERSISTED path, not the derive-per-query fallback."""
-    from .queryeng.grepdocs import save_doc_trigrams
-    from .queryeng.trigram import save_trigram_terms
+def _load_grams(spark, sf_dir, kind):
+    """The persisted ``kind`` trigram artifact (trigram_terms or
+    doc_trigrams) of ``sf_dir``, built once per (sf_dir, serving index)
+    in the r5 serving form (gram-sorted parquet, queried via load_* +
+    gram IN-list row-group pruning) so the infix/regex/grep queries
+    exercise the PERSISTED path, not the derive-per-query fallback.
+    Both artifacts are built from the sf_dir's serving index
+    (:func:`_serving_bundle`) and stamped with its path: a rebuild at
+    the same sf_dir in one process gets a new serving path and so new
+    grams, and the load raises StaleSecondaryIndexError if the index
+    moved past the stamp."""
+    from .queryeng.grepdocs import load_doc_trigrams, save_doc_trigrams
+    from .queryeng.trigram import load_trigram_terms, save_trigram_terms
 
-    if sf_dir not in _GRAM_CACHE:
-        idx = get_index(spark, sf_dir)
+    idx, serving_path = _serving_bundle(spark, sf_dir)
+    key = (sf_dir, serving_path)
+    if key not in _GRAM_CACHE:
         base = scratch_dir("themis_grams_")
-        save_trigram_terms(idx.dictionary, f"{base}/trigram_terms")
+        save_trigram_terms(idx.dictionary, f"{base}/trigram_terms",
+                           serving_path=serving_path)
         save_doc_trigrams(
-            load_documents(spark, sf_dir), f"{base}/doc_trigrams"
+            load_documents(spark, sf_dir), f"{base}/doc_trigrams",
+            serving_path=serving_path,
         )
-        _GRAM_CACHE[sf_dir] = base
-    return _GRAM_CACHE[sf_dir]
+        _GRAM_CACHE[key] = base
+    load = {"trigram_terms": load_trigram_terms,
+            "doc_trigrams": load_doc_trigrams}[kind]
+    return load(spark, f"{_GRAM_CACHE[key]}/{kind}",
+                serving_path=serving_path)
 
 
 def q_infix_topk(spark, sf_dir):
@@ -1500,12 +1512,10 @@ def q_infix_topk(spark, sf_dir):
     carries no stale-able statistics), candidates verify with exact
     contains, cap df-desc like PrefixQuery's rewrite, then the standard
     OR-scored BM25 plan with IN-list postings pushdown."""
-    from .queryeng.trigram import infix_qterms, load_trigram_terms
+    from .queryeng.trigram import infix_qterms
 
     idx = get_index(spark, sf_dir)
-    gt = load_trigram_terms(
-        spark, f"{_gram_artifact_dir(spark, sf_dir)}/trigram_terms"
-    )
+    gt = _load_grams(spark, sf_dir, "trigram_terms")
     qt = infix_qterms(
         spark, idx.dictionary, INFIX_QUERYSET, max_terms=16, gram_table=gt
     )
@@ -1557,12 +1567,9 @@ def q_regex_topk(spark, sf_dir):
     pushdown. The queryset exercises all three lanes (exact: 1/5/7,
     grams incl. OR-tree: 3/4/6, scan: 2)."""
     from .queryeng.regexsearch import regex_qterms
-    from .queryeng.trigram import load_trigram_terms
 
     idx = get_index(spark, sf_dir)
-    gt = load_trigram_terms(
-        spark, f"{_gram_artifact_dir(spark, sf_dir)}/trigram_terms"
-    )
+    gt = _load_grams(spark, sf_dir, "trigram_terms")
     qt = regex_qterms(
         spark, idx.dictionary, REGEX_QUERYSET, max_terms=16, gram_table=gt
     )
@@ -1765,11 +1772,9 @@ def q_grep_docs(spark, sf_dir):
     count), exact contains verify on candidates only, never a
     full-corpus LIKE."""
     from .corpus import load_documents
-    from .queryeng.grepdocs import grep_docs, load_doc_trigrams
+    from .queryeng.grepdocs import grep_docs
 
-    gt = load_doc_trigrams(
-        spark, f"{_gram_artifact_dir(spark, sf_dir)}/doc_trigrams"
-    )
+    gt = _load_grams(spark, sf_dir, "doc_trigrams")
     return grep_docs(
         spark, load_documents(spark, sf_dir), GREP_QUERYSET, gram_table=gt
     )
@@ -1791,11 +1796,9 @@ def q_regex_grep(spark, sf_dir):
     OR tree (1, 4), the wildcard-gap AND tree (3), and the honest
     no-trigram fallback scan (2)."""
     from .corpus import load_documents
-    from .queryeng.grepdocs import load_doc_trigrams, regex_grep
+    from .queryeng.grepdocs import regex_grep
 
-    gt = load_doc_trigrams(
-        spark, f"{_gram_artifact_dir(spark, sf_dir)}/doc_trigrams"
-    )
+    gt = _load_grams(spark, sf_dir, "doc_trigrams")
     return regex_grep(
         spark, load_documents(spark, sf_dir), REGEX_GREP_QUERYSET,
         gram_table=gt,

@@ -244,7 +244,6 @@ def wand_topk_single(
     term_list: list[str] | None = None,
     bound_scales: tuple[float, float] = (1.0, 1.0),
     idf_map: dict[str, float] | None = None,
-    inlist: bool = True,
 ) -> DataFrame:
     """The LATENCY plan: true sequential block-max WAND per query, ONE
     Spark job (scan → groupBy(qid) shuffle → one task per query).
@@ -294,7 +293,7 @@ def wand_topk_single(
         if len({r[0] for r in rows}) == 1:
             # single query: no join at all — qid is a literal, idf a
             # literal map lookup keyed on the scanned term column
-            if inlist and 0 < len(terms) <= MAX_PRUNE_LITERALS:
+            if 0 < len(terms) <= MAX_PRUNE_LITERALS:
                 compressed = compressed.where(
                     F.col("term").isin(list(terms))
                 )
@@ -336,7 +335,7 @@ def wand_topk_single(
         q = F.broadcast(qterms.select("qid", "term").join(
             dictionary.select("term", "idf"), "term"
         ))
-    if inlist and 0 < len(terms) <= MAX_PRUNE_LITERALS:
+    if 0 < len(terms) <= MAX_PRUNE_LITERALS:
         compressed = compressed.where(F.col("term").isin(list(terms)))
     joined = compressed.join(q, "term")
     return joined.groupBy("qid").applyInPandas(

@@ -7,9 +7,8 @@ Stages
   compress       delta+varbyte chunked postings build (streaming sorted-
                  partition compressor)
   bm25_batch     50-query batch BM25 top-10, naive DataFrame path
-  wand_batch     same workload over compressed chunks (WAND batch plan:
-                 one scoring pass; single-query latency below
-                 uses the early-exit block-max plan)
+  wand_batch     same workload over compressed chunks (wand_topk: the
+                 slab kernel once per kernel window)
   build_synth    serving index build (raw postings + compression + derived
                  tables) over the deterministic synthetic web-page corpus
                  (~500k·sf docs) — the scaling-efficiency workload
@@ -39,8 +38,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from themis_search_engine_spark.corpus import load_documents, synth_pages
 from themis_search_engine_spark.indexing import build_index
 from themis_search_engine_spark.indexing.compress import (
+    DEFAULT_CHUNK_BITS,
     build_postings_compressed_sorted,
-    compression_metrics,
 )
 from themis_search_engine_spark.queryeng import (
     bm25_topk,
@@ -104,16 +103,9 @@ def main() -> None:
     comp = build_postings_compressed_sorted(
         idx.counts, idx.doc_stats, idx.avgdl
     ).cache()
-    m = (
-        compression_metrics(comp)
-        .agg({"bytes_compressed": "sum", "df_chunk": "sum"})
-        .collect()[0]
-    )
+    comp.count()
     stages["compress"] = time.perf_counter() - t0
     extra["postings_per_sec_compress"] = n_postings / stages["compress"]
-    extra["bytes_per_posting"] = m["sum(bytes_compressed)"] / max(
-        m["sum(df_chunk)"], 1
-    )
 
     # --- batch query: naive DataFrame path ---------------------------------
     queries = reference_queries(50)
@@ -132,62 +124,11 @@ def main() -> None:
     stages["wand_batch"], rows_w = min_of_2(
         lambda: wand_topk(
             qt, comp, idx.dictionary, idx.avgdl, k=10,
-            term_list=tl,
+            chunk_bits=DEFAULT_CHUNK_BITS, term_list=tl,
         ).collect()
     )
     extra["queries_per_sec_wand"] = len(queries) / stages["wand_batch"]
     extra["wand_result_rows"] = len(rows_w)
-
-    # --- per-query latency over the compressed index (p50/p95) -------------
-    # single-task sequential WAND: ONE job per query (scan → groupBy(qid)
-    # → early-exit θ loop in the task).
-    # Hot-serving form: the dictionary is collected ONCE into the serving
-    # process (the reference's RAM-pinned vocabulary, Search.java's
-    # long-lived loop) so each query's job plants (qid, term, idf) as a
-    # broadcast literal instead of re-joining the dictionary.
-    from themis_search_engine_spark.queryeng.pipeline import query_term_map
-    from themis_search_engine_spark.queryeng.sharded import collect_idf_map
-    from themis_search_engine_spark.queryeng.wand import wand_topk_single
-
-    hot_idf = collect_idf_map(idx.dictionary)  # one-time serving state
-
-    # --- batch query: greedy single-lane plan (one task per query) ----------
-    # the greedy early-exit plan (wand_topk_single, called directly: it
-    # is not one of search_serving's plans); same workload as the naive /
-    # bridge / sharded stages so all four measured plans stay comparable.
-    qmap_all = query_term_map(queries, stem=True)
-    stages["wand_greedy"], rows_g = min_of_2(
-        lambda: wand_topk_single(
-            qmap_all, comp, None, idx.avgdl, k=10, idf_map=hot_idf,
-        ).collect()
-    )
-    extra["queries_per_sec_greedy"] = len(queries) / stages["wand_greedy"]
-    extra["greedy_result_rows"] = len(rows_g)
-
-    # per-query latency protocol (r5): TWO timed runs per query, p50/p95
-    # over the per-query MIN — the same steady-state min-of-2 rule the
-    # batch stages use. One-shot per-query numbers fold whichever query
-    # happens to absorb a JIT recompile / GC pause into p95 (the r4
-    # 0.52→0.72 s p95 "regression" was exactly that — see
-    # query_latency_runs, which records both runs per query so tail
-    # attribution stays diagnosable from the artifact).
-    lat = []
-    runs_rec = {}
-    for qid in list(queries)[:12]:
-        q1 = query_term_map({qid: queries[qid]}, stem=True)
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            wand_topk_single(
-                q1, comp, None, idx.avgdl, k=10, idf_map=hot_idf,
-            ).collect()
-            runs.append(time.perf_counter() - t0)
-        runs_rec[qid] = [round(r, 3) for r in runs]
-        lat.append(min(runs))
-    lat.sort()
-    extra["query_p50_sec"] = lat[len(lat) // 2]
-    extra["query_p95_sec"] = lat[min(len(lat) - 1, int(len(lat) * 0.95))]
-    extra["query_latency_runs"] = runs_rec
 
     # --- scaling workload: synthetic web pages -----------------------------
     import shutil
@@ -238,6 +179,12 @@ def main() -> None:
         )
 
         didx = build_and_save_serving(docs, f"{tmp}/docindex", stem=True)
+        # on-disk bytes of the whole saved index over its postings (the
+        # same definition as perfbench's index_bytes_per_posting)
+        extra["bytes_per_posting"] = sum(
+            os.path.getsize(os.path.join(r, f))
+            for r, _, fs in os.walk(f"{tmp}/docindex") for f in fs
+        ) / max(didx.n_postings, 1)
         idf_map = collect_idf_map(didx.dictionary)
         qmap = query_term_map(queries, stem=True)
         stages["wand_sharded"], rows_s = min_of_2(
@@ -252,14 +199,17 @@ def main() -> None:
         ]
         extra["sharded_result_rows"] = len(rows_s)
 
-        # --- interactive latency: in-process WAND, zero Spark jobs --------
+        # --- interactive latency: in-process kernel, zero Spark jobs -----
+        # per-query MIN of two timed runs, p50/p95 over those: one-shot
+        # numbers fold whichever query absorbs a JIT recompile or GC pause
+        # into p95
         from themis_search_engine_spark.queryeng.wand import wand_topk_local
 
         lat_l = []
         for qid in list(queries)[:12]:
             q1 = query_term_map({qid: queries[qid]}, stem=True)
             runs = []
-            for _ in range(2):  # same per-query min-of-2 rule as above
+            for _ in range(2):
                 t0 = time.perf_counter()
                 wand_topk_local(
                     f"{tmp}/docindex/postings_comp", q1, idf_map,

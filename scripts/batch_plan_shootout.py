@@ -1,27 +1,23 @@
 #!/usr/bin/env python
-"""Batch-serving plan shootout at the 4000-query saturation batch: can a
-PRUNED plan beat the barrier-free one-pass bridge plan (wand_topk)?
+"""Batch-serving plan shootout at the 4000-query saturation batch: the
+DataFrame-input plan (wand_topk) against the doc-sharded file-parallel
+plan (wand_topk_sharded), both on the one slab kernel.
 
-Round-3 finding (BASELINE.md): a 3-barrier phased WAND variant lost to
-the one-pass plan for batches — barrier elimination beats chunk
-skipping — and has since been removed (BATCH_PLANS.json keeps its
-118.2 q/s at 32 cores). The open question (VERDICT r3 ask #3) is whether pruning can
-pay WITHOUT barriers: the per-query greedy plan (wand_topk_single's
-DataFrame batch form) walks each query's chunks impact-ordered with a
-running θ INSIDE one task — chunk skipping with zero extra barriers and
-no global top-k window at all (tasks emit ranked rows directly).
+Earlier rounds also measured pruned plans here: a 3-barrier phased WAND
+variant (118.2 q/s at 32 cores) and a per-query greedy early-exit plan
+(256.4 q/s). Both lost to sharded (460.9 q/s) and have since been
+removed; BATCH_PLANS.json keeps that 32-core record.
 
 Measures, same index, same 4000-query workload, min-of-2 after warmup:
-  bridge    — wand_topk: the one-pass batch baseline
-  greedy    — wand_topk_single(DataFrame batch): barrier-free pruned
-  sharded   — wand_topk_sharded + hot idf_map: the file-parallel champion
+  bridge    — wand_topk: one applyInArrow call per kernel window
+  sharded   — wand_topk_sharded + hot idf_map: one task per chunk range
 
-plus rank-identity of every plan vs bridge on a subset (6-dp grain —
-the same grain the oracle gate uses).
+plus rank-identity of sharded vs bridge (6-dp grain — the same grain
+the oracle gate uses).
 
-Writes BATCH_PLANS.json at the repo root. Env: SPARK_GRAFT_CPUS,
-SPARK_GRAFT_SHOOT_DOCS (default 1_200_000), SPARK_GRAFT_SHOOT_QUERIES
-(default 4000).
+Writes BATCH_PLANS.json at the repo root (SPARK_GRAFT_SHOOT_OUT
+overrides). Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_SHOOT_DOCS (default
+1_200_000), SPARK_GRAFT_SHOOT_QUERIES (default 4000).
 """
 
 from __future__ import annotations
@@ -54,10 +50,7 @@ from themis_search_engine_spark.queryeng.sharded import (  # noqa: E402
     collect_idf_map,
     wand_topk_sharded,
 )
-from themis_search_engine_spark.queryeng.wand import (  # noqa: E402
-    wand_topk,
-    wand_topk_single,
-)
+from themis_search_engine_spark.queryeng.wand import wand_topk  # noqa: E402
 from themis_search_engine_spark.queryset import (  # noqa: E402
     synth_reference_queries,
 )
@@ -122,40 +115,23 @@ def main() -> None:
         wqt = qterms_df(spark, wq, stem=True)
         wtl = query_term_list(wq, stem=True)
 
-        plans = {}
-
         def bridge(qt_, tl_):
             return wand_topk(
                 qt_, sidx.compressed, sidx.dictionary, sidx.avgdl, k=K,
                 chunk_bits=sidx.chunk_bits, term_list=tl_,
             )
 
-        def greedy(qt_, tl_):
-            return wand_topk_single(
-                qt_, sidx.compressed, sidx.dictionary, sidx.avgdl, k=K,
-                chunk_bits=sidx.chunk_bits, term_list=tl_,
-            )
-
-        plans["bridge"] = bridge
-        plans["greedy"] = greedy
-
-        ref_ranks = None
-        for name, fn in plans.items():
-            fn(wqt, wtl).collect()  # warmup plan shape
-            best = 1e18
-            rows = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                rows = fn(qt, tl).collect()
-                best = min(best, time.perf_counter() - t0)
-            out[f"{name}_sec"] = round(best, 2)
-            out[f"{name}_qps"] = round(n_queries / best, 1)
-            ranks = _ranks6(rows)
-            if ref_ranks is None:
-                ref_ranks = ranks
-            else:
-                out[f"{name}_rank_identical"] = ranks == ref_ranks
-            print(json.dumps({name: out[f"{name}_qps"]}), flush=True)
+        bridge(wqt, wtl).collect()  # warmup plan shape
+        best = 1e18
+        rows = None
+        for _ in range(2):
+            t0 = time.perf_counter()
+            rows = bridge(qt, tl).collect()
+            best = min(best, time.perf_counter() - t0)
+        out["bridge_sec"] = round(best, 2)
+        out["bridge_qps"] = round(n_queries / best, 1)
+        ref_ranks = _ranks6(rows)
+        print(json.dumps({"bridge": out["bridge_qps"]}), flush=True)
 
         # sharded champion, hot dictionary
         idf_map = collect_idf_map(sidx.dictionary)
@@ -179,9 +155,6 @@ def main() -> None:
         out["sharded_qps"] = round(n_queries / best, 1)
         out["sharded_rank_identical"] = _ranks6(rows) == ref_ranks
 
-        out["pruned_beats_barrier_free"] = (
-            out["greedy_qps"] >= out["bridge_qps"]
-        )
         print(json.dumps(out))
         dst = os.environ.get(
             "SPARK_GRAFT_SHOOT_OUT", os.path.join(HERE, "BATCH_PLANS.json")

@@ -65,6 +65,9 @@ def main(argv: list[str] | None = None) -> None:
         "merge_metrics": snap.get("merge_metrics", {}),
     }
     if args.queries:
+        from themis_search_engine_spark.indexing.compress import (
+            DEFAULT_CHUNK_BITS,
+        )
         from themis_search_engine_spark.queryeng import bm25_topk, qterms_df
         from themis_search_engine_spark.queryeng.wand import wand_topk
 
@@ -78,8 +81,10 @@ def main(argv: list[str] | None = None) -> None:
         ).collect()
         report["smoke_query_rows"] = len(rows)
         comp = spark.read.parquet(f"{args.output}/index/postings_comp")
+        # finalize compresses at the default layout
         wrows = wand_topk(
-            qt, comp, idx.dictionary, idx.avgdl, k=10
+            qt, comp, idx.dictionary, idx.avgdl, k=10,
+            chunk_bits=DEFAULT_CHUNK_BITS,
         ).collect()
         report["smoke_wand_rows"] = len(wrows)
         # rank-compare at the rounded-score grain: numpy vs Spark float

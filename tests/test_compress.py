@@ -148,6 +148,7 @@ def test_save_load_compressed_roundtrip(spark, tmp_path):
     from themis_search_engine_spark.corpus import load_documents
     from themis_search_engine_spark.indexing import build_index
     from themis_search_engine_spark.indexing.compress import (
+        DEFAULT_CHUNK_BITS,
         build_postings_compressed,
         decode_postings,
         load_compressed,
@@ -178,10 +179,11 @@ def test_save_load_compressed_roundtrip(spark, tmp_path):
 
     qt = qterms_df(spark, {1: "spark shuffle join", 2: "merge sort"},
                    stem=False)
+    kw = dict(k=5, chunk_bits=DEFAULT_CHUNK_BITS)
     ra = sorted(map(tuple, wand_topk(qt, comp, idx.dictionary, idx.avgdl,
-                                     k=5).collect()))
+                                     **kw).collect()))
     rb = sorted(map(tuple, wand_topk(qt, comp2, idx.dictionary, idx.avgdl,
-                                     k=5).collect()))
+                                     **kw).collect()))
     assert ra == rb
 
 

@@ -17,7 +17,7 @@ from themis_search_engine_spark.indexing.merge import (
 )
 from themis_search_engine_spark.oracle_sql import QUERYSET
 from themis_search_engine_spark.queryeng import qterms_df
-from themis_search_engine_spark.queryeng.wand import wand_topk, wand_topk_single
+from themis_search_engine_spark.queryeng.wand import wand_topk
 
 SF_DIR = "/root/testdata/sf0.001"
 CB = 4  # tiny chunks so even/odd splits create base+delta fragments
@@ -27,6 +27,13 @@ def _ranked(df):
     return sorted(
         (r["qid"], r["rank"], r["doc_id"], round(r["score"], 9))
         for r in df.collect()
+    )
+
+
+def _ranked_pdf(pdf):
+    return sorted(
+        (int(r.qid), int(r.rank), int(r.doc_id), round(float(r.score), 9))
+        for r in pdf.itertuples()
     )
 
 
@@ -77,10 +84,8 @@ def test_merge_equals_full_rebuild(spark, docs, full_idx, tmp_path):
     assert frags > 0
 
     qt = qterms_df(spark, QUERYSET, stem=False)
-    scales = serving_bound_scales(spark, p)
-    got = wand_topk_single(qt, merged.compressed, merged.dictionary,
-                           merged.avgdl, k=10, chunk_bits=CB,
-                           bound_scales=scales)
+    got = wand_topk(qt, merged.compressed, merged.dictionary,
+                    merged.avgdl, k=10, chunk_bits=CB)
     want = wand_topk(qt, full_idx.compressed, full_idx.dictionary,
                      full_idx.avgdl, k=10, chunk_bits=CB)
     assert _ranked(got) == _ranked(want)
@@ -88,9 +93,8 @@ def test_merge_equals_full_rebuild(spark, docs, full_idx, tmp_path):
     # reload from disk: persisted layout carries everything needed
     re = load_serving_index(spark, p)
     assert re.n_docs == merged.n_docs and re.avgdl == merged.avgdl
-    got2 = wand_topk_single(qt, re.compressed, re.dictionary, re.avgdl,
-                            k=10, chunk_bits=re.chunk_bits,
-                            bound_scales=scales)
+    got2 = wand_topk(qt, re.compressed, re.dictionary, re.avgdl,
+                     k=10, chunk_bits=re.chunk_bits)
     assert _ranked(got2) == _ranked(want)
 
 
@@ -115,12 +119,10 @@ def test_two_generation_merge(spark, docs, full_idx, tmp_path):
     assert all(e["postings_added"] > 0 for e in log)
 
     qt = qterms_df(spark, QUERYSET, stem=False)
-    got = wand_topk_single(
-        qt, merged.compressed, merged.dictionary, merged.avgdl, k=10,
-        chunk_bits=CB, bound_scales=serving_bound_scales(spark, p),
-    )
-    want = wand_topk_single(qt, full_idx.compressed, full_idx.dictionary,
-                            full_idx.avgdl, k=10, chunk_bits=CB)
+    got = wand_topk(qt, merged.compressed, merged.dictionary, merged.avgdl,
+                    k=10, chunk_bits=CB)
+    want = wand_topk(qt, full_idx.compressed, full_idx.dictionary,
+                     full_idx.avgdl, k=10, chunk_bits=CB)
     assert _ranked(got) == _ranked(want)
 
 
@@ -276,10 +278,16 @@ def test_merge_rejects_duplicate_doc_ids(spark, docs, tmp_path):
 
 def test_avgdl_shift_pruning_stays_sound(spark, tmp_path):
     """Delta docs 20× longer than base: merged avgdl far above the base
-    segment's encode-time avgdl, so unscaled base core_max would UNDER-
-    state true chunk bounds (bm25_core rises with avgdl) and pruned WAND
-    could skip true top-k chunks. With bound_scales, the early-exit plan
-    equals the one-pass plan."""
+    segment's encode-time avgdl, so unscaled base core_max UNDER-states
+    true chunk bounds (bm25_core rises with avgdl) — the stale metadata
+    that once let a pruned walk skip true top-k chunks. The kernel reads
+    no bound: the DataFrame plan and the in-process plan both rank like
+    naive BM25 on the merged layout."""
+    from themis_search_engine_spark.queryeng import bm25_topk
+    from themis_search_engine_spark.queryeng.pipeline import query_term_map
+    from themis_search_engine_spark.queryeng.sharded import collect_idf_map
+    from themis_search_engine_spark.queryeng.wand import wand_topk_local
+
     base_rows = [
         (i, f"alpha beta gamma doc{i}") for i in range(0, 24, 2)
     ]
@@ -297,22 +305,30 @@ def test_avgdl_shift_pruning_stays_sound(spark, tmp_path):
     assert hi > 1.0  # the scenario actually stresses the stale bounds
     assert lo == 1.0
 
-    qt = qterms_df(spark, {1: "alpha beta", 2: "gamma"}, stem=False)
-    pruned = wand_topk_single(qt, merged.compressed, merged.dictionary,
-                              merged.avgdl, k=3, chunk_bits=2,
-                              bound_scales=(hi, lo))
-    exact = wand_topk(qt, merged.compressed, merged.dictionary,
-                      merged.avgdl, k=3, chunk_bits=2)
-    assert _ranked(pruned) == _ranked(exact)
+    queries = {1: "alpha beta", 2: "gamma"}
+    qt = qterms_df(spark, queries, stem=False)
+    naive = _ranked(bm25_topk(qt, merged.postings_flat, merged.dictionary,
+                              merged.doc_stats, merged.avgdl, k=3))
+    exact = _ranked(wand_topk(qt, merged.compressed, merged.dictionary,
+                              merged.avgdl, k=3, chunk_bits=2))
+    assert [r[:3] for r in exact] == [r[:3] for r in naive]
+    local = wand_topk_local(
+        f"{p}/postings_comp", query_term_map(queries, stem=False),
+        collect_idf_map(merged.dictionary), merged.avgdl, k=3,
+        chunk_bits=2, bound_scales=(hi, lo),
+    )
+    assert _ranked_pdf(local) == exact
 
 
 def test_early_exit_needs_bound_scales(spark, tmp_path):
-    """The early-exit plans must apply bound_scales: short base docs
-    encoded at avgdl 2 carry chunk bounds far below their scores at the
-    merged avgdl, while delta docs (encoded at the merged avgdl) score
-    between the two. Unscaled, the walk visits the delta chunk first,
-    fills the top-k and stops before the base chunk holding the true
-    top-k; scaled, it matches the one-pass plan."""
+    """Short base docs encoded at avgdl 2 carry chunk bounds far below
+    their scores at the merged avgdl, while delta docs (encoded at the
+    merged avgdl) score between the two — the layout on which an
+    unscaled early-exit walk once visited the delta chunk first, filled
+    the top-k and stopped before the base chunk holding the true top-k.
+    The kernel skips no chunk, so every plan returns the base docs."""
+    from themis_search_engine_spark.queryeng.pipeline import query_term_map
+    from themis_search_engine_spark.queryeng.planner import search_serving
     from themis_search_engine_spark.queryeng.sharded import collect_idf_map
     from themis_search_engine_spark.queryeng.wand import wand_topk_local
 
@@ -336,21 +352,15 @@ def test_early_exit_needs_bound_scales(spark, tmp_path):
     exact = _ranked(wand_topk(qt, merged.compressed, merged.dictionary,
                               merged.avgdl, k=3, chunk_bits=2))
     assert [d for _, _, d, _ in exact] == [0, 1, 2]
-
-    def single(bs):
-        return _ranked(wand_topk_single(
-            qt, merged.compressed, merged.dictionary, merged.avgdl, k=3,
-            chunk_bits=2, bound_scales=bs,
-        ))
-
-    assert single(scales) == exact
-    assert single((1.0, 1.0)) != exact  # the scenario needs the scales
-    local = wand_topk_local(
-        f"{p}/postings_comp", {1: ["gamma"]},
-        collect_idf_map(merged.dictionary), merged.avgdl, k=3,
-        chunk_bits=2, bound_scales=scales,
-    )
-    assert sorted(local["doc_id"]) == [0, 1, 2]
+    qmap = query_term_map({1: "gamma"}, stem=False)
+    idf = collect_idf_map(merged.dictionary)
+    for bs in (scales, (1.0, 1.0)):
+        local = wand_topk_local(f"{p}/postings_comp", qmap, idf,
+                                merged.avgdl, k=3, chunk_bits=2,
+                                bound_scales=bs)
+        assert _ranked_pdf(local) == exact
+    for plan in ("local", "sharded"):
+        assert _ranked(search_serving(spark, p, qmap, 3, plan=plan)) == exact
 
 
 # --- snapshot-pinned reader --------------------------------------------------
@@ -389,16 +399,16 @@ def test_pinned_snapshot_survives_concurrent_merge(spark, tmp_path):
     snap = pin_serving_snapshot(spark, p)  # pin at gen 1 (5 docs)
     qt = qterms_df(spark, {1: "lazy dog", 2: "quick fox"}, stem=False)
 
-    def run(ix, scales):
+    def run(ix):
         return sorted(
             (r["qid"], r["rank"], r["doc_id"], round(r["score"], 6))
-            for r in wand_topk_single(
+            for r in wand_topk(
                 qt, ix.compressed, ix.dictionary, ix.avgdl, k=5,
-                chunk_bits=ix.chunk_bits, bound_scales=scales,
+                chunk_bits=ix.chunk_bits,
             ).collect()
         )
 
-    before = run(snap, snap.bound_scales)
+    before = run(snap)
     assert snap.n_docs == 5
 
     # concurrent write: another snapshot lands while the pin is open
@@ -406,10 +416,10 @@ def test_pinned_snapshot_survives_concurrent_merge(spark, tmp_path):
         spark, p, docs.where("doc_id = 5"), stem=False, partitions=2
     )
     # the PIN is unmoved — same files, same stats, same results
-    after = run(snap, snap.bound_scales)
+    after = run(snap)
     assert after == before
     re_pin = pin_serving_snapshot(spark, p, gen=snap.gen)
-    assert run(re_pin, re_pin.bound_scales) == before
+    assert run(re_pin) == before
 
     # a fresh (latest) view sees the new doc
     live = load_serving_index(spark, p)

@@ -11,10 +11,7 @@ from themis_search_engine_spark.indexing.build import (
     build_and_save_serving,
     load_serving_index,
 )
-from themis_search_engine_spark.indexing.merge import (
-    merge_serving_delta,
-    serving_bound_scales,
-)
+from themis_search_engine_spark.indexing.merge import merge_serving_delta
 from themis_search_engine_spark.queryeng.cache import (
     cached_query_topk,
     index_generation,
@@ -49,12 +46,11 @@ def test_cache_hit_identity_and_invalidation(spark, served, tmp_path):
     cache_dir = str(tmp_path / "qcache")
     idx = load_serving_index(spark, p)
     idf = collect_idf_map(idx.dictionary)
-    args = dict(cache_dir=cache_dir, chunk_bits=idx.chunk_bits,
-                bound_scales=serving_bound_scales(spark, p))
+    args = dict(cache_dir=cache_dir, chunk_bits=idx.chunk_bits)
 
     direct = wand_topk_local(
         f"{p}/postings_comp", QUERIES, idf, idx.avgdl, 5,
-        chunk_bits=idx.chunk_bits, bound_scales=args["bound_scales"],
+        chunk_bits=idx.chunk_bits,
     )
     first, s1 = cached_query_topk(p, QUERIES, idf, idx.avgdl, 5, **args)
     assert (s1["hits"], s1["misses"]) == (0, 3)
@@ -77,14 +73,13 @@ def test_cache_hit_identity_and_invalidation(spark, served, tmp_path):
     assert index_generation(p) != s1["generation"]
     idx2 = load_serving_index(spark, p)
     idf2 = collect_idf_map(idx2.dictionary)
-    scales2 = serving_bound_scales(spark, p)
     direct2 = wand_topk_local(
         f"{p}/postings_comp", QUERIES, idf2, idx2.avgdl, 5,
-        chunk_bits=idx2.chunk_bits, bound_scales=scales2,
+        chunk_bits=idx2.chunk_bits,
     )
     third, s4 = cached_query_topk(
         p, QUERIES, idf2, idx2.avgdl, 5, cache_dir=cache_dir,
-        chunk_bits=idx2.chunk_bits, bound_scales=scales2,
+        chunk_bits=idx2.chunk_bits,
     )
     assert (s4["hits"], s4["misses"]) == (0, 3)
     assert _rows(third) == _rows(direct2)
@@ -96,10 +91,9 @@ def test_cache_lru_cap(spark, served, tmp_path):
     cache_dir = str(tmp_path / "tiny")
     idx = load_serving_index(spark, p)
     idf = collect_idf_map(idx.dictionary)
-    scales = serving_bound_scales(spark, p)
     cached_query_topk(
         p, QUERIES, idf, idx.avgdl, 5, cache_dir=cache_dir,
-        chunk_bits=idx.chunk_bits, bound_scales=scales, max_entries=1,
+        chunk_bits=idx.chunk_bits, max_entries=1,
     )
     files = [f for f in os.listdir(cache_dir) if f.endswith(".parquet")]
     assert len(files) == 1

@@ -60,13 +60,9 @@ def test_stream_serving_index_equals_batch_build(spark, tmp_path):
     from themis_search_engine_spark.indexing import (
         build_and_save_serving,
         load_serving_index,
-        serving_bound_scales,
     )
     from themis_search_engine_spark.queryeng import qterms_df
-    from themis_search_engine_spark.queryeng.wand import (
-        wand_topk,
-        wand_topk_single,
-    )
+    from themis_search_engine_spark.queryeng.wand import wand_topk
     from themis_search_engine_spark.streaming import serve_pages_stream
 
     docs = load_documents(spark, SF_DIR).select("doc_id", "text")
@@ -103,10 +99,9 @@ def test_stream_serving_index_equals_batch_build(spark, tmp_path):
                    stem=False)
     got = sorted(
         (r["qid"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in wand_topk_single(
+        for r in wand_topk(
             qt, idx_s.compressed, idx_s.dictionary, idx_s.avgdl, k=10,
             chunk_bits=idx_s.chunk_bits,
-            bound_scales=serving_bound_scales(spark, live),
         ).collect()
     )
     want = sorted(

@@ -1,6 +1,6 @@
-"""Block-max WAND vs naive DataFrame BM25: identical top-k membership,
-ranks and scores (to float-sum tolerance), for the one-pass plan and the
-early-exit plans."""
+"""The slab-kernel plans vs naive DataFrame BM25: identical top-k
+membership, ranks and scores (to float-sum tolerance), for the
+DataFrame-input plan, the in-process plan and the sharded plan."""
 
 import os
 
@@ -96,11 +96,11 @@ def test_sharded_equals_bridge_plan(spark, tmp_path):
                 assert s1 == pytest.approx(s2, rel=1e-9)
 
 
-def test_local_equals_single_task_plan(spark, tmp_path):
+def test_local_equals_dataframe_plan(spark, tmp_path):
     """The in-process interactive path (wand_topk_local, zero Spark jobs)
-    must match the distributed single-task WAND plan row for row on the
+    must match the DataFrame-input plan row for row, bit for bit, on the
     same persisted index — including on a delta-merged (multi-segment)
-    layout with bound scales."""
+    layout, whose bound scales it accepts and ignores."""
     from themis_search_engine_spark.indexing import (
         build_and_save_serving,
         merge_serving_delta,
@@ -108,10 +108,7 @@ def test_local_equals_single_task_plan(spark, tmp_path):
     )
     from themis_search_engine_spark.queryeng.pipeline import query_term_map
     from themis_search_engine_spark.queryeng.sharded import collect_idf_map
-    from themis_search_engine_spark.queryeng.wand import (
-        wand_topk_local,
-        wand_topk_single,
-    )
+    from themis_search_engine_spark.queryeng.wand import wand_topk_local
 
     docs = load_documents(spark, "/root/testdata/sf0.001").select(
         "doc_id", "text"
@@ -124,10 +121,9 @@ def test_local_equals_single_task_plan(spark, tmp_path):
     scales = serving_bound_scales(spark, p)
 
     want = _by_qid(
-        wand_topk_single(
+        wand_topk(
             qterms_df(spark, QUERIES, stem=True), idx.compressed,
             idx.dictionary, idx.avgdl, k=10, chunk_bits=idx.chunk_bits,
-            bound_scales=scales,
         ).collect()
     )
     local = wand_topk_local(
@@ -139,11 +135,7 @@ def test_local_equals_single_task_plan(spark, tmp_path):
     for r in local.itertuples():
         got.setdefault(r.qid, []).append((r.rank, r.doc_id, r.score))
     got = {q: sorted(v) for q, v in got.items()}
-    assert set(got) == set(want)
-    for qid in want:
-        assert [x[1] for x in want[qid]] == [x[1] for x in got[qid]]
-        for (_, _, s1), (_, _, s2) in zip(want[qid], got[qid]):
-            assert s1 == pytest.approx(s2, rel=1e-9)
+    assert want and got == want
 
     # all-unknown-term batch: typed empty frame
     none = wand_topk_local(
@@ -256,157 +248,74 @@ def test_sharded_uri_route_equals_plain_path(spark, tmp_path):
     assert want and got == want
 
 
-def test_wand_equals_naive(spark, bundle):
-    idx, comp = bundle
-    qt = qterms_df(spark, QUERIES, stem=True)
-    naive = _by_qid(
-        bm25_topk(
-            qt, idx.postings_flat, idx.dictionary, idx.doc_stats, idx.avgdl, k=10
-        ).collect()
-    )
-    wand = _by_qid(
-        wand_topk(qt, comp, idx.dictionary, idx.avgdl, k=10).collect()
-    )
-    assert set(naive) == set(wand)
-    for qid in naive:
-        n, w = naive[qid], wand[qid]
-        assert [x[1] for x in n] == [x[1] for x in w], (qid, n, w)
-        for (_, _, s1), (_, _, s2) in zip(n, w):
-            assert s1 == pytest.approx(s2, rel=1e-9)
-
-
-def test_wand_pruning_skips_chunks(spark):
-    """With small chunks, the early-exit plan's chunk skipping must keep
-    the naive top-k on a single rare-term query."""
-    from themis_search_engine_spark.queryeng.wand import wand_topk_single
-
-    docs = load_documents(spark, "/root/testdata/sf0.001")
-    idx = build_index(docs, stem=True).cache()
-    comp = build_postings_compressed(
-        idx.counts, idx.doc_stats, idx.avgdl, chunk_bits=6
-    ).cache()
-    qt = qterms_df(spark, {3: "dup"}, stem=True)
-    res = wand_topk_single(
-        qt, comp, idx.dictionary, idx.avgdl, k=5, chunk_bits=6
-    ).collect()
-    naive = bm25_topk(
-        qt, idx.postings_flat, idx.dictionary, idx.doc_stats, idx.avgdl, k=5
-    ).collect()
-    assert sorted(r["doc_id"] for r in res) == sorted(r["doc_id"] for r in naive)
-
-
-def test_wand_single_equals_naive(spark, bundle):
-    """Single-task sequential WAND (one job per batch, early-exit θ loop)
-    is rank- and score-identical to naive BM25 — incl. the negative-idf
-    query (4: head terms) and the single-rare-term query (3)."""
-    from themis_search_engine_spark.queryeng.wand import wand_topk_single
-
-    idx, comp = bundle
-    qt = qterms_df(spark, QUERIES, stem=True)
-    naive = _by_qid(
-        bm25_topk(
-            qt, idx.postings_flat, idx.dictionary, idx.doc_stats, idx.avgdl,
-            k=10,
-        ).collect()
-    )
-    single = _by_qid(
-        wand_topk_single(qt, comp, idx.dictionary, idx.avgdl, k=10).collect()
-    )
-    assert set(naive) == set(single)
-    for qid in naive:
-        n, s = naive[qid], single[qid]
-        assert [x[1] for x in n] == [x[1] for x in s], (qid, n, s)
-        for (_, _, s1), (_, _, s2) in zip(n, s):
-            assert s1 == pytest.approx(s2, rel=1e-9)
-
-
-def test_wand_single_hot_serving_form(spark, bundle):
-    """The dict-form hot-serving path (driver-side {qid: terms} + RAM
-    idf_map, no dictionary join in the per-query job) is rank- AND
-    score-identical to the DataFrame form; unknown terms drop exactly like
-    a dictionary-join miss; dict form without idf_map fails loudly."""
+def test_wand_equals_naive(spark, bundle, tmp_path):
+    """Both kernel entry points (wand_topk on the DataFrame, wand_topk_local
+    on the same chunks written to disk) are rank- and score-identical to
+    naive BM25 at 2^16-doc chunks and at chunk_bits=6 (dozens of chunks
+    per term), for k below and above the candidate count — incl. the
+    negative-idf query (1, 4: head terms) and the single-rare-term
+    query (3)."""
     from themis_search_engine_spark.queryeng.pipeline import query_term_map
     from themis_search_engine_spark.queryeng.sharded import collect_idf_map
-    from themis_search_engine_spark.queryeng.wand import wand_topk_single
+    from themis_search_engine_spark.queryeng.wand import wand_topk_local
 
-    idx, comp = bundle
+    idx, comp16 = bundle
     qt = qterms_df(spark, QUERIES, stem=True)
-    df_form = _by_qid(
-        wand_topk_single(qt, comp, idx.dictionary, idx.avgdl, k=10).collect()
-    )
     qmap = query_term_map(QUERIES, stem=True)
-    qmap[max(qmap) + 1] = ["zzz_not_a_term"]  # vocabulary miss → no rows
     hot = collect_idf_map(idx.dictionary)
-    dict_form = _by_qid(
-        wand_topk_single(qmap, comp, None, idx.avgdl, k=10, idf_map=hot)
-        .collect()
-    )
-    assert set(df_form) == set(dict_form)
-    for qid in df_form:
-        assert [x[1] for x in df_form[qid]] == [x[1] for x in dict_form[qid]]
-        for (_, _, s1), (_, _, s2) in zip(df_form[qid], dict_form[qid]):
-            assert s1 == pytest.approx(s2, rel=1e-12)
-
-    # SINGLE-query dict form takes the join-free literal plan (qid lit +
-    # idf map-literal, no BroadcastExchange) — must stay rank/score-
-    # identical per query and contain no join node
-    for qid, terms in query_term_map(QUERIES, stem=True).items():
-        one = wand_topk_single(
-            {qid: terms}, comp, None, idx.avgdl, k=10, idf_map=hot
-        )
-        got = _by_qid(one.collect()).get(qid, [])
-        assert [x[1] for x in df_form.get(qid, [])] == [x[1] for x in got]
-        plan = one._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" not in plan
-
-    with pytest.raises(ValueError, match="idf_map"):
-        wand_topk_single(qmap, comp, None, idx.avgdl, k=10)
-
-
-def test_wand_single_many_chunks(spark):
-    """chunk_bits=6 → dozens of chunks per term: the θ early-exit must not
-    drop any true top-k member across chunk boundaries."""
-    from themis_search_engine_spark.queryeng.wand import wand_topk_single
-
-    docs = load_documents(spark, "/root/testdata/sf0.001")
-    idx = build_index(docs, stem=True).cache()
-    comp = build_postings_compressed(
+    comp6 = build_postings_compressed(
         idx.counts, idx.doc_stats, idx.avgdl, chunk_bits=6
     ).cache()
-    qt = qterms_df(spark, QUERIES, stem=True)
-    naive = _by_qid(
-        bm25_topk(
-            qt, idx.postings_flat, idx.dictionary, idx.doc_stats, idx.avgdl,
-            k=7,
-        ).collect()
-    )
-    single = _by_qid(
-        wand_topk_single(
-            qt, comp, idx.dictionary, idx.avgdl, k=7, chunk_bits=6
-        ).collect()
-    )
-    assert set(naive) == set(single)
-    for qid in naive:
-        assert [x[1] for x in naive[qid]] == [x[1] for x in single[qid]]
+    for cb, comp in ((16, comp16), (6, comp6)):
+        path = str(tmp_path / f"comp{cb}")
+        comp.write.parquet(path)
+        for k in (10, 7, 5):
+            naive = _by_qid(
+                bm25_topk(
+                    qt, idx.postings_flat, idx.dictionary, idx.doc_stats,
+                    idx.avgdl, k=k,
+                ).collect()
+            )
+            wand = _by_qid(
+                wand_topk(qt, comp, idx.dictionary, idx.avgdl, k=k,
+                          chunk_bits=cb).collect()
+            )
+            local = _by_qid(
+                wand_topk_local(path, qmap, hot, idx.avgdl, k=k,
+                                chunk_bits=cb).to_dict("records")
+            )
+            assert set(naive) == set(wand), (cb, k)
+            assert local == wand, (cb, k)
+            for qid in naive:
+                n, w = naive[qid], wand[qid]
+                assert [x[1] for x in n] == [x[1] for x in w], (cb, k, qid)
+                for (_, _, s1), (_, _, s2) in zip(n, w):
+                    assert s1 == pytest.approx(s2, rel=1e-9)
 
 
-def test_wand_pruned_negative_idf_many_chunks(spark):
+def test_wand_pruned_negative_idf_many_chunks(spark, tmp_path):
     """Regression: with all-negative idf (head terms, df > N/2) a doc
-    matching FEWER terms outscores the sum of per-term bounds; the naive
-    Σ-bounds ub under-estimated and the pruned plan skipped the chunk
-    holding the true best doc. Both forms of the early-exit plan (the
-    hot-serving literal plan and the DataFrame join plan) must survive
-    chunk_bits=6 on the negative-idf query."""
+    matching FEWER terms outscores the sum of per-term bounds; a naive
+    Σ-bounds ub once under-estimated and a pruned plan skipped the chunk
+    holding the true best doc. Both kernel entry points (the DataFrame
+    plan and the in-process plan fed a hot idf map) must keep the naive
+    top-k at chunk_bits=6 on the negative-idf query."""
     from themis_search_engine_spark.queryeng.pipeline import query_term_map
     from themis_search_engine_spark.queryeng.sharded import collect_idf_map
-    from themis_search_engine_spark.queryeng.wand import wand_topk_single
+    from themis_search_engine_spark.queryeng.wand import wand_topk_local
 
     docs = load_documents(spark, "/root/testdata/sf0.001")
     idx = build_index(docs, stem=True).cache()
     comp = build_postings_compressed(
         idx.counts, idx.doc_stats, idx.avgdl, chunk_bits=6
     ).cache()
+    path = str(tmp_path / "comp")
+    comp.write.parquet(path)
     qt = qterms_df(spark, {1: "spark shuffle join"}, stem=True)
+    qmap = query_term_map({1: "spark shuffle join"}, stem=True)
+    hot = collect_idf_map(idx.dictionary)
+    priced = [hot[t] for t in qmap[1] if t in hot]
+    assert priced and max(priced) < 0  # every priced term is a head term
     naive = sorted(
         (r["rank"], r["doc_id"])
         for r in bm25_topk(
@@ -414,34 +323,34 @@ def test_wand_pruned_negative_idf_many_chunks(spark):
             k=7,
         ).collect()
     )
-    pruned = sorted(
-        (r["rank"], r["doc_id"])
-        for r in wand_topk_single(
-            query_term_map({1: "spark shuffle join"}, stem=True), comp,
-            None, idx.avgdl, k=7, chunk_bits=6,
-            idf_map=collect_idf_map(idx.dictionary),
-        ).collect()
+    local = sorted(
+        (int(r.rank), int(r.doc_id))
+        for r in wand_topk_local(
+            path, qmap, hot, idx.avgdl, k=7, chunk_bits=6,
+        ).itertuples()
     )
-    single = sorted(
+    frame = sorted(
         (r["rank"], r["doc_id"])
-        for r in wand_topk_single(
+        for r in wand_topk(
             qt, comp, idx.dictionary, idx.avgdl, k=7, chunk_bits=6
         ).collect()
     )
-    assert naive == pruned == single
+    assert naive == local == frame
 
 
 def test_block_max_bounds_sound_at_float_grain(spark, tmp_path):
-    """The stored chunk bound must dominate every score THE SCORER
-    produces at the raw float grain: score_i = idf·core_i computed with
-    the encoder's association (core first, idf after). The other
-    association (idf·tf·… left-to-right) drifts ±1 ulp, which once let
-    the greedy early-exit skip a doc TYING the k-th place (1.2M-doc
-    shootout catch). Pinned bit-exactly here, per (term, chunk)."""
+    """The stored chunk bound must dominate every score THE KERNEL
+    (sharded.score_rows) produces at the raw float grain: score_i =
+    idf·core_i computed with the encoder's association (core first, idf
+    after). The other association (idf·tf·… left-to-right) drifts ±1
+    ulp, which once let an early-exit walk skip a doc TYING the k-th
+    place (1.2M-doc shootout catch). Pinned bit-exactly here, per
+    (term, chunk)."""
     import numpy as np
+    import pyarrow as pa
 
     from themis_search_engine_spark.indexing import build_and_save_serving
-    from themis_search_engine_spark.queryeng.wand import _score_chunk_rows
+    from themis_search_engine_spark.queryeng.sharded import score_rows
 
     docs = load_documents(spark, "/root/testdata/sf0.001").select(
         "doc_id", "text"
@@ -450,26 +359,26 @@ def test_block_max_bounds_sound_at_float_grain(spark, tmp_path):
     idx = build_and_save_serving(docs, p, stem=True, chunk_bits=5,
                                  partitions=4)
     idf = {r["term"]: float(r["idf"]) for r in idx.dictionary.collect()}
+    cols = ["term", "chunk", "df_chunk", "doc_bytes", "cnt_bytes",
+            "mc_bytes", "dl_bytes"]
     rows = idx.compressed.collect()
     checked = 0
     for r in rows[:400]:
         w = idf[r["term"]]
-        pdf = pd.DataFrame([{
-            "term": r["term"], "idf": w, "chunk": r["chunk"],
-            "doc_bytes": r["doc_bytes"], "cnt_bytes": r["cnt_bytes"],
-            "mc_bytes": r["mc_bytes"], "dl_bytes": r["dl_bytes"],
-        }])
-        offs, sc = _score_chunk_rows(pdf, 1 << 5, idx.avgdl)
+        tbl = pa.table({c: [r[c]] for c in cols})
+        blob = score_rows(tbl, r["chunk"], {r["term"]: frozenset({1})},
+                          {r["term"]: w}, 1 << 5, idx.avgdl, 5)
+        sc = np.frombuffer(blob[2], dtype=np.float64)
+        assert len(sc) == r["df_chunk"]
         bound = max(w * r["core_max"], w * r["core_min"])
         assert sc.max() <= bound, (r["term"], r["chunk"], sc.max(), bound)
         # single-term scores: the max must EQUAL the bound bit-for-bit
         # (same floats through the same ops) — inequality would mean the
-        # scorer and encoder associations diverged again
+        # kernel and encoder associations diverged again
         if w > 0:
             assert sc.max() == bound
         checked += 1
     assert checked > 100
-
 
 
 def test_sharded_rejects_zero_df_chunk(tmp_path):
@@ -508,3 +417,79 @@ def test_sharded_rejects_zero_df_chunk(tmp_path):
     bad = write(str(tmp_path / "bad"), [])
     with pytest.raises(ValueError, match="df_chunk=0"):
         _score_shard(bad, (0, 1), *args)
+
+
+@pytest.mark.parametrize("chunk_bits", [4, None])
+def test_multi_window_rank_identity(spark, tmp_path, chunk_bits):
+    """Doc ids i * 40_000 spread 16 docs over ~10 kernel windows of 2^16
+    doc cells, at chunk_bits=4 and at the auto layout: every plan
+    (wand_topk, wand_topk_local, search_serving local and sharded) must
+    rank exactly like bm25_topk. ``common`` sits in 12 of 16 docs, so
+    its idf is negative; query 2 has only that term."""
+    from themis_search_engine_spark.indexing import build_and_save_serving
+    from themis_search_engine_spark.queryeng.pipeline import query_term_map
+    from themis_search_engine_spark.queryeng.planner import search_serving
+    from themis_search_engine_spark.queryeng.sharded import collect_idf_map
+    from themis_search_engine_spark.queryeng.wand import wand_topk_local
+
+    def text(i):
+        words = ["alpha"] * (i % 5 + 1) if i % 3 == 0 else []
+        words += ["common"] if i % 4 else []
+        words += ["beta"] if i % 5 == 0 else []
+        return " ".join(words + ["filler"] * (i + 1))
+
+    docs = spark.createDataFrame(
+        [(i * 40_000, text(i)) for i in range(16)], "doc_id long, text string"
+    )
+    p = str(tmp_path / "idx")
+    idx = build_and_save_serving(docs, p, stem=False, chunk_bits=chunk_bits,
+                                 partitions=2)
+    assert idx.max_doc_id >> 16 >= 9  # the ids span many kernel windows
+    queries = {1: "alpha", 2: "common", 3: "alpha common beta",
+               4: "beta zzz", 5: "filler alpha"}
+    qt = qterms_df(spark, queries, stem=False)
+    qmap = query_term_map(queries, stem=False)
+    idf = collect_idf_map(idx.dictionary)
+    assert idf["common"] < 0
+    k = 5
+
+    def ranked(rows):
+        return {q: [d for _, d, _ in v] for q, v in _by_qid(rows).items()}
+
+    want = ranked(bm25_topk(qt, idx.postings_flat, idx.dictionary,
+                            idx.doc_stats, idx.avgdl, k=k).collect())
+    assert set(want) == {1, 2, 3, 4, 5}
+    plans = {
+        "wand_topk": wand_topk(qt, idx.compressed, idx.dictionary,
+                               idx.avgdl, k=k,
+                               chunk_bits=idx.chunk_bits).collect(),
+        "local": wand_topk_local(f"{p}/postings_comp", qmap, idf, idx.avgdl,
+                                 k, chunk_bits=idx.chunk_bits)
+        .to_dict("records"),
+        **{
+            f"serving_{plan}": search_serving(spark, p, qmap, k,
+                                              plan=plan).collect()
+            for plan in ("local", "sharded")
+        },
+    }
+    for name, rows in plans.items():
+        assert ranked(rows) == want, name
+
+
+def test_chunk_bits_is_required():
+    """chunk_bits maps chunk offsets back to doc ids, so a defaulted value
+    silently returned wrong ids on any other layout: every kernel entry
+    point refuses a call that omits it."""
+    from themis_search_engine_spark.queryeng.cache import cached_query_topk
+    from themis_search_engine_spark.queryeng.sharded import wand_topk_sharded
+    from themis_search_engine_spark.queryeng.wand import wand_topk_local
+
+    calls = [
+        lambda: wand_topk(None, None, None, 1.0, 10),
+        lambda: wand_topk_local("p", {}, {}, 1.0, 10),
+        lambda: wand_topk_sharded(None, "p", {}, None, 1.0, 0, 10),
+        lambda: cached_query_topk("p", {}, {}, 1.0, 10, cache_dir="c"),
+    ]
+    for call in calls:
+        with pytest.raises(TypeError, match="chunk_bits"):
+            call()

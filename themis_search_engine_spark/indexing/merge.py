@@ -14,8 +14,8 @@ chunked serving layout of :func:`build_and_save_serving`:
   never O(base postings).
 - a (term, chunk) group may now exist as several FRAGMENTS (one per
   segment). Every consumer is fragment-tolerant by construction: the
-  WAND chunk scorer scatter-adds all rows of a (qid, chunk) group
-  (queryeng/wand.py:_score_chunk_rows) and segments hold disjoint doc
+  scoring kernel scatter-adds every row of a chunk
+  (queryeng/sharded.py:score_rows) and segments hold disjoint doc
   sets, so fragment accumulation is exact; df_chunk sums across
   fragments for the dictionary.
 - global stats change on every merge (N, avgdl), so dictionary idf and
@@ -28,15 +28,15 @@ chunked serving layout of :func:`build_and_save_serving`:
       core(a)  <=  core(a')  <=  core(a) · a'/a
   (the upper factor because num/den both shift by the same additive
   term; see tests/test_merge.py soundness case). So a reader scoring at
-  avgdl_cur against a chunk encoded at avgdl_enc keeps WAND pruning
+  avgdl_cur against a chunk encoded at avgdl_enc keeps the bounds
   sound by scaling:
       core_max · max(1, avgdl_cur/avgdl_enc)   (upper bounds, idf > 0)
       core_min · min(1, avgdl_cur/avgdl_enc)   (the negative-idf bound)
   The layout persists min/max encode-time avgdl across segments in
-  global_stats; ServingIndex derives the two conservative scales and the
-  pruning plans (wand_topk_single / wand_topk_local) apply them
-  (bound_scales=). Scales only loosen pruning —
-  never scores — and are 1.0 for a freshly built (single-segment) index.
+  global_stats; ServingIndex derives the two conservative scales
+  (bound_scales). No query plan reads them today: the kernel skips no
+  chunk. They keep the stored bounds checkable, never change scores,
+  and are 1.0 for a freshly built (single-segment) index.
 - rank identity with a full rebuild is exact, not approximate: total
   token length is persisted as a LONG (total_len), so the merged
   avgdl = (total_base + total_delta)/(N_base + N_delta) is the same IEEE
@@ -113,8 +113,8 @@ def _base_totals(spark: SparkSession, path: str) -> dict:
 def serving_bound_scales(spark: SparkSession, path: str) -> tuple[float, float]:
     """(hi, lo) pruning-soundness scales for the index at ``path``: the
     most conservative correction across all segments' encode-time avgdl
-    (1.0, 1.0 for a single-segment index). Pass as ``bound_scales=`` to
-    wand_topk_single / wand_topk_local."""
+    (1.0, 1.0 for a single-segment index): the factors that keep the
+    stored core_min/core_max bounds sound at the current avgdl."""
     return _scales_from(_base_totals(spark, path))
 
 

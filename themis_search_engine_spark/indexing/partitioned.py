@@ -192,8 +192,7 @@ def load_partitioned_serving(
     tables (excluded partitions contribute zero I/O — this IS the filter);
     dictionary/avgdl are the global ones, so scores match the semi-join
     filtered plan exactly. bound_scales cover the selected parts' encode
-    avgdls per the merge-path soundness rule, for callers that run a
-    pruning plan (queryeng.wand.wand_topk_single) over the subset.
+    avgdls per the merge-path soundness rule (indexing/merge.py).
     """
     with open(f"{path}/parts.json") as fh:
         manifest = json.load(fh)
@@ -235,7 +234,7 @@ def wand_topk_partitioned(
     *,
     term_list: list[str] | None = None,
 ) -> DataFrame:
-    """Filtered block-max WAND: top-k over only the docs whose attribute
+    """Filtered BM25 top-k: top-k over only the docs whose attribute
     is in ``values`` — the filter is partition pruning, not a join.
     Scores are identical to metadata.bm25_topk_filtered with the
     equivalent IN-predicate (global df/idf/avgdl)."""

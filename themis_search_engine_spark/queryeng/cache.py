@@ -38,7 +38,6 @@ import os
 
 import pandas as pd
 
-from ..indexing.compress import DEFAULT_CHUNK_BITS
 from .wand import wand_topk_local
 
 _EMPTY = pd.DataFrame(
@@ -98,8 +97,7 @@ def cached_query_topk(
     k: int = 10,
     *,
     cache_dir: str,
-    chunk_bits: int = DEFAULT_CHUNK_BITS,
-    bound_scales: tuple[float, float] = (1.0, 1.0),
+    chunk_bits: int,
     max_entries: int = 4096,
 ) -> tuple[pd.DataFrame, dict]:
     """wand_topk_local fronted by the results cache. Returns
@@ -125,7 +123,7 @@ def cached_query_topk(
     if missed:
         fresh = wand_topk_local(
             f"{serving_path}/postings_comp", missed, idf_map, avgdl, k,
-            chunk_bits=chunk_bits, bound_scales=bound_scales,
+            chunk_bits=chunk_bits,
         )
         for qid in missed:
             rows = fresh[fresh["qid"] == qid].drop(columns=["qid"])

@@ -1,21 +1,20 @@
 """Physical plan selection for serving queries.
 
 The engine serves BM25 top-k over a persisted compressed index with TWO
-rank-identical physical plans, both running the same slab kernel
-(:func:`~themis_search_engine_spark.queryeng.sharded._score_shard`);
+rank-identical physical plans, both running the one slab kernel
+(:func:`~themis_search_engine_spark.queryeng.sharded.score_rows`);
 PLANS.md records each shape:
 
-* ``local``   — the kernel in the driver process over every chunk of the
-  index: no Spark job before, during or after the query.
+* ``local``   — :func:`~themis_search_engine_spark.queryeng.wand.wand_topk_local`:
+  the kernel in the driver process over every chunk of the index, no
+  Spark job before, during or after the query.
 * ``sharded`` — :func:`~themis_search_engine_spark.queryeng.sharded.wand_topk_sharded`:
   one Spark job, one task per doc-range shard, per-shard top-k merged on
   the driver.
 
 Inputs with no persisted layout (``build_index`` output, federated and
 partitioned legs) call :func:`~themis_search_engine_spark.queryeng.wand.wand_topk`
-directly; it is not a serving plan. Neither is the per-row early-exit
-kernel :func:`~themis_search_engine_spark.queryeng.wand.wand_topk_local`,
-which callers holding their own hot state may call directly.
+directly; it runs the same kernel but is not a serving plan.
 
 Volume rule. The kernel decodes each (term, chunk) row once per batch,
 so its work is the batch's DECODE VOLUME: Σ df over the batch's distinct
@@ -161,10 +160,8 @@ def search_serving(
     an Arrow-built driver-local frame.
     """
     from ..indexing.merge import _base_totals
-    from .sharded import (
-        _score_shard, batch_terms, merge_topk, result_frame,
-        wand_topk_sharded,
-    )
+    from .sharded import result_frame, wand_topk_sharded
+    from .wand import wand_topk_local
 
     if plan is not None and plan not in PLANS:
         raise ValueError(f"unknown plan {plan!r}; have {PLANS}")
@@ -182,14 +179,9 @@ def search_serving(
             spark, comp_path, queries, None, avgdl, g["max_doc_id"], k,
             chunk_bits=cb, idf_map=idf,
         )
-    by_term = batch_terms(queries, idf)
-    n_chunks = (max(g["max_doc_id"], 0) >> cb) + 1
-    blob = (
-        _score_shard(comp_path, (0, n_chunks), tuple(sorted(by_term)),
-                     by_term, idf, k, avgdl, cb)
-        if by_term else None
-    )
-    return result_frame(spark, merge_topk([blob], k))
+    return result_frame(spark, wand_topk_local(
+        comp_path, queries, idf, avgdl, k, chunk_bits=cb,
+    ))
 
 
 def _price_terms(path: str, vocab: set[str]) -> dict[str, tuple[int, float]]:

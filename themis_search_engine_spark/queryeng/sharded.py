@@ -2,18 +2,16 @@
 CHUNKS of the persisted compressed index, posting bytes never crossing
 the JVM↔Python row bridge.
 
-Why this plan exists (measured, BASELINE.md): the applyInPandas batch plan
-(queryeng/wand.py wand_topk) ships every matched compressed chunk row
-through Spark's JVM→Python grouped-map bridge — ~120 MB/s aggregate on
-this box and barely scaling with cores — and, because the qterms join
-duplicates chunk rows per query, a head-term chunk row is re-shipped and
-re-decoded once PER QUERY that matches it. At a 1000-query saturation
-batch both costs dominate the query stage: on the 1.2M-doc scaling
-workload this plan serves 134 q/s at 8 cores vs the bridge plan's 56 —
-2.4× — with identical results. It is the same cure `compress_files`
-applied to the build: Spark stays the scheduler/retry layer
-(``sc.parallelize(shards).flatMap``) while each task reads the index
-files directly with the pyarrow C++ reader and scores in numpy.
+Why this plan exists (measured, BASELINE.md): the earlier bridge plan
+(wand_topk grouped per (qid, chunk) through applyInPandas) shipped every
+matched compressed chunk row through Spark's JVM→Python grouped-map
+bridge — ~120 MB/s aggregate and barely scaling with cores — once PER
+QUERY that matched it. On the 1.2M-doc scaling workload this plan served
+134 q/s at 8 cores vs the bridge plan's 56, with identical results. It
+is the same cure `compress_files` applied to the build: Spark stays the
+scheduler/retry layer (``sc.parallelize(shards).map``) while each task
+reads the index files directly with the pyarrow C++ reader and scores
+in numpy.
 
 Physical design (the classic document-partitioned serving tier — each
 shard answers the whole batch over its doc range, only top-k rows travel):
@@ -39,27 +37,18 @@ shard answers the whole batch over its doc range, only top-k rows travel):
             the shard's chunks), ≤ shards × queries × k tiny rows; the
             global top-k is a single window over that.
 
-The same kernel also runs WITHOUT Spark: planner.search_serving's
-``local`` plan calls :func:`_score_shard` in the driver over the whole
-chunk range ``[0, n_chunks)`` when the batch's decode volume is below
-the measured crossover (SERVE_CROSSOVER.json). Both plans finish
-through :func:`merge_topk` and :func:`result_frame`, so their results
-are the same rows in the same frame shape.
+The kernel is split in two: :func:`_score_shard` reads a chunk range
+with pyarrow and :func:`score_rows` scores any ``pyarrow.Table`` of
+postings_comp rows. Every BM25 top-k plan runs :func:`score_rows`: the
+shard tasks here, ``wand.wand_topk_local`` in-process over every chunk
+(planner.search_serving's ``local`` plan), and ``wand.wand_topk`` once
+per kernel window of a DataFrame input. The plans finish through
+:func:`merge_topk` (or a rank window over the per-window top-k), so
+their results are the same rows.
 
-Decode batching was measured both ways and per-ROW decode wins at the
-default chunk_bits=16: rows average >1k postings, so vb_decode's numpy
-fixed cost is already amortized, while concatenating a whole chunk's
-bytes into one call blows the decode working set past cache (113 q/s
-batched vs 134 per-row at 8 cores; whole-table concatenation is 20×
-worse still). Keep rows big (chunk_bits) rather than batching decode.
-
-Accumulation per (qid, chunk) runs in ascending-term order — the same
-order as wand.py's _score_chunk_rows — so scores match the bridge plan
-to float-sum dust (~1e-15: the idf·core multiply associates differently;
-ranks are identical at the rounded grain, asserted in tests/
-test_wand.py), and fragment rows from delta-merged segments
-(indexing/merge.py) accumulate per fragment exactly like the
-scatter-add scorer.
+Accumulation per (qid, doc) runs in ascending-term order, and fragment
+rows from delta-merged segments (indexing/merge.py) hold disjoint docs,
+so every plan's scores are bit-identical.
 
 Storage routing: ``comp_path`` resolves through ``pyarrow.fs`` inside
 every task (``indexing.compress._resolve_fs``), so an s3://-style URI
@@ -81,15 +70,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..indexing.compress import DEFAULT_CHUNK_BITS
-
 _OUT_SCHEMA = "qid int, doc_id long, score double"
 RESULT_SCHEMA = _OUT_SCHEMA + ", rank int"
 
 
+def window_chunks(chunk_bits: int) -> int:
+    """Chunks per kernel window: :func:`score_rows` accumulates up to
+    2^16 doc cells (the proven chunk_bits=16 working point) per round."""
+    return max(1, (1 << 16) >> chunk_bits)
+
+
 def _score_shard(
     comp_path: str,
-    chunks: tuple[int, int],
+    chunks: tuple[int, int] | None,
     vocab: tuple,
     by_term: dict,
     idf: dict,
@@ -97,16 +90,55 @@ def _score_shard(
     avgdl: float,
     chunk_bits: int,
 ):
-    """Score this shard's chunk range [lo, hi) against the whole query
-    batch; return the shard's exact top-k per query, packed as three flat
-    numpy buffers (or None if nothing matched).
+    """Read the ``vocab`` rows of chunk range [lo, hi) (every chunk when
+    ``chunks`` is None) and score them with :func:`score_rows` — one
+    doc-range shard of :func:`wand_topk_sharded`, or the whole index for
+    ``wand.wand_topk_local``.
+
+    Storage: ``comp_path`` resolves through ``pyarrow.fs`` INSIDE the
+    task (``_resolve_fs`` — same routing as the build's compress_files),
+    so an object-store/shared-FS URI (s3://, hdfs://, file://) works from
+    any executor; only the path string travels in the closure."""
+    import pyarrow.parquet as pq
+
+    from ..indexing.compress import _resolve_fs
+
+    fs, local_p = _resolve_fs(comp_path)
+    filters = [("term", "in", list(vocab))]
+    if chunks is not None:
+        filters += [("chunk", ">=", chunks[0]), ("chunk", "<", chunks[1])]
+    tbl = pq.read_table(
+        local_p,
+        filesystem=fs,
+        columns=["term", "chunk", "df_chunk", "doc_bytes", "cnt_bytes",
+                 "mc_bytes", "dl_bytes"],
+        filters=filters,
+    )
+    lo = 0 if chunks is None else chunks[0]
+    return score_rows(tbl, lo, by_term, idf, k, avgdl, chunk_bits)
+
+
+def score_rows(
+    tbl,
+    lo: int,
+    by_term: dict,
+    idf: dict,
+    k: int,
+    avgdl: float,
+    chunk_bits: int,
+):
+    """Score a ``pyarrow.Table`` of postings_comp rows (chunks >= ``lo``)
+    against a query batch; return the exact top-k per query, packed as
+    three flat numpy buffers (or None if nothing matched). ``by_term``:
+    term → qids (:func:`batch_terms`); ``idf``: term → idf. Every BM25
+    top-k plan runs this one kernel.
 
     Kernel shape (r5 — replaced the per-row decode + per-(qid, term)
     dict-lookup loop, whose interpreter overhead made a chunk_bits=13
     layout cost 3.2× the total CPU of chunk_bits=16 for identical
     results, profiled in scripts/profile_shard.py):
 
-    - decode: the shard's four varbyte streams decode in FOUR vb_decode
+    - decode: the table's four varbyte streams decode in FOUR vb_decode
       calls total (row buffers concatenated; ``df_chunk`` supplies the
       per-row value counts to split them back) and doc offsets come from
       one segmented cumsum — numpy fixed cost no longer scales with the
@@ -120,40 +152,20 @@ def _score_shard(
       layouts). Touched cells are re-zeroed from the seen mask after
       each chunk's extraction, so the arrays are allocated once.
 
-    Float identity: within one (qid, doc) cell the adds still land in
+    Float identity: within one (qid, doc) cell the adds land in
     ascending-term order (the table sort), fragment rows of delta-merged
-    segments in row order, with identical elementwise core arithmetic —
-    scores are bit-for-bit those of the r4 kernel, which tests pin
-    against the bridge plan.
+    segments in row order; the core is computed exactly as the encoder
+    does (compress.bm25_core) and THEN multiplied by idf, so for idf > 0
+    a score never exceeds idf·core_max, the stored chunk bound, at the
+    float grain (tests/test_wand.py pins it bit-exactly)."""
+    from ..indexing.compress import vb_decode
+    from .bm25 import B, K1
 
-    Storage: ``comp_path`` resolves through ``pyarrow.fs`` INSIDE the
-    task (``_resolve_fs`` — same routing as the build's compress_files),
-    so an object-store/shared-FS URI (s3://, hdfs://, file://) works from
-    any executor; only the path string travels in the closure."""
-    import pyarrow.parquet as pq
-
-    from ..indexing.compress import _resolve_fs, vb_decode
-    from .wand import B, K1
-
-    fs, local_p = _resolve_fs(comp_path)
-    lo, hi = chunks
-    tbl = pq.read_table(
-        local_p,
-        filesystem=fs,
-        columns=["term", "chunk", "df_chunk", "doc_bytes", "cnt_bytes",
-                 "mc_bytes", "dl_bytes"],
-        filters=[
-            ("term", "in", list(vocab)),
-            ("chunk", ">=", lo),
-            ("chunk", "<", hi),
-        ],
-    )
     if tbl.num_rows == 0:
         return None
     # chunk-major processing order; ascending term within a chunk (and
     # original row order within a term — fragment rows of delta-merged
-    # segments) keeps float accumulation order identical to
-    # wand._score_chunk_rows
+    # segments) fixes the float accumulation order
     tbl = tbl.sort_by([("chunk", "ascending"), ("term", "ascending")])
     chunk_col = tbl["chunk"].to_numpy(zero_copy_only=False)
     term_col = tbl["term"].to_pylist()
@@ -164,7 +176,7 @@ def _score_shard(
         # row's doc ids without an error
         bad = int(np.argmax(df_col < 1))
         raise ValueError(
-            f"corrupt postings_comp at {comp_path}: df_chunk="
+            "corrupt postings_comp: df_chunk="
             f"{int(df_col[bad])} < 1 for term {term_col[bad]!r} chunk "
             f"{int(chunk_col[bad])}"
         )
@@ -246,7 +258,7 @@ def _score_shard(
     # round instead of paying the per-(qid, chunk) extraction 2^(16-cb)
     # times — doc cells are disjoint across chunks, so per-cell add order
     # (ascending term within the owning chunk) is unchanged
-    wchunks = max(1, (1 << 16) >> chunk_bits)
+    wchunks = window_chunks(chunk_bits)
     span = wchunks << chunk_bits
     blk = max(1, min(len(all_qids), (64 << 20) // (span * 9)))
     acc = np.zeros((blk, span), dtype=np.float64)
@@ -430,7 +442,7 @@ def wand_topk_sharded(
     max_doc_id: int,
     k: int = 10,
     *,
-    chunk_bits: int = DEFAULT_CHUNK_BITS,
+    chunk_bits: int,
     n_shards: int | None = None,
     idf_map: dict[str, float] | None = None,
     driver_merge_limit: int = 2_000_000,

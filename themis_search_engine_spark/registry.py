@@ -185,13 +185,15 @@ def q_postings_roundtrip(spark, sf_dir):
 def q_bm25_topk_wand(spark, sf_dir):
     """Block-max WAND over compressed chunks; must equal the naive top-k
     oracle (score everything, sort, take k)."""
+    from .indexing.compress import DEFAULT_CHUNK_BITS
     from .queryeng.wand import wand_topk
 
     idx = get_index(spark, sf_dir)
     comp = get_compressed(spark, sf_dir)
     # over-fetch (k*3) at raw-score granularity, then final rounded ranking
     wide = wand_topk(
-        _qt(spark, stem=False), comp, idx.dictionary, idx.avgdl, k=30
+        _qt(spark, stem=False), comp, idx.dictionary, idx.avgdl, k=30,
+        chunk_bits=DEFAULT_CHUNK_BITS,
     )
     return _rounded_rank_topk(wide.select("qid", "doc_id", "score"), 10)
 
@@ -201,26 +203,32 @@ def q_bm25_topk_wand_batch(spark, sf_dir):
     streaming sorted-partition compressor
     (compress.build_postings_compressed_sorted) — the serving-path physical
     plan of scripts/scaling_workload.py, against the same naive SQL oracle."""
-    from .indexing.compress import build_postings_compressed_sorted
+    from .indexing.compress import (
+        DEFAULT_CHUNK_BITS,
+        build_postings_compressed_sorted,
+    )
     from .queryeng.wand import wand_topk
 
     idx = get_index(spark, sf_dir)
     comp = build_postings_compressed_sorted(idx.counts, idx.doc_stats, idx.avgdl)
     wide = wand_topk(
-        _qt(spark, stem=False), comp, idx.dictionary, idx.avgdl, k=30
+        _qt(spark, stem=False), comp, idx.dictionary, idx.avgdl, k=30,
+        chunk_bits=DEFAULT_CHUNK_BITS,
     )
     return _rounded_rank_topk(wide.select("qid", "doc_id", "score"), 10)
 
 
-def q_bm25_topk_wand_single(spark, sf_dir):
-    """Single-task sequential block-max WAND (the latency plan: one job,
-    early-exit θ loop per query) against the same naive top-k oracle."""
-    from .queryeng.wand import wand_topk_single
+def q_bm25_topk_serving(spark, sf_dir):
+    """The serving facade end-to-end (queryeng/planner.search_serving:
+    pyarrow dictionary pricing, volume-based plan choice, the slab
+    kernel) over the persisted full-corpus serving index, against the
+    same naive top-k oracle."""
+    from .queryeng.pipeline import query_term_map
+    from .queryeng.planner import search_serving
 
-    idx = get_index(spark, sf_dir)
-    comp = get_compressed(spark, sf_dir)
-    wide = wand_topk_single(
-        _qt(spark, stem=False), comp, idx.dictionary, idx.avgdl, k=30
+    _, p = _serving_bundle(spark, sf_dir)
+    wide = search_serving(
+        spark, p, query_term_map(osql.QUERYSET, stem=False), k=30
     )
     return _rounded_rank_topk(wide.select("qid", "doc_id", "score"), 10)
 
@@ -233,7 +241,7 @@ def _delta_merged_bundle(spark, sf_dir):
     shared by the delta-merge and compaction queries (compaction copies
     the directory before rewriting, so this bundle stays valid)."""
     from .indexing.build import build_and_save_serving
-    from .indexing.merge import merge_serving_delta, serving_bound_scales
+    from .indexing.merge import merge_serving_delta
 
     if sf_dir not in _MCACHE:
         docs = load_documents(spark, sf_dir).select("doc_id", "text")
@@ -247,7 +255,7 @@ def _delta_merged_bundle(spark, sf_dir):
         idx = merge_serving_delta(
             spark, p, docs.where("doc_id % 2 = 1"), stem=False, partitions=16
         )
-        _MCACHE[sf_dir] = (idx, serving_bound_scales(spark, p), p)
+        _MCACHE[sf_dir] = (idx, p)
     return _MCACHE[sf_dir]
 
 
@@ -256,14 +264,13 @@ def q_delta_merge_topk(spark, sf_dir):
     index built over the even-doc_id half, delta-merged with the odd half,
     must produce BM25 top-k rank-identical to the full-corpus oracle (same
     naive SQL twin as bm25_topk_wand). Exercises fragment accumulation in
-    the WAND scorer and the stale-bound scales of multi-segment pruning
-    (the early-exit plan, wand_topk_single)."""
-    from .queryeng.wand import wand_topk_single
+    the slab kernel (wand_topk)."""
+    from .queryeng.wand import wand_topk
 
-    idx, scales, _ = _delta_merged_bundle(spark, sf_dir)
-    wide = wand_topk_single(
+    idx, _ = _delta_merged_bundle(spark, sf_dir)
+    wide = wand_topk(
         _qt(spark, stem=False), idx.compressed, idx.dictionary, idx.avgdl,
-        k=30, chunk_bits=idx.chunk_bits, bound_scales=scales,
+        k=30, chunk_bits=idx.chunk_bits,
     )
     return _rounded_rank_topk(wide.select("qid", "doc_id", "score"), 10)
 
@@ -284,7 +291,7 @@ def q_compacted_topk(spark, sf_dir):
     from .queryeng.wand import wand_topk
 
     if sf_dir not in _COMPACT_CACHE:
-        _, _, src = _delta_merged_bundle(spark, sf_dir)
+        _, src = _delta_merged_bundle(spark, sf_dir)
         p = scratch_dir("themis_compact_") + "/idx"
         shutil.copytree(src, p)
         idx = compact_serving_index(spark, p, partitions=16)
@@ -311,7 +318,7 @@ def _tombstoned_bundle(spark, sf_dir):
     from .indexing.merge import delete_serving_docs, load_tombstones
 
     if sf_dir not in _TOMBSTONE_CACHE:
-        _, _, src = _delta_merged_bundle(spark, sf_dir)
+        _, src = _delta_merged_bundle(spark, sf_dir)
         p = scratch_dir("themis_tombstone_") + "/idx"
         shutil.copytree(src, p)
         ids = load_documents(spark, sf_dir).select("doc_id").where(
@@ -506,9 +513,9 @@ def q_bm25_topk_wand_sharded(spark, sf_dir):
 
 
 def q_bm25_topk_wand_local(spark, sf_dir):
-    """In-process interactive WAND (queryeng/wand.wand_topk_local — zero
-    Spark jobs per query, pyarrow term-pruned read + the single-task
-    plan's exact kernel) against the same naive top-k oracle. The pandas
+    """In-process interactive serving (queryeng/wand.wand_topk_local — zero
+    Spark jobs per query, pyarrow term-pruned read + the slab kernel)
+    against the same naive top-k oracle. The pandas
     result is lifted into a DataFrame only for the driver compare."""
     from .queryeng.pipeline import query_term_map
     from .queryeng.sharded import collect_idf_map
@@ -562,7 +569,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "postings_roundtrip": q_postings_roundtrip,
     "bm25_topk_wand": q_bm25_topk_wand,
     "bm25_topk_wand_batch": q_bm25_topk_wand_batch,
-    "bm25_topk_wand_single": q_bm25_topk_wand_single,
+    "bm25_topk_serving": q_bm25_topk_serving,
     "bm25_topk_wand_sharded": q_bm25_topk_wand_sharded,
     "bm25_topk_wand_local": q_bm25_topk_wand_local,
     "delta_merge_topk": q_delta_merge_topk,
@@ -588,7 +595,7 @@ ORACLE_SQL: dict[str, str] = {
     "postings_roundtrip": osql.sql_tf_maxnorm(),
     "bm25_topk_wand": osql.sql_bm25_topk(10),
     "bm25_topk_wand_batch": osql.sql_bm25_topk(10),
-    "bm25_topk_wand_single": osql.sql_bm25_topk(10),
+    "bm25_topk_serving": osql.sql_bm25_topk(10),
     "bm25_topk_wand_sharded": osql.sql_bm25_topk(10),
     "bm25_topk_wand_local": osql.sql_bm25_topk(10),
     "delta_merge_topk": osql.sql_bm25_topk(10),
@@ -2063,6 +2070,7 @@ def q_routed_topk(spark, sf_dir):
     naive SQL oracle, so the union must hash-match sql_bm25_topk
     unchanged — the correctness claim of plan routing is precisely that
     it is invisible in results."""
+    from .indexing.compress import DEFAULT_CHUNK_BITS
     from .queryeng.qpp import query_difficulty, route_by_difficulty
     from .queryeng.wand import wand_topk
 
@@ -2084,7 +2092,7 @@ def q_routed_topk(spark, sf_dir):
         comp = get_compressed(spark, sf_dir)
         wide = wand_topk(
             qt.where(F.col("qid").isin(hard)), comp, idx.dictionary,
-            idx.avgdl, k=30,
+            idx.avgdl, k=30, chunk_bits=DEFAULT_CHUNK_BITS,
         )
         legs.append(
             _rounded_rank_topk(wide.select("qid", "doc_id", "score"), 10)
@@ -2233,11 +2241,10 @@ def q_snapshot_pinned_topk(spark, sf_dir):
     generation), then a SECOND delta of %4==3 lands AFTER the pin — the
     pinned reader must rank exactly as a fresh build over the corpus
     WITHOUT the later delta (oracle: corpus_where doc_id%4<>3). Proves
-    the reader is immune to commits that land after its pin. Scored by
-    the early-exit plan with the pin's bound scales."""
+    the reader is immune to commits that land after its pin."""
     from .indexing.build import build_and_save_serving
     from .indexing.merge import merge_serving_delta, pin_serving_snapshot
-    from .queryeng.wand import wand_topk_single
+    from .queryeng.wand import wand_topk
 
     if sf_dir not in _PIN_CACHE:
         docs = load_documents(spark, sf_dir).select("doc_id", "text")
@@ -2254,10 +2261,9 @@ def q_snapshot_pinned_topk(spark, sf_dir):
         )
         _PIN_CACHE[sf_dir] = (snap,)
     (snap,) = _PIN_CACHE[sf_dir]
-    wide = wand_topk_single(
+    wide = wand_topk(
         _qt(spark, stem=False), snap.compressed, snap.dictionary,
         snap.avgdl, k=30, chunk_bits=snap.chunk_bits,
-        bound_scales=snap.bound_scales,
     )
     return _rounded_rank_topk(wide.select("qid", "doc_id", "score"), 10)
 

@@ -3,8 +3,9 @@
 and 4 independently-built sub-indexes over the SAME synthetic corpus,
 then measure the three serving modes on a large query batch:
 
-- union      : single-index WAND batch plan (the baseline the federated
-               modes must match).
+- union      : wand_topk_sharded over the single union index (the
+               baseline the federated modes must match; the same plan
+               every federated leg runs).
 - federated  : federated_wand_topk over the 4 compressed legs with merged
                global stats — VERIFIED rank-identical to the union plan
                at the 6-dp grain (the federation correctness claim, here
@@ -31,7 +32,9 @@ fresh serving session after the builds. Prints ONE JSON line and writes
 FEDERATED_SCALE.json at the repo root.
 
 Env knobs: SPARK_GRAFT_CPUS (default all), SPARK_GRAFT_FED_DOCS
-(default 400_000), SPARK_GRAFT_FED_QUERIES (default 1000).
+(default 400_000), SPARK_GRAFT_FED_QUERIES (default 1000),
+SPARK_GRAFT_FED_OUT (output file; default FEDERATED_SCALE.json, which
+holds the 32-core run — point smaller boxes at a new file).
 """
 
 from __future__ import annotations
@@ -55,13 +58,15 @@ from themis_search_engine_spark.indexing.build import (  # noqa: E402
 )
 from themis_search_engine_spark.queryeng import (  # noqa: E402
     qterms_df,
-    query_term_list,
+    query_term_map,
 )
 from themis_search_engine_spark.queryeng.federated import (  # noqa: E402
     federated_wand_topk,
     selective_wand_topk,
 )
-from themis_search_engine_spark.queryeng.wand import wand_topk  # noqa: E402
+from themis_search_engine_spark.queryeng.sharded import (  # noqa: E402
+    wand_topk_sharded,
+)
 from themis_search_engine_spark.queryeng.topical import (  # noqa: E402
     topical_shard_map,
 )
@@ -194,24 +199,23 @@ def main() -> None:
             load_serving_index(spark, f"{tmp}/tleg{i}") for i in range(N_LEGS)
         )
 
+        def union_topk(qmap, k):
+            return wand_topk_sharded(
+                spark, f"{union.path}/postings_comp", qmap, union.dictionary,
+                union.avgdl, union.max_doc_id, k, chunk_bits=union.chunk_bits,
+            ).collect()
+
         queries = synth_reference_queries(n_queries)
         qt = qterms_df(spark, queries, stem=True).cache()
         qt.count()
-        tl = query_term_list(queries, stem=True)
         wq = synth_reference_queries(20)
         wqt = qterms_df(spark, wq, stem=True)
 
         # --- union baseline (wide k=3K raw, rounded top-K in driver) ---
-        wand_topk(
-            wqt, union.compressed, union.dictionary, union.avgdl, k=K,
-            chunk_bits=union.chunk_bits,
-            term_list=query_term_list(wq, stem=True),
-        ).collect()  # warmup
+        union_topk(query_term_map(wq, stem=True), K)  # warmup
+        qmap = query_term_map(queries, stem=True)
         t0 = time.perf_counter()
-        u_rows = wand_topk(
-            qt, union.compressed, union.dictionary, union.avgdl, k=3 * K,
-            chunk_bits=union.chunk_bits, term_list=tl,
-        ).collect()
+        u_rows = union_topk(qmap, 3 * K)
         u_sec = time.perf_counter() - t0
         union_ranks = _rounded_topk_py(u_rows)
         out.update(
@@ -243,11 +247,7 @@ def main() -> None:
         tq = synth_topical_queries(n_queries, N_TOPICS)
         tqt = qterms_df(spark, tq, stem=True).cache()
         tqt.count()
-        ttl = query_term_list(tq, stem=True)
-        t_rows = wand_topk(
-            tqt, union.compressed, union.dictionary, union.avgdl, k=3 * K,
-            chunk_bits=union.chunk_bits, term_list=ttl,
-        ).collect()
+        t_rows = union_topk(query_term_map(tq, stem=True), 3 * K)
         topical_union_ranks = _rounded_topk_py(t_rows)
 
         def run_selective(leg_set, tag):

@@ -73,7 +73,6 @@ def main() -> None:
         def run_parts(values):
             return wand_topk_partitioned(
                 spark, f"{tmp}/parts", qt, values, k=10,
-                term_list=tl,
             ).collect()
 
         run_full()

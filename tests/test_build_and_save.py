@@ -44,6 +44,7 @@ def test_build_and_save_serving_equals_logical_build(spark, tmp_path):
         load_serving_index,
     )
     from themis_search_engine_spark.indexing.compress import (
+        DEFAULT_CHUNK_BITS,
         build_postings_compressed,
         decode_postings,
     )
@@ -81,11 +82,12 @@ def test_build_and_save_serving_equals_logical_build(spark, tmp_path):
     ref = build_postings_compressed(idx_m.counts, idx_m.doc_stats, idx_m.avgdl)
     ca = sorted(
         (r["term"], r["doc_id"], round(r["tf"], 9))
-        for r in decode_postings(sv.compressed).collect()
+        for r in decode_postings(sv.compressed,
+                                 chunk_bits=sv.chunk_bits).collect()
     )
     cb = sorted(
         (r["term"], r["doc_id"], round(r["tf"], 9))
-        for r in decode_postings(ref).collect()
+        for r in decode_postings(ref, chunk_bits=DEFAULT_CHUNK_BITS).collect()
     )
     assert ca == cb and len(ca) > 0
 
@@ -272,3 +274,38 @@ def test_build_auto_chunk_bits_persists_and_serves(spark, tmp_path):
     assert all(
         abs(a["score"] - b["score"]) < 1e-9 for a, b in zip(got, ref)
     )
+
+
+def test_decode_auto_layout_spanning_chunks(spark, tmp_path):
+    """Decoding needs the layout's chunk_bits: on an auto layout whose
+    ids span many chunks, decode_postings with the persisted value
+    reproduces the flat postings exactly, and the old 16-bit default
+    would put every chunk's postings at the wrong doc ids."""
+    from themis_search_engine_spark.indexing.build import (
+        build_and_save_serving,
+    )
+    from themis_search_engine_spark.indexing.compress import (
+        DEFAULT_CHUNK_BITS,
+        decode_postings,
+    )
+
+    docs = load_documents(spark, SF_DIR).select(
+        (F.col("doc_id") * 1000).alias("doc_id"), "text"
+    )
+    sv = build_and_save_serving(docs, str(tmp_path / "sv"), stem=True,
+                                partitions=4)
+    assert sv.chunk_bits < DEFAULT_CHUNK_BITS
+    chunks = [r[0] for r in sv.compressed.select("chunk").distinct()
+              .collect()]
+    assert len(chunks) > 8  # ids spread over many chunks
+
+    def flat(dec):
+        return sorted(
+            (r["term"], r["doc_id"], round(r["tf"], 9)) for r in dec.collect()
+        )
+
+    want = flat(sv.postings_flat)
+    assert flat(decode_postings(sv.compressed,
+                                chunk_bits=sv.chunk_bits)) == want
+    assert flat(decode_postings(sv.compressed,
+                                chunk_bits=DEFAULT_CHUNK_BITS)) != want

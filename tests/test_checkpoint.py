@@ -98,10 +98,14 @@ def test_lineage_manifest_fields(spark, docs, tmp_path):
     assert mm["postings_per_sec"] > 0
     assert 0 < mm["bytes_per_posting"] < 56  # beats the reference record
     # and the compressed serving chunks decode back to the flat postings
-    from themis_search_engine_spark.indexing.compress import decode_postings
+    from themis_search_engine_spark.indexing.compress import (
+        DEFAULT_CHUNK_BITS,
+        decode_postings,
+    )
 
     comp = spark.read.parquet(f"{out}/index/postings_comp")
-    assert decode_postings(comp).count() == mm["n_postings"]
+    dec = decode_postings(comp, chunk_bits=DEFAULT_CHUNK_BITS)
+    assert dec.count() == mm["n_postings"]
 
 
 def test_fingerprint_mismatch_forces_rebuild(spark, docs, tmp_path):

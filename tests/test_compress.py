@@ -7,6 +7,7 @@ from hypothesis import strategies as st
 
 from themis_search_engine_spark.indexing import build_index
 from themis_search_engine_spark.indexing.compress import (
+    DEFAULT_CHUNK_BITS,
     build_postings_compressed,
     compression_metrics,
     decode_postings,
@@ -51,7 +52,7 @@ def idx(tiny_docs_df):
 
 def test_compressed_roundtrip_exact(spark, idx):
     comp = build_postings_compressed(idx.counts, idx.doc_stats, idx.avgdl)
-    dec = decode_postings(comp)
+    dec = decode_postings(comp, chunk_bits=DEFAULT_CHUNK_BITS)
     got = {(r["term"], r["doc_id"]): (r["tf"], r["length"])
            for r in dec.collect()}
     flat = {(r["term"], r["doc_id"]): r["tf"] for r in idx.postings_flat.collect()}
@@ -70,11 +71,10 @@ def test_block_max_bounds(spark, idx):
 
     comp = build_postings_compressed(idx.counts, idx.doc_stats, idx.avgdl)
     for row in comp.collect():
-        doc_ids, tf, dl = decode_chunk_row(row)
+        doc_ids, tf, dl = decode_chunk_row(row, chunk_bits=DEFAULT_CHUNK_BITS)
         core = bm25_core(tf, dl.astype(float), idx.avgdl)
         assert row["core_max"] == pytest.approx(core.max())
         assert row["core_min"] == pytest.approx(core.min())
-        assert max(row["block_max"]) == pytest.approx(core.max())
         assert sorted(doc_ids) == list(doc_ids)  # chunk is doc-sorted
 
 
@@ -94,7 +94,6 @@ def test_sorted_compressor_identical_chunks(spark, idx):
                 r["df_chunk"], bytes(r["doc_bytes"]), bytes(r["cnt_bytes"]),
                 bytes(r["mc_bytes"]), bytes(r["dl_bytes"]),
                 round(r["core_min"], 12), round(r["core_max"], 12),
-                tuple(round(x, 12) for x in r["block_max"]),
             )
             for r in rows
         }
@@ -148,9 +147,6 @@ def test_save_load_compressed_roundtrip(spark, tmp_path):
     from themis_search_engine_spark.corpus import load_documents
     from themis_search_engine_spark.indexing import build_index
     from themis_search_engine_spark.indexing.compress import (
-        DEFAULT_CHUNK_BITS,
-        build_postings_compressed,
-        decode_postings,
         load_compressed,
         save_compressed,
     )
@@ -162,14 +158,15 @@ def test_save_load_compressed_roundtrip(spark, tmp_path):
     comp = build_postings_compressed(idx.counts, idx.doc_stats, idx.avgdl)
     save_compressed(comp, str(tmp_path / "comp"), term_buckets=8)
     comp2 = load_compressed(spark, str(tmp_path / "comp"))
+    cb = DEFAULT_CHUNK_BITS
 
     a = sorted(
         (r["term"], r["doc_id"], round(r["tf"], 9))
-        for r in decode_postings(comp).collect()
+        for r in decode_postings(comp, chunk_bits=cb).collect()
     )
     b = sorted(
         (r["term"], r["doc_id"], round(r["tf"], 9))
-        for r in decode_postings(comp2).collect()
+        for r in decode_postings(comp2, chunk_bits=cb).collect()
     )
     assert a == b and len(a) > 0
 
@@ -179,7 +176,7 @@ def test_save_load_compressed_roundtrip(spark, tmp_path):
 
     qt = qterms_df(spark, {1: "spark shuffle join", 2: "merge sort"},
                    stem=False)
-    kw = dict(k=5, chunk_bits=DEFAULT_CHUNK_BITS)
+    kw = dict(k=5, chunk_bits=cb)
     ra = sorted(map(tuple, wand_topk(qt, comp, idx.dictionary, idx.avgdl,
                                      **kw).collect()))
     rb = sorted(map(tuple, wand_topk(qt, comp2, idx.dictionary, idx.avgdl,
@@ -218,7 +215,6 @@ def test_compress_files_equals_reference(spark, idx, tmp_path):
                 r["df_chunk"], bytes(r["doc_bytes"]), bytes(r["cnt_bytes"]),
                 bytes(r["mc_bytes"]), bytes(r["dl_bytes"]),
                 round(r["core_min"], 12), round(r["core_max"], 12),
-                tuple(round(x, 12) for x in r["block_max"]),
             )
             for r in rows
         }

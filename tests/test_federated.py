@@ -281,59 +281,12 @@ def test_selective_wand_matches_logical_plan(spark, docs_df, tmp_path):
     assert wand == logical and wand
 
 
-def test_federated_scan_filter_per_leg_identity(spark, docs_df, tmp_path):
-    """r5: each federated leg takes the measured IN-list-vs-join-only
-    decision for ITS dictionary cardinality, and the two filter shapes
-    are result-identical — a dense batch vocabulary (join_only branch)
-    federates to exactly the union oracle, same as the sparse (inlist)
-    batch the other tests use."""
+def _union_oracle(spark, docs, qt, k=5):
+    """(qid, doc_id, score, rank) at the 6-dp grain from the naive plan
+    over one index of the union corpus."""
     from pyspark.sql.window import Window
 
-    from themis_search_engine_spark.indexing.build import (
-        build_and_save_serving,
-        load_serving_index,
-    )
-    from themis_search_engine_spark.queryeng.federated import (
-        federated_wand_topk,
-    )
-    from themis_search_engine_spark.queryeng.planner import (
-        choose_scan_filter,
-    )
-
-    legs = []
-    for i in range(2):
-        p = str(tmp_path / f"leg{i}")
-        build_and_save_serving(
-            docs_df.where(F.pmod("doc_id", F.lit(2)) == i), p,
-            stem=False, partitions=4,
-        )
-        legs.append(load_serving_index(spark, p))
-    assert all(ix.n_terms > 0 for ix in legs)  # persisted cardinality
-
-    # a batch whose vocabulary covers (almost) the whole dictionary:
-    # every doc's words become one giant query plus the normal ones
-    dense = dict(QUERIES)
-    dense[99] = " ".join(DOCS.values())
-    qt = qterms_df(spark, dense, stem=False)
-    vocab = sorted(
-        {t for r in qt.select("term").distinct().collect() for t in [r[0]]}
-    )
-    # pin: dense coverage takes join_only on every leg, the sparse
-    # 3-query batch takes inlist
-    for ix in legs:
-        assert choose_scan_filter(len(vocab), ix.n_terms)[
-            "filter"] == "join_only"
-        assert choose_scan_filter(1, ix.n_terms)["filter"] == "inlist"
-
-    got = sorted(
-        tuple(r)
-        for r in federated_wand_topk(
-            qt, legs, k=5, round_dp=6, term_list=vocab
-        ).collect()
-    )
-    # identity vs the union-index oracle (the INLIST_CROSSOVER contract:
-    # the filter choice is physical only)
-    union = build_index(docs_df, stem=False, use_arrow=False).cache()
+    union = build_index(docs, stem=False, use_arrow=False).cache()
     scored = bm25_score_all(
         qt, union.postings_flat, union.dictionary, union.doc_stats,
         union.avgdl,
@@ -341,13 +294,131 @@ def test_federated_scan_filter_per_leg_identity(spark, docs_df, tmp_path):
     w = Window.partitionBy("qid").orderBy(
         F.desc(F.round("score", 6)), F.asc("doc_id")
     )
-    want = sorted(
+    return sorted(
         tuple(r)
         for r in scored.withColumn(
             "rank", F.row_number().over(w).cast("long")
         )
-        .where(F.col("rank") <= 5)
+        .where(F.col("rank") <= k)
         .select("qid", "doc_id", F.round("score", 6).alias("score"), "rank")
         .collect()
     )
+
+
+def _serving_legs(spark, parts, tmp_path, **kw):
+    from themis_search_engine_spark.indexing.build import (
+        build_and_save_serving,
+    )
+
+    return [
+        build_and_save_serving(part, str(tmp_path / f"leg{i}"), stem=False,
+                               partitions=4, **kw)
+        for i, part in enumerate(parts)
+    ]
+
+
+def test_federated_dense_vocabulary_rank_identity(spark, docs_df, tmp_path):
+    """A batch whose vocabulary covers (almost) the whole dictionary —
+    every doc's words as one query, plus the normal ones — federates to
+    exactly the union oracle, like the sparse batches above."""
+    from themis_search_engine_spark.queryeng.federated import (
+        federated_wand_topk,
+    )
+
+    legs = _serving_legs(spark, [
+        docs_df.where(F.pmod("doc_id", F.lit(2)) == i) for i in range(2)
+    ], tmp_path)
+    dense = dict(QUERIES)
+    dense[99] = " ".join(DOCS.values())
+    qt = qterms_df(spark, dense, stem=False)
+    got = sorted(
+        tuple(r)
+        for r in federated_wand_topk(qt, legs, k=5, round_dp=6).collect()
+    )
+    want = _union_oracle(spark, docs_df, qt)
     assert got == want and len(want) > 0
+
+
+@pytest.mark.parametrize("plan", ["local", "sharded"])
+def test_federated_wand_mixed_auto_chunk_bits(spark, docs_df, tmp_path,
+                                              monkeypatch, plan):
+    """Legs auto-size their chunk layouts independently: one leg's ids
+    sit high enough for a coarser layout than the other's. Each leg is
+    served on its own chunk_bits and max_doc_id, by either leg plan, and
+    the federation is still rank-identical to the union oracle."""
+    from themis_search_engine_spark.queryeng import planner
+    from themis_search_engine_spark.queryeng.federated import (
+        federated_wand_topk,
+    )
+
+    if plan == "sharded":  # every batch volume is above the crossover
+        monkeypatch.setattr(planner, "LOCAL_MAX_VOLUME", -1)
+
+    shifted = docs_df.select(
+        F.when(F.col("doc_id") >= 5, F.col("doc_id") + (1 << 20))
+        .otherwise(F.col("doc_id")).alias("doc_id"),
+        "text",
+    ).cache()
+    legs = _serving_legs(spark, [
+        shifted.where(F.col("doc_id") < 5),
+        shifted.where(F.col("doc_id") >= 5),
+    ], tmp_path)  # chunk_bits=None: auto per leg
+    assert legs[0].chunk_bits != legs[1].chunk_bits
+    qt = qterms_df(spark, QUERIES, stem=False)
+    got = sorted(
+        tuple(r)
+        for r in federated_wand_topk(qt, legs, k=5, round_dp=6).collect()
+    )
+    want = _union_oracle(spark, shifted, qt)
+    assert got == want and any(d >= 1 << 20 for _, d, _, _ in got)
+
+
+def test_selective_wand_legs_read_only_routed_queries(
+    spark, docs_df, tmp_path, monkeypatch
+):
+    """Each selected leg gets only the queries CORI routed to it, so it
+    reads only that sub-batch's vocabulary; unselected legs run
+    nothing."""
+    from themis_search_engine_spark.queryeng import federated
+
+    legs = _serving_legs(spark, [
+        docs_df.where(F.pmod("doc_id", F.lit(3)) == i) for i in range(3)
+    ], tmp_path)
+    qt = qterms_df(spark, QUERIES, stem=False)
+    routed = federated._route(qt, legs, 1)
+    calls = {}
+    real = federated._leg_topk
+
+    def spy(spark_, path, queries, *a, **kw):
+        calls[path] = queries
+        return real(spark_, path, queries, *a, **kw)
+
+    monkeypatch.setattr(federated, "_leg_topk", spy)
+    rows = federated.selective_wand_topk(qt, legs, k=5, m=1).collect()
+    assert rows
+    want_terms = federated._query_map(qt)
+    assert len(calls) == len(routed)
+    for i, qids in routed.items():
+        got = calls[legs[i].path]
+        assert sorted(got) == sorted(qids)
+        assert got == {q: want_terms[q] for q in qids}
+
+
+def test_selective_wand_empty_selection_keeps_schema(spark, docs_df,
+                                                     tmp_path):
+    """A batch no leg is routed to returns zero rows with the same
+    schema as a non-empty result."""
+    from themis_search_engine_spark.queryeng.federated import (
+        selective_wand_topk,
+    )
+
+    legs = _serving_legs(spark, [
+        docs_df.where(F.pmod("doc_id", F.lit(2)) == i) for i in range(2)
+    ], tmp_path)
+    hit = selective_wand_topk(qterms_df(spark, QUERIES, stem=False), legs,
+                              k=5, m=1)
+    miss = selective_wand_topk(
+        qterms_df(spark, {1: "zzqx unseen"}, stem=False), legs, k=5, m=1
+    )
+    assert miss.collect() == [] and hit.collect()
+    assert miss.dtypes == hit.dtypes

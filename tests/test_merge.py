@@ -196,23 +196,54 @@ def test_fresh_build_totals_need_no_doc_stats(spark, docs, full_idx,
     assert g["max_doc_id"] == int(want["m"])
     assert g["n_docs"] == full_idx.n_docs and g["avgdl"] == idx.avgdl
     assert g["chunk_bits"] == CB
-    assert g["n_terms"] == idx.dictionary.count()
     assert (g["min_enc_avgdl"], g["max_enc_avgdl"]) == (idx.avgdl,) * 2
 
 
-def test_n_terms_survives_merge_and_compact(spark, docs, tmp_path):
-    """Merge and compaction rewrite global_stats through the build's
-    writer, so the dictionary cardinality stays current instead of
-    dropping to unknown (-1)."""
+def test_merge_into_legacy_block_max_base(spark, docs, tmp_path):
+    """Layouts written before the per-128-posting ``block_max`` column
+    was dropped still merge and serve: a base whose files carry the
+    column takes a delta written without it, and both search_serving
+    plans equal bm25_topk over the merged index."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from themis_search_engine_spark.queryeng import (
+        bm25_topk,
+        query_term_map,
+    )
+    from themis_search_engine_spark.queryeng.planner import search_serving
+
     p = str(tmp_path / "idx")
-    first = build_and_save_serving(docs.where("doc_id < 200"), p,
-                                   stem=False, chunk_bits=CB, partitions=8)
+    build_and_save_serving(docs.where("doc_id < 200"), p, stem=False,
+                           chunk_bits=CB, partitions=8)
+    base_files = glob.glob(f"{p}/postings_comp/*.parquet")
+    for f in base_files:  # rewrite the base as a legacy layout
+        t = pq.read_table(f)
+        legacy = pa.array([[c] for c in t["core_max"].to_pylist()],
+                          pa.list_(pa.float64()))
+        pq.write_table(t.append_column("block_max", legacy), f)
+    assert all("block_max" in pq.read_schema(f).names for f in base_files)
+
     merged = merge_serving_delta(spark, p, docs.where("doc_id >= 200"),
                                  stem=False, partitions=8)
-    assert merged.n_terms == merged.dictionary.count() >= first.n_terms > 0
-    compacted = compact_serving_index(spark, p, partitions=8)
-    assert compacted.n_terms == compacted.dictionary.count()
-    assert compacted.n_terms == merged.n_terms
+    delta_files = glob.glob(f"{p}/postings_comp/delta*.parquet")
+    assert delta_files
+    assert not any("block_max" in pq.read_schema(f).names
+                   for f in delta_files)
+
+    queries = query_term_map(QUERYSET, stem=False)
+    qt = qterms_df(spark, QUERYSET, stem=False)
+    want = sorted(
+        (r["qid"], r["rank"], r["doc_id"], round(r["score"], 9))
+        for r in bm25_topk(qt, merged.postings_flat, merged.dictionary,
+                           merged.doc_stats, merged.avgdl, k=10).collect()
+    )
+    assert want
+    for plan in ("local", "sharded"):
+        assert _ranked(search_serving(spark, p, queries, 10,
+                                      plan=plan)) == want, plan
 
 
 def test_describe_index_tracks_lifecycle(spark, docs, tmp_path):

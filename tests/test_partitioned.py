@@ -80,6 +80,50 @@ def test_all_parts_match_unfiltered(spark, pdocs, pidx_path):
     assert _ranked(wand) == _ranked(naive)
 
 
+@pytest.mark.parametrize("plan", ["local", "sharded"])
+def test_parts_with_different_auto_chunk_bits(spark, pdocs, tmp_path,
+                                              monkeypatch, plan):
+    """chunk_bits=None auto-sizes each part from its own id ceiling, so
+    parts can differ; each is served on its own layout by either leg
+    plan, and filtered and unfiltered results still equal the
+    single-index plans."""
+    from themis_search_engine_spark.queryeng import planner
+    from themis_search_engine_spark.queryeng.bm25 import bm25_score_all, topk
+
+    if plan == "sharded":  # every batch volume is above the crossover
+        monkeypatch.setattr(planner, "LOCAL_MAX_VOLUME", -1)
+
+    shifted = pdocs.withColumn(
+        "doc_id",
+        F.when(F.col("lang") == "de", F.col("doc_id") + (1 << 20))
+        .otherwise(F.col("doc_id")),
+    ).cache()
+    p = str(tmp_path / "auto")
+    man = build_partitioned_serving(shifted, p, "lang", stem=False,
+                                    partitions=4)
+    cbs = {v: part["chunk_bits"] for v, part in man["parts"].items()}
+    assert cbs["de"] != cbs["en"], cbs
+
+    qt = qterms_df(spark, QS)
+    idx = build_index(shifted.select("doc_id", "text"), stem=False)
+    naive = topk(
+        bm25_score_all(
+            qt, idx.postings_flat, idx.dictionary, idx.doc_stats, idx.avgdl
+        ),
+        10,
+    ).collect()
+    got = wand_topk_partitioned(spark, p, qt, None, k=10).collect()
+    assert _ranked(got) == _ranked(naive)
+    assert any(r["doc_id"] >= 1 << 20 for r in got)
+    for vals in (["de"], ["en", "fr"]):
+        semi = bm25_topk_filtered(
+            qt, idx.postings_flat, idx.dictionary, idx.doc_stats, idx.avgdl,
+            shifted, F.col("lang").isin(vals), k=10,
+        ).collect()
+        wand = wand_topk_partitioned(spark, p, qt, vals, k=10).collect()
+        assert _ranked(wand) == _ranked(semi), vals
+
+
 def test_partition_pruning_zero_io_for_excluded(spark, pidx_path):
     ps = load_partitioned_serving(spark, pidx_path, ["en"])
     files = [

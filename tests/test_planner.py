@@ -238,22 +238,3 @@ def test_search_serving_legacy_stats_covers_all_chunks(spark, tmp_path):
     local = key("local")
     assert max(doc for _, doc, _ in local) >= 16  # beyond chunk 0
     assert key("sharded") == local
-
-
-def test_scan_filter_matrix():
-    from themis_search_engine_spark.queryeng.planner import (
-        choose_scan_filter,
-    )
-
-    # small vocab over a big dictionary: IN-list prunes the scan
-    assert choose_scan_filter(50, 5000)["filter"] == "inlist"
-    # vocabulary covering most of the dictionary: predicate is overhead
-    # (measured 2.2x at full coverage, INLIST_CROSSOVER.json)
-    assert choose_scan_filter(2500, 5000)["filter"] == "join_only"
-    assert choose_scan_filter(5000, 5000)["filter"] == "join_only"
-    # plan-size bound regardless of dictionary knowledge
-    assert choose_scan_filter(20_000, -1)["filter"] == "join_only"
-    # unknown dictionary size: literal cap alone
-    assert choose_scan_filter(5000, -1)["filter"] == "inlist"
-    assert choose_scan_filter(0, 5000)["filter"] == "join_only"
-    assert choose_scan_filter(50, 5000)["reasons"]

@@ -479,7 +479,11 @@ def test_multi_window_rank_identity(spark, tmp_path, chunk_bits):
 def test_chunk_bits_is_required():
     """chunk_bits maps chunk offsets back to doc ids, so a defaulted value
     silently returned wrong ids on any other layout: every kernel entry
-    point refuses a call that omits it."""
+    point and both decoders refuse a call that omits it."""
+    from themis_search_engine_spark.indexing.compress import (
+        decode_chunk_row,
+        decode_postings,
+    )
     from themis_search_engine_spark.queryeng.cache import cached_query_topk
     from themis_search_engine_spark.queryeng.sharded import wand_topk_sharded
     from themis_search_engine_spark.queryeng.wand import wand_topk_local
@@ -489,6 +493,8 @@ def test_chunk_bits_is_required():
         lambda: wand_topk_local("p", {}, {}, 1.0, 10),
         lambda: wand_topk_sharded(None, "p", {}, None, 1.0, 0, 10),
         lambda: cached_query_topk("p", {}, {}, 1.0, 10, cache_dir="c"),
+        lambda: decode_chunk_row({}),
+        lambda: decode_postings(None),
     ]
     for call in calls:
         with pytest.raises(TypeError, match="chunk_bits"):

@@ -289,10 +289,12 @@ def build_and_save(
     return load_index(spark, path)
 
 
+# one row: the layout facts every serving reader takes from the layout
+# (write_serving_stats says what each column is for); layouts written
+# before a column existed still load, and readers default what is absent
 GLOBAL_STATS_SCHEMA = (
     "n_docs long, avgdl double, chunk_bits int, total_len long, "
-    "min_enc_avgdl double, max_enc_avgdl double, max_doc_id long, "
-    "n_terms long"
+    "min_enc_avgdl double, max_enc_avgdl double, max_doc_id long"
 )
 
 
@@ -323,16 +325,10 @@ def write_serving_stats(
       rebuild computes, and lets readers skip a ``doc_stats`` scan.
     - ``min_enc_avgdl``/``max_enc_avgdl`` span the encode-time avgdl of
       every segment (the pruning-bound scales, indexing/merge.py).
-    - ``n_terms`` (dictionary cardinality, from parquet footers) feeds
-      planner.choose_scan_filter without a count job per batch.
 
     df sums ``df_chunk`` across fragments, which is exact because
     segments hold disjoint doc sets. idf changes for every term when N
     changes, so the whole (small) dictionary is recomputed."""
-    import pyarrow.dataset as pads
-
-    from .compress import _resolve_fs
-
     comp = spark.read.parquet(f"{path}/postings_comp")
     dictionary = (
         comp.groupBy("term")
@@ -346,12 +342,9 @@ def write_serving_stats(
     )
     dictionary.write.mode("overwrite").parquet(f"{path}/dictionary")
     _ensure_schema_file(dictionary, f"{path}/dictionary")
-    fs, p = _resolve_fs(f"{path}/dictionary")
-    n_terms = pads.dataset(p, filesystem=fs, format="parquet").count_rows()
     spark.createDataFrame(
         [(int(n_docs), float(avgdl), int(chunk_bits), int(total_len),
-          float(min_enc_avgdl), float(max_enc_avgdl), int(max_doc_id),
-          int(n_terms))],
+          float(min_enc_avgdl), float(max_enc_avgdl), int(max_doc_id))],
         GLOBAL_STATS_SCHEMA,
     ).write.mode("overwrite").parquet(f"{path}/global_stats")
 
@@ -580,19 +573,19 @@ class ServingIndex:
 
     ``chunk_bits`` is the persisted layout constant — pass it to
     ``wand_topk`` / ``decode_chunk_row`` when serving a reloaded index.
+    ``path`` is the directory the layout was built or loaded from, so
+    serving plans that read files (``wand_topk_sharded``, federated
+    legs) can address it.
     """
 
     index: InvertedIndex
     compressed: DataFrame
+    path: str
     n_postings: int = -1
     chunk_bits: int = DEFAULT_CHUNK_BITS
     # highest doc_id holding any posting — bounds the chunk space for
     # shard planning (doc_ids need not be dense in [0, n_docs))
     max_doc_id: int = 0
-    # dictionary cardinality (persisted by the serving build); -1 on
-    # layouts whose mutation path rewrote global_stats without it —
-    # the scan-filter planner then falls back to the literal-cap rule
-    n_terms: int = -1
 
     def __getattr__(self, name):  # delegate table access to the index
         # guard 'index' itself (and dunders): during copy/pickle the
@@ -633,12 +626,9 @@ def load_serving_index(spark: SparkSession, path: str) -> ServingIndex:
         mdi = int(
             doc_stats.agg(F.max("doc_id").alias("m")).collect()[0]["m"] or 0
         )
-    nt = (
-        int(row["n_terms"]) if "n_terms" in global_stats.columns else -1
-    )
     return ServingIndex(
-        index=idx, compressed=compressed, chunk_bits=cb, max_doc_id=mdi,
-        n_terms=nt,
+        index=idx, compressed=compressed, path=path, chunk_bits=cb,
+        max_doc_id=mdi,
     )
 
 

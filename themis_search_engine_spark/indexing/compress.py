@@ -1,6 +1,6 @@
 """Posting-list compression: docID-delta + varbyte, chunked by doc range,
-with block-max metadata (the north rule's new physical design; the reference
-stores uncompressed 56-B fixed records, Index.java:209-228).
+with per-chunk score bounds (the north rule's new physical design; the
+reference stores uncompressed 56-B fixed records, Index.java:209-228).
 
 Layout decisions (scale rationale):
 - Postings are chunked by **doc_id range** (``chunk = doc_id >> chunk_bits``)
@@ -15,9 +15,10 @@ Layout decisions (scale rationale):
   tf is recomputed as the identical IEEE division cnt/maxcnt — and counts
   compress to ~1 byte each. dl is denormalized into the posting so chunk
   scoring needs NO join with doc_stats at query time.
-- Block-max metadata: per-chunk min/max of the BM25 "core"
-  tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl)) plus per-128-posting block maxima —
-  consumed by the WAND path (queryeng/wand.py) for chunk pruning.
+- Chunk bounds: per-chunk min/max of the BM25 "core"
+  tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl)) (``core_min``/``core_max``) — a
+  layout fact kept checkable (tests/test_wand.py pins them at the float
+  grain); no query plan skips a chunk on them today.
 
 Everything here is applyInPandas/mapInPandas over Arrow batches; the codecs
 are numpy-vectorized (no per-row Python in the hot loops).
@@ -32,7 +33,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -52,7 +52,6 @@ MIN_CHUNK_BITS = 10
 # tiers (BENCH_SCALING r4 measured the failure mode: 19 atoms cap 16
 # cores at 0.59-0.66 efficiency)
 TARGET_CHUNK_ATOMS = 128
-BLOCK = 128
 
 
 def choose_chunk_bits(
@@ -153,7 +152,6 @@ POSTING_CHUNK_SCHEMA = StructType(
         StructField("dl_bytes", BinaryType(), False),
         StructField("core_min", DoubleType(), False),
         StructField("core_max", DoubleType(), False),
-        StructField("block_max", ArrayType(DoubleType(), False), False),
     ]
 )
 
@@ -200,10 +198,6 @@ def build_postings_compressed(
         dl = pdf["length"].to_numpy(dtype=np.int64)
         tf = cnt.astype(np.float64) / mc.astype(np.float64)
         core = bm25_core(tf, dl.astype(np.float64), avgdl)
-        nblocks = (len(core) + BLOCK - 1) // BLOCK
-        bmax = [
-            float(core[i * BLOCK : (i + 1) * BLOCK].max()) for i in range(nblocks)
-        ]
         return pd.DataFrame(
             {
                 "term": [term],
@@ -215,7 +209,6 @@ def build_postings_compressed(
                 "dl_bytes": [vb_encode(dl.astype(np.uint64))],
                 "core_min": [float(core.min())],
                 "core_max": [float(core.max())],
-                "block_max": [bmax],
             }
         )
 
@@ -236,7 +229,7 @@ def _encode_groups(
     Every varbyte stream for the whole frame is encoded in ONE vectorized
     call, then sliced back per group by cumulative byte offsets — the
     per-group Python work is two buffer slices per column, not an encode.
-    Group min/max/block-max come from reduceat over group/block starts.
+    Group min/max come from reduceat over group starts.
     ``terms_out`` is a pyarrow string array with ONE entry per group — term
     strings for the 10^8-row input never materialize as Python objects.
     """
@@ -288,19 +281,6 @@ def _encode_groups(
 
     core_min = np.minimum.reduceat(core, gstart)
     core_max = np.maximum.reduceat(core, gstart)
-    # per-group 128-posting block maxima, one global reduceat
-    nblocks = (glen + BLOCK - 1) // BLOCK
-    bcum = np.concatenate([[0], np.cumsum(nblocks)])
-    gob = np.repeat(np.arange(len(gstart)), nblocks)  # group of each block
-    within = (np.arange(bcum[-1]) - bcum[gob]) * BLOCK
-    bstarts = gstart[gob] + within
-    bmax_flat = (
-        np.maximum.reduceat(core, bstarts) if len(bstarts)
-        else np.empty(0, dtype=np.float64)
-    )
-    block_max = pa.ListArray.from_arrays(
-        pa.array(bcum, type=pa.int32()), pa.array(bmax_flat, type=pa.float64())
-    )
 
     return pa.RecordBatch.from_arrays(
         [
@@ -313,11 +293,10 @@ def _encode_groups(
             cols["dl_bytes"],
             pa.array(core_min, type=pa.float64()),
             pa.array(core_max, type=pa.float64()),
-            block_max,
         ],
         names=[
             "term", "chunk", "df_chunk", "doc_bytes", "cnt_bytes",
-            "mc_bytes", "dl_bytes", "core_min", "core_max", "block_max",
+            "mc_bytes", "dl_bytes", "core_min", "core_max",
         ],
     )
 
@@ -641,7 +620,6 @@ def compress_files(
             "dl_bytes": _pa.array([], _pa.binary()),
             "core_min": _pa.array([], _pa.float64()),
             "core_max": _pa.array([], _pa.float64()),
-            "block_max": _pa.array([], _pa.list_(_pa.float64())),
         })
         with fs_out.open_output_stream(f"{out_p}/part-empty.parquet") as fh:
             _pq.write_table(empty, fh)
@@ -652,9 +630,11 @@ def compress_files(
 
 
 def decode_chunk_row(
-    row, *, chunk_bits: int = DEFAULT_CHUNK_BITS
+    row, *, chunk_bits: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """→ (doc_ids int64, tf float64, dl int64) for one compressed row."""
+    """→ (doc_ids int64, tf float64, dl int64) for one compressed row.
+    ``chunk_bits`` must be the layout's value: it maps the chunk back to
+    its base doc id."""
     deltas = vb_decode(row["doc_bytes"]).astype(np.int64)
     doc_ids = np.cumsum(deltas) + (int(row["chunk"]) << chunk_bits)
     cnt = vb_decode(row["cnt_bytes"]).astype(np.float64)
@@ -674,10 +654,11 @@ DECODED_SCHEMA = StructType(
 
 
 def decode_postings(
-    compressed: DataFrame, *, chunk_bits: int = DEFAULT_CHUNK_BITS
+    compressed: DataFrame, *, chunk_bits: int
 ) -> DataFrame:
     """Compressed chunks → flat (term, doc_id, tf, length): the round-trip
-    proof used by tests and the driver's postings_roundtrip oracle check."""
+    proof used by tests and the driver's postings_roundtrip oracle check.
+    ``chunk_bits`` as in :func:`decode_chunk_row`."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -22,7 +22,7 @@ chunked serving layout of :func:`build_and_save_serving`:
   avgdl-dependent scoring must follow the MERGED corpus. Scoring is
   exact automatically: chunks store per-posting cnt/maxcnt/dl bytes and
   the scorer recomputes the BM25 core with the query-time avgdl. Only
-  the chunk PRUNING metadata (core_min/core_max/block_max) bakes in the
+  the chunk PRUNING metadata (core_min/core_max) bakes in the
   encode-time avgdl. bm25_core(tf, dl, a) = tf(k1+1)/(tf + k1(1-b+b·dl/a))
   is monotone increasing in a, and for a' > a:
       core(a)  <=  core(a')  <=  core(a) · a'/a
@@ -80,8 +80,7 @@ def _base_totals(spark: SparkSession, path: str) -> dict:
     the second). Layouts that predate ``total_len``/``max_doc_id`` get
     them from one Spark doc_stats scan (exactness: total_len is Σ length
     over doc_stats — zero-token docs hold no stats row and contribute 0,
-    matching the build's avgdl = Σ length / N). ``n_terms`` (dictionary
-    cardinality) is -1 when the layout did not persist it."""
+    matching the build's avgdl = Σ length / N)."""
     import pyarrow.parquet as pq
 
     from .compress import _resolve_fs
@@ -92,7 +91,6 @@ def _base_totals(spark: SparkSession, path: str) -> dict:
         "n_docs": int(row["n_docs"]),
         "avgdl": float(row["avgdl"]),
         "chunk_bits": int(row.get("chunk_bits", DEFAULT_CHUNK_BITS)),
-        "n_terms": int(row.get("n_terms", -1)),
     }
     if "total_len" in row and "max_doc_id" in row:
         out["total_len"] = int(row["total_len"])

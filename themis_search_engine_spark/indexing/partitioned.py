@@ -12,20 +12,22 @@ Layout under ``path``:
 
     parts/<value>/…      one full serving index per attribute value
                          (postings_raw/comp, doc_stats, global_stats,
-                         dictionary) — built by build_and_save_serving
+                         dictionary) — built by build_and_save_serving,
+                         each with its own chunk layout
     dictionary/          GLOBAL dictionary (df summed across parts, idf
                          from global N)
-    global_stats/        GLOBAL (n_docs, avgdl, chunk_bits, max_doc_id)
+    global_stats/        GLOBAL (n_docs, avgdl, max_doc_id)
     parts.json           manifest: attr column, values, per-part stats
 
 Scoring semantics are GLOBAL: queries score with the root dictionary's
 df/idf and the global avgdl, so a query over a subset of partitions is
 **score-identical** to ``bm25_topk_filtered`` with the equivalent
 attribute predicate (the partition layout changes I/O, never results).
-Each part's chunks carry block-max metadata encoded under the PART's
-own avgdl; pruning stays sound through the same (hi, lo) bound scales
-the multi-segment merge path uses (indexing/merge.py) — exact scoring
-always re-derives from decoded bytes + the global avgdl.
+:func:`wand_topk_partitioned` serves each selected part like a federated
+leg (queryeng/federated.py), on the part's own ``chunk_bits`` and
+``max_doc_id``; the kernel decodes lengths and scores with the global
+avgdl. Part chunk bounds encoded under the part's avgdl stay checkable
+through the merge path's (hi, lo) bound scales (indexing/merge.py).
 
 At 100 TB: a lang='en' query opens only ``parts/en`` (no list, no scan,
 no join for the filter); the per-part build is embarrassingly parallel
@@ -46,7 +48,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .build import DEFAULT_CHUNK_BITS, build_and_save_serving
+from .build import build_and_save_serving
 
 _SAFE = re.compile(r"^[A-Za-z0-9_\-]+$")
 
@@ -74,6 +76,10 @@ def build_partitioned_serving(
 ) -> dict:
     """Build one serving index per ``attr_col`` value + global tables.
 
+    ``chunk_bits``: ``None`` (the default) auto-sizes each part's chunk
+    layout from its own id ceiling, as build_and_save_serving does; an
+    int pins every part to it.
+
     ``values``: explicit partition list; default = distinct values of the
     corpus (one small aggregation — attribute columns are categorical by
     contract; a high-cardinality attr belongs in the semi-join path, not
@@ -85,7 +91,6 @@ def build_partitioned_serving(
     pruning on the input side too.
     """
     spark = docs.sparkSession
-    cb = DEFAULT_CHUNK_BITS if chunk_bits is None else chunk_bits
     rows = docs.select(attr_col).distinct().collect()
     present = sorted(r[attr_col] for r in rows if r[attr_col] is not None)
     if len(present) != len(rows):
@@ -111,11 +116,12 @@ def build_partitioned_serving(
         sub = docs.where(F.col(attr_col) == v).select(id_col, text_col)
         idx = build_and_save_serving(
             sub, _part_dir(path, v), text_col=text_col, id_col=id_col,
-            stem=stem, chunk_bits=cb, partitions=partitions,
+            stem=stem, chunk_bits=chunk_bits, partitions=partitions,
         )
         parts[v] = {
             "n_docs": idx.n_docs,
             "avgdl": idx.avgdl,
+            "chunk_bits": idx.chunk_bits,
             "max_doc_id": idx.max_doc_id,
         }
 
@@ -129,8 +135,8 @@ def build_partitioned_serving(
     avgdl = float(tot["t"] or 0.0) / n_docs if n_docs else 0.0
     max_doc_id = int(tot["m"] or 0)
     spark.createDataFrame(
-        [(n_docs, avgdl, cb, max_doc_id)],
-        "n_docs long, avgdl double, chunk_bits int, max_doc_id long",
+        [(n_docs, avgdl, max_doc_id)],
+        "n_docs long, avgdl double, max_doc_id long",
     ).write.mode("overwrite").parquet(f"{path}/global_stats")
 
     # global dictionary: df summed across parts, idf from global N
@@ -154,7 +160,6 @@ def build_partitioned_serving(
     manifest = {
         "attr_col": attr_col,
         "values": vals,
-        "chunk_bits": cb,
         "stem": stem,
         "n_docs": n_docs,
         "avgdl": avgdl,
@@ -170,30 +175,22 @@ def build_partitioned_serving(
 
 @dataclass
 class PartitionedServing:
-    """The tables a filtered WAND query needs, for a partition subset."""
+    """A partition subset: its parts' chunk rows (each part keeps its own
+    chunk_bits) and the global dictionary and avgdl."""
 
     compressed: DataFrame
     dictionary: DataFrame
     n_docs: int
     avgdl: float
-    chunk_bits: int
     max_doc_id: int
     bound_scales: tuple[float, float]
     values: list[str] = field(default_factory=list)
 
 
-def load_partitioned_serving(
-    spark: SparkSession, path: str, values: list[str] | None = None
-) -> PartitionedServing:
-    """Open the partition subset ``values`` (default: all). Unknown values
-    raise — a typo'd filter must not silently return an empty index.
-
-    The compressed frame is the union of ONLY the selected parts' chunk
-    tables (excluded partitions contribute zero I/O — this IS the filter);
-    dictionary/avgdl are the global ones, so scores match the semi-join
-    filtered plan exactly. bound_scales cover the selected parts' encode
-    avgdls per the merge-path soundness rule (indexing/merge.py).
-    """
+def _read_manifest(path: str, values: list[str] | None) -> tuple[dict, list]:
+    """(manifest, selected values) for the partition subset ``values``
+    (default: all). Unknown values raise — a typo'd filter must not
+    silently return an empty index."""
     with open(f"{path}/parts.json") as fh:
         manifest = json.load(fh)
     all_vals = manifest["values"]
@@ -203,7 +200,20 @@ def load_partitioned_serving(
     unknown = [v for v in sel if v not in all_vals]
     if unknown:
         raise ValueError(f"unknown partition values {unknown}; have {all_vals}")
+    return manifest, sel
 
+
+def load_partitioned_serving(
+    spark: SparkSession, path: str, values: list[str] | None = None
+) -> PartitionedServing:
+    """Open the partition subset ``values`` (:func:`_read_manifest`).
+    The compressed frame is the union of ONLY the selected parts' chunk
+    tables (excluded partitions contribute zero I/O — this IS the filter);
+    dictionary/avgdl are the global ones, so scores match the semi-join
+    filtered plan exactly. bound_scales cover the selected parts' encode
+    avgdls per the merge-path soundness rule (indexing/merge.py).
+    """
+    manifest, sel = _read_manifest(path, values)
     comp = spark.read.parquet(
         *[f"{_part_dir(path, v)}/postings_comp" for v in sel]
     )
@@ -218,7 +228,6 @@ def load_partitioned_serving(
         dictionary=dictionary,
         n_docs=manifest["n_docs"],
         avgdl=g,
-        chunk_bits=manifest["chunk_bits"],
         max_doc_id=manifest["max_doc_id"],
         bound_scales=(hi, lo),
         values=sel,
@@ -231,17 +240,28 @@ def wand_topk_partitioned(
     qterms: DataFrame,
     values: list[str] | None = None,
     k: int = 10,
-    *,
-    term_list: list[str] | None = None,
 ) -> DataFrame:
-    """Filtered BM25 top-k: top-k over only the docs whose attribute
-    is in ``values`` — the filter is partition pruning, not a join.
-    Scores are identical to metadata.bm25_topk_filtered with the
-    equivalent IN-predicate (global df/idf/avgdl)."""
-    from ..queryeng.wand import wand_topk
+    """(qid, doc_id, score, rank): filtered BM25 top-k over only the docs
+    whose attribute is in ``values`` — the filter is partition pruning,
+    not a join. Scores are identical to metadata.bm25_topk_filtered with
+    the equivalent IN-predicate (global df/idf/avgdl): the batch's df and
+    idf come from the root dictionary in one pyarrow read. Parts hold
+    disjoint docs, so the top-k over per-part top-k is exact."""
+    from ..queryeng.federated import _global_topk, _leg_topk, _query_map
+    from ..queryeng.planner import _price_terms
+    from .merge import _base_totals
 
-    ps = load_partitioned_serving(spark, path, values)
-    return wand_topk(
-        qterms, ps.compressed, ps.dictionary, ps.avgdl, k=k,
-        chunk_bits=ps.chunk_bits, term_list=term_list,
+    manifest, sel = _read_manifest(path, values)
+    queries = _query_map(qterms)
+    priced = _price_terms(path, {t for ts in queries.values() for t in ts})
+    legs = []
+    for v in sel:
+        part = _part_dir(path, v)
+        g = _base_totals(spark, part)
+        legs.append(_leg_topk(
+            spark, part, queries, priced, manifest["avgdl"], k,
+            chunk_bits=g["chunk_bits"], max_doc_id=g["max_doc_id"],
+        ))
+    return _global_topk(legs, k, None).withColumn(
+        "rank", F.col("rank").cast("int")
     )

@@ -27,12 +27,24 @@ stored in each sub-index's postings) and corpus-global inputs (idf from
      final rank, so any doc in the global top-k ranks ≤ k inside its own
      index — nothing the global phase needs is ever dropped.
 
-Plan shape per sub-index is the standard batch plan (bm25.bm25_score_all:
-IN-list pushdown into the postings scan, broadcast qterms⋈dictionary, one
-partial-agg shuffle). The cross-index union touches only per-index top-k
-rows — |indexes|·|queries|·k, not postings — so federation adds no wide
-shuffle. At cluster scale each sub-index keeps its own bucketing; nothing
-is co-partitioned across indexes.
+Two plan shapes, one per input kind:
+
+  * logical legs (``build_index`` output) — :func:`federated_topk` and
+    :func:`selective_topk` run the standard batch plan per sub-index
+    (bm25.bm25_score_all: IN-list pushdown into the postings scan,
+    broadcast qterms⋈dictionary, one partial-agg shuffle).
+  * saved serving layouts (``ServingIndex``) — :func:`federated_wand_topk`
+    and :func:`selective_wand_topk` serve each leg on its own layout
+    (:func:`_leg_topk`) with the merged avgdl and the batch vocabulary's
+    merged (df, idf), collected once per batch: dfs_query_then_fetch's
+    global-stats phase, then per-partition top-k plus a global merge
+    (REPOSE, PAPERS.md). indexing.partitioned serves its parts the same
+    way.
+
+The cross-index union touches only per-index top-k rows —
+|indexes|·|queries|·k, not postings — so federation adds no wide
+shuffle. Each sub-index keeps its own layout; nothing is co-partitioned
+across indexes.
 
 Correctness pin: the registered ``federated_topk`` splits the corpus in
 two, builds two real indexes, and must hash-match the UNCHANGED
@@ -50,6 +62,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .bm25 import TOPK_SALT, bm25_score_all
+from .planner import choose_query_plan
+from .sharded import result_frame, wand_topk_sharded
+from .wand import wand_topk_local
 
 
 def merged_global_stats(indexes) -> tuple[DataFrame, int, float]:
@@ -114,28 +129,73 @@ def _global_topk(legs: list[DataFrame], k: int, round_dp) -> DataFrame:
     )
 
 
-def _batch_terms(qterms: DataFrame, term_list: list[str] | None) -> list:
-    """The batch's distinct terms: ``term_list`` if the caller knows it,
-    else ONE collect (not one per leg)."""
-    if term_list is not None:
-        return term_list
-    return [r["term"] for r in qterms.select("term").distinct().collect()]
+def _query_map(qterms: DataFrame) -> dict[int, list[str]]:
+    """qid → terms: the batch in the kernel's input shape, one collect."""
+    queries: dict[int, list[str]] = {}
+    for r in qterms.select("qid", "term").collect():
+        queries.setdefault(r["qid"], []).append(r["term"])
+    return queries
 
 
-def _wand_leg(qterms, ix, gdict, avgdl, k, terms) -> DataFrame:
-    """(qid, doc_id, score) top-``k`` of one compressed leg under the
-    merged global stats, raw grain, with the leg's own scan-filter
-    decision (federated_wand_topk docstring)."""
-    from .planner import choose_scan_filter
-    from .wand import wand_topk
+def _vocab_stats(gdict: DataFrame, queries: dict) -> dict:
+    """term → (merged df, merged idf) for the batch vocabulary only, in
+    one collect — planner._price_terms' shape."""
+    vocab = sorted({t for ts in queries.values() for t in ts})
+    if not vocab:
+        return {}
+    return {
+        r["term"]: (int(r["df"]), float(r["idf"]))
+        for r in gdict.where(F.col("term").isin(vocab))
+        .select("term", "df", "idf").collect()
+    }
 
-    use_inlist = choose_scan_filter(
-        len(terms), getattr(ix, "n_terms", -1)
-    )["filter"] == "inlist"
-    return wand_topk(
-        qterms, ix.compressed, gdict, avgdl, k=k,
-        chunk_bits=ix.chunk_bits, term_list=terms, inlist=use_inlist,
-    ).select("qid", "doc_id", "score")
+
+def _leg_topk(
+    spark, path: str, queries: dict, priced: dict, avgdl: float, k: int,
+    *, chunk_bits: int, max_doc_id: int,
+) -> DataFrame:
+    """(qid, doc_id, score): raw-grain top-``k`` of the saved layout at
+    ``path`` on its own chunk geometry, scored with the global
+    ``priced`` (term → (df, idf)) and ``avgdl``. The plan is
+    search_serving's volume rule: one ``wand_topk_sharded`` job above
+    planner.LOCAL_MAX_VOLUME, ``wand_topk_local`` below (a 16-query batch
+    on a 6k-doc leg decodes in ~20 ms; a job costs 0.2-0.45 s on 4
+    cores). The GLOBAL df bounds this leg's own decode volume."""
+    idf = {t: w for t, (_, w) in priced.items()}
+    vocab = {t for ts in queries.values() for t in ts if t in priced}
+    volume = sum(priced[t][0] for t in vocab)
+    comp = f"{path}/postings_comp"
+    if choose_query_plan(len(queries), volume=volume)["plan"] == "local":
+        top = result_frame(spark, wand_topk_local(
+            comp, queries, idf, avgdl, k, chunk_bits=chunk_bits,
+        ))
+    else:
+        top = wand_topk_sharded(
+            spark, comp, queries, None, avgdl, max_doc_id, k,
+            chunk_bits=chunk_bits, idf_map=idf,
+        )
+    return top.select("qid", "doc_id", "score")
+
+
+def _serving_legs(qterms, indexes, k: int, by_shard=None) -> list:
+    """:func:`_leg_topk` of every leg under the merged global stats;
+    ``by_shard`` (leg → routed qids) sends each leg only its queries
+    and skips unrouted legs."""
+    gdict, _n, avgdl = merged_global_stats(indexes)
+    queries = _query_map(qterms)
+    priced = _vocab_stats(gdict, queries)
+    spark = qterms.sparkSession
+    return [
+        _leg_topk(
+            spark, ix.path,
+            queries if by_shard is None
+            else {q: queries[q] for q in by_shard[i]},
+            priced, avgdl, k,
+            chunk_bits=ix.chunk_bits, max_doc_id=ix.max_doc_id,
+        )
+        for i, ix in enumerate(indexes)
+        if by_shard is None or i in by_shard
+    ]
 
 
 def federated_topk(
@@ -194,32 +254,20 @@ def federated_wand_topk(
     overfetch: int = 3,
     term_list: list[str] | None = None,
 ) -> DataFrame:
-    """(qid, doc_id, score, rank): federated top-k over COMPRESSED
-    serving indexes (indexing.build.ServingIndex / load_serving_index)
-    through the one-pass chunk plan (wand.wand_topk) — the production
-    path of the federated story: per-crawl indexes stay in their own
-    on-disk chunk layouts, and only global stats are merged at query
-    time. Exact scoring decodes lengths and uses the merged avgdl and
-    idf, so scores are union-index-exact.
+    """(qid, doc_id, score, rank): federated top-k over saved serving
+    indexes (``ServingIndex``) — the production path of the federated
+    story: per-crawl indexes stay in their own on-disk chunk layouts,
+    and only global stats are merged at query time, so scores are
+    union-index-exact (module docstring).
 
     Per-leg results over-fetch ``overfetch``·k at raw-score grain, then
     the global merge ranks at ``round_dp`` — the same wide-then-rounded
     pattern every registered WAND query uses.
 
-    ``term_list``: the batch's distinct processed terms, if known
-    driver-side — without it the vocabulary is collected ONCE here (one
-    job, not one per leg). Each leg then takes the measured
-    IN-list-vs-join-only scan-filter decision for ITS dictionary
-    cardinality (planner.choose_scan_filter / INLIST_CROSSOVER.json):
-    legs the batch vocabulary covers densely skip the 2× literal-
-    predicate tax, sparse legs keep row-group pruning.
+    ``term_list`` is accepted and ignored: the one collect of ``qterms``
+    already yields the vocabulary.
     """
-    gdict, _n, avgdl = merged_global_stats(indexes)
-    terms = _batch_terms(qterms, term_list)
-    legs = [
-        _wand_leg(qterms, ix, gdict, avgdl, overfetch * k, terms)
-        for ix in indexes
-    ]
+    legs = _serving_legs(qterms, indexes, overfetch * k)
     return _global_topk(legs, k, round_dp)
 
 
@@ -234,31 +282,18 @@ def selective_wand_topk(
     term_list: list[str] | None = None,
 ) -> DataFrame:
     """Selective search on the SERVING path: CORI-route each query to
-    its top-m compressed legs, then the one-pass chunk plan with merged
-    global stats — :func:`selective_topk`'s routing composed with
-    :func:`federated_wand_topk`'s physical plan. Same contracts: routing
-    bounds recall, scores stay union-index-exact, unselected legs run
-    zero tasks. ``term_list`` as in :func:`federated_wand_topk`. Every
-    selected leg plants the FULL batch vocabulary into its scan (not
-    just its routed sub-batch's terms) and takes its scan-filter decision
-    from that vocabulary size vs ITS dictionary cardinality; the
-    broadcast qterms join drops the other terms either way.
+    its top-m legs, then :func:`federated_wand_topk`'s per-leg plan with
+    merged global stats — :func:`selective_topk`'s routing on the
+    serving plan. Same contracts: routing bounds recall, scores stay
+    union-index-exact, unselected legs read nothing, and each selected
+    leg reads only its routed sub-batch's vocabulary. ``term_list`` as
+    in :func:`federated_wand_topk`.
     """
     by_shard = _route(qterms, indexes, m)
-    gdict, _n, avgdl = merged_global_stats(indexes)
-    terms = _batch_terms(qterms, term_list)
-    legs = [
-        _wand_leg(
-            qterms.where(F.col("qid").isin(by_shard[i])), ix, gdict, avgdl,
-            overfetch * k, terms,
-        )
-        for i, ix in enumerate(indexes)
-        if i in by_shard
-    ]
-    if not legs:
-        spark = qterms.sparkSession
-        return spark.createDataFrame(
-            [], "qid long, doc_id long, score double, rank long"
+    legs = _serving_legs(qterms, indexes, overfetch * k, by_shard)
+    if not legs:  # no leg routed: empty, with a routed result's schema
+        return qterms.sparkSession.createDataFrame(
+            [], "qid int, doc_id long, score double, rank long"
         )
     return _global_topk(legs, k, round_dp)
 

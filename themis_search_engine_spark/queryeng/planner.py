@@ -12,9 +12,11 @@ PLANS.md records each shape:
   one Spark job, one task per doc-range shard, per-shard top-k merged on
   the driver.
 
-Inputs with no persisted layout (``build_index`` output, federated and
-partitioned legs) call :func:`~themis_search_engine_spark.queryeng.wand.wand_topk`
-directly; it runs the same kernel but is not a serving plan.
+Federated, selective and partitioned legs are saved layouts too: each
+runs one ``sharded`` job (queryeng/federated.py). Only inputs with no
+persisted layout (in-memory compressed frames: registry queries, pinned
+snapshots) call :func:`~themis_search_engine_spark.queryeng.wand.wand_topk`;
+it runs the same kernel but is not a serving plan.
 
 Volume rule. The kernel decodes each (term, chunk) row once per batch,
 so its work is the batch's DECODE VOLUME: Σ df over the batch's distinct
@@ -80,56 +82,6 @@ def choose_query_plan(
             "doc-range shards pays for its launch"
         )
     return {"plan": plan, "reasons": [why]}
-
-
-def choose_scan_filter(
-    n_terms_batch: int,
-    n_terms_dict: int,
-    *,
-    max_literals: int = 10_000,
-    max_dict_frac: float = 0.1,
-) -> dict:
-    """{"filter": "inlist"|"join_only", "reasons": [...]} — should the
-    batch vocabulary be planted into the chunk scan as a literal IN-list?
-
-    Measured (INLIST_CROSSOVER.json, 300k docs, 1000-query batches over
-    vocabulary samples): the IN-list pays while the batch vocabulary is a
-    SMALL fraction of the dictionary (row-group pruning on the
-    term-sorted layout skips most of the scan) and turns into pure
-    overhead as coverage grows — at full-dictionary coverage it prunes
-    nothing and costs >2x (predicate eval + plan bloat). The inner join
-    with the broadcast qterms frame always applies either way, so
-    dropping the IN-list never changes results (asserted per level in
-    the artifact). ``n_terms_dict`` <= 0 means the layout predates the
-    persisted dictionary cardinality — fall back to the literal cap
-    alone (the pre-measurement rule). On a 10^12-doc index the pruning
-    side of the trade only grows (more files to skip), so the default
-    ``max_dict_frac`` is deliberately conservative.
-    """
-    reasons = []
-    if n_terms_batch <= 0:
-        return {"filter": "join_only", "reasons": ["empty batch vocab"]}
-    if n_terms_batch > max_literals:
-        reasons.append(
-            f"{n_terms_batch} literals > {max_literals}: plan-size bound"
-        )
-        return {"filter": "join_only", "reasons": reasons}
-    if n_terms_dict > 0 and n_terms_batch / n_terms_dict > max_dict_frac:
-        reasons.append(
-            f"batch vocab covers {n_terms_batch / n_terms_dict:.2f} of "
-            f"the dictionary > {max_dict_frac}: scan pruning no longer "
-            "pays for the predicate (INLIST_CROSSOVER.json)"
-        )
-        return {"filter": "join_only", "reasons": reasons}
-    reasons.append(
-        f"{n_terms_batch} literals, "
-        + (
-            f"{n_terms_batch / n_terms_dict:.3f} of the dictionary"
-            if n_terms_dict > 0 else "dictionary size unknown"
-        )
-        + ": row-group pruning pays"
-    )
-    return {"filter": "inlist", "reasons": reasons}
 
 
 def search_serving(

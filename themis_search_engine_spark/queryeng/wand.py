@@ -6,9 +6,11 @@ The reference scores every candidate then fully sorts (OkapiBM25.java:
 everything, sort, take k") and run the one slab kernel,
 :func:`~themis_search_engine_spark.queryeng.sharded.score_rows`:
 
-* :func:`wand_topk` — the DataFrame-input plan, for inputs with no
-  persisted layout (``build_index`` output, registry queries, federated
-  and partitioned legs). Each chunk row is joined ONCE with its term's
+* :func:`wand_topk` — the DataFrame-input plan, for compressed frames
+  with no saved layout to read from (registry ``get_compressed``, pinned
+  snapshots, tests). Saved layouts, federated and partitioned legs
+  included, serve through ``sharded.wand_topk_sharded`` instead. Each
+  chunk row is joined ONCE with its term's
   qids and idf from a broadcast frame, rows are grouped by kernel
   window (``chunk // window_chunks(chunk_bits)``), and one
   ``applyInArrow`` call per window scores the whole batch and emits the
@@ -18,8 +20,8 @@ everything, sort, take k") and run the one slab kernel,
   plan and the interactive server).
 
 No chunk is skipped: the kernel decodes every matched row once per
-batch, so it needs no block-max bound. The layout still stores
-``core_min``/``core_max``/``block_max`` and the merge bound scales
+batch, so it needs no block-max bound. The layout still stores the
+per-chunk ``core_min``/``core_max`` bounds and the merge bound scales
 (indexing/merge.py); they are layout facts, not query-time inputs.
 
 Plan note (measured; BATCH_PLANS.json, 1.2M docs / 4000 queries / 32
@@ -76,7 +78,6 @@ def wand_topk(
     *,
     chunk_bits: int,
     term_list: list[str] | None = None,
-    inlist: bool = True,
 ) -> DataFrame:
     """(qid, doc_id, score, rank) — top-k per query over compressed chunks
     in one scoring pass (module docstring). ``chunk_bits`` must be the
@@ -99,7 +100,7 @@ def wand_topk(
         if term_list is not None
         else [r["term"] for r in qterms.select("term").distinct().collect()]
     )
-    if inlist and 0 < len(terms) <= MAX_PRUNE_LITERALS:
+    if 0 < len(terms) <= MAX_PRUNE_LITERALS:
         compressed = compressed.where(F.col("term").isin(list(terms)))
     # one row per term: its qids and idf ride along with each chunk row,
     # so a row is shipped and decoded once per batch, not once per query

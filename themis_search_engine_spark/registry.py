@@ -176,9 +176,11 @@ def get_compressed(spark, sf_dir, *, stem: bool = False) -> DataFrame:
 def q_postings_roundtrip(spark, sf_dir):
     """delta+varbyte encode∘decode == identity, proven against the SQL
     tf oracle (same rows as tf_maxnorm)."""
-    from .indexing.compress import decode_postings
+    from .indexing.compress import DEFAULT_CHUNK_BITS, decode_postings
 
-    dec = decode_postings(get_compressed(spark, sf_dir))
+    dec = decode_postings(
+        get_compressed(spark, sf_dir), chunk_bits=DEFAULT_CHUNK_BITS
+    )
     return dec.select("doc_id", "term", F.round("tf", 6).alias("tf"))
 
 
@@ -2176,8 +2178,8 @@ def q_federated_wand_topk(spark, sf_dir):
     """Federated serving over COMPRESSED on-disk indexes (queryeng/
     federated.federated_wand_topk): two independently-built serving
     indexes (even/odd halves, each with its own chunk layout and
-    encode-time avgdl) queried through block-max WAND with merged global
-    stats and per-leg bound scales — must hash-match the UNCHANGED
+    encode-time avgdl) queried through one wand_topk_sharded job per leg
+    with merged global stats — must hash-match the UNCHANGED
     single-index naive oracle, like every WAND plan."""
     from .indexing.build import build_and_save_serving, load_serving_index
     from .queryeng.federated import federated_wand_topk

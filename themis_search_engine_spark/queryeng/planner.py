@@ -13,7 +13,7 @@ PLANS.md records each shape:
   the driver.
 
 Federated, selective and partitioned legs are saved layouts too: each
-runs one ``sharded`` job (queryeng/federated.py). Only inputs with no
+leg takes the same local-or-sharded choice (queryeng/federated.py). Only inputs with no
 persisted layout (in-memory compressed frames: registry queries, pinned
 snapshots) call :func:`~themis_search_engine_spark.queryeng.wand.wand_topk`;
 it runs the same kernel but is not a serving plan.

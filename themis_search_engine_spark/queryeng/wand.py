@@ -9,7 +9,7 @@ everything, sort, take k") and run the one slab kernel,
 * :func:`wand_topk` — the DataFrame-input plan, for compressed frames
   with no saved layout to read from (registry ``get_compressed``, pinned
   snapshots, tests). Saved layouts, federated and partitioned legs
-  included, serve through ``sharded.wand_topk_sharded`` instead. Each
+  included, serve through planner.search_serving's two plans instead. Each
   chunk row is joined ONCE with its term's
   qids and idf from a broadcast frame, rows are grouped by kernel
   window (``chunk // window_chunks(chunk_bits)``), and one

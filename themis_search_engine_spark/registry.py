@@ -2178,8 +2178,8 @@ def q_federated_wand_topk(spark, sf_dir):
     """Federated serving over COMPRESSED on-disk indexes (queryeng/
     federated.federated_wand_topk): two independently-built serving
     indexes (even/odd halves, each with its own chunk layout and
-    encode-time avgdl) queried through one wand_topk_sharded job per leg
-    with merged global stats — must hash-match the UNCHANGED
+    encode-time avgdl) each served on its own layout by the serving
+    volume rule with merged global stats — must hash-match the UNCHANGED
     single-index naive oracle, like every WAND plan."""
     from .indexing.build import build_and_save_serving, load_serving_index
     from .queryeng.federated import federated_wand_topk
@@ -2207,7 +2207,7 @@ ORACLE_SQL["federated_wand_topk"] = osql.sql_bm25_topk(10)
 def q_selective_wand_topk(spark, sf_dir):
     """Selective search on the serving path (queryeng/federated.
     selective_wand_topk): CORI-route to top-2 of 4 on-disk compressed
-    legs, then WAND with merged stats — must hash-match the SAME
+    legs, then each routed leg on its own layout with merged stats — must hash-match the SAME
     selection oracle as the logical-table selective_topk (routing and
     scores are plan-independent; only the physical path differs)."""
     from .indexing.build import build_and_save_serving, load_serving_index

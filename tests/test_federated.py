@@ -387,13 +387,13 @@ def test_selective_wand_legs_read_only_routed_queries(
     qt = qterms_df(spark, QUERIES, stem=False)
     routed = federated._route(qt, legs, 1)
     calls = {}
-    real = federated._leg_topk
+    real = federated._serve_layout
 
     def spy(spark_, path, queries, *a, **kw):
         calls[path] = queries
         return real(spark_, path, queries, *a, **kw)
 
-    monkeypatch.setattr(federated, "_leg_topk", spy)
+    monkeypatch.setattr(federated, "_serve_layout", spy)
     rows = federated.selective_wand_topk(qt, legs, k=5, m=1).collect()
     assert rows
     want_terms = federated._query_map(qt)

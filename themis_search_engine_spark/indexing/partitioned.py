@@ -247,8 +247,8 @@ def wand_topk_partitioned(
     the equivalent IN-predicate (global df/idf/avgdl): the batch's df and
     idf come from the root dictionary in one pyarrow read. Parts hold
     disjoint docs, so the top-k over per-part top-k is exact."""
-    from ..queryeng.federated import _global_topk, _leg_topk, _query_map
-    from ..queryeng.planner import _price_terms
+    from ..queryeng.federated import _global_topk, _query_map
+    from ..queryeng.planner import _price_terms, _serve_layout
     from .merge import _base_totals
 
     manifest, sel = _read_manifest(path, values)
@@ -258,10 +258,10 @@ def wand_topk_partitioned(
     for v in sel:
         part = _part_dir(path, v)
         g = _base_totals(spark, part)
-        legs.append(_leg_topk(
+        legs.append(_serve_layout(
             spark, part, queries, priced, manifest["avgdl"], k,
             chunk_bits=g["chunk_bits"], max_doc_id=g["max_doc_id"],
-        ))
+        ).select("qid", "doc_id", "score"))
     return _global_topk(legs, k, None).withColumn(
         "rank", F.col("rank").cast("int")
     )

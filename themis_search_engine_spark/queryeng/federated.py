@@ -35,7 +35,7 @@ Two plan shapes, one per input kind:
     broadcast qterms⋈dictionary, one partial-agg shuffle).
   * saved serving layouts (``ServingIndex``) — :func:`federated_wand_topk`
     and :func:`selective_wand_topk` serve each leg on its own layout
-    (:func:`_leg_topk`) with the merged avgdl and the batch vocabulary's
+    (:func:`_serving_legs`) with the merged avgdl and the batch vocabulary's
     merged (df, idf), collected once per batch: dfs_query_then_fetch's
     global-stats phase, then per-partition top-k plus a global merge
     (REPOSE, PAPERS.md). indexing.partitioned serves its parts the same
@@ -62,9 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .bm25 import TOPK_SALT, bm25_score_all
-from .planner import choose_query_plan
-from .sharded import result_frame, wand_topk_sharded
-from .wand import wand_topk_local
+from .planner import _serve_layout
 
 
 def merged_global_stats(indexes) -> tuple[DataFrame, int, float]:
@@ -150,49 +148,26 @@ def _vocab_stats(gdict: DataFrame, queries: dict) -> dict:
     }
 
 
-def _leg_topk(
-    spark, path: str, queries: dict, priced: dict, avgdl: float, k: int,
-    *, chunk_bits: int, max_doc_id: int,
-) -> DataFrame:
-    """(qid, doc_id, score): raw-grain top-``k`` of the saved layout at
-    ``path`` on its own chunk geometry, scored with the global
-    ``priced`` (term → (df, idf)) and ``avgdl``. The plan is
-    search_serving's volume rule: one ``wand_topk_sharded`` job above
-    planner.LOCAL_MAX_VOLUME, ``wand_topk_local`` below (a 16-query batch
-    on a 6k-doc leg decodes in ~20 ms; a job costs 0.2-0.45 s on 4
-    cores). The GLOBAL df bounds this leg's own decode volume."""
-    idf = {t: w for t, (_, w) in priced.items()}
-    vocab = {t for ts in queries.values() for t in ts if t in priced}
-    volume = sum(priced[t][0] for t in vocab)
-    comp = f"{path}/postings_comp"
-    if choose_query_plan(len(queries), volume=volume)["plan"] == "local":
-        top = result_frame(spark, wand_topk_local(
-            comp, queries, idf, avgdl, k, chunk_bits=chunk_bits,
-        ))
-    else:
-        top = wand_topk_sharded(
-            spark, comp, queries, None, avgdl, max_doc_id, k,
-            chunk_bits=chunk_bits, idf_map=idf,
-        )
-    return top.select("qid", "doc_id", "score")
-
-
 def _serving_legs(qterms, indexes, k: int, by_shard=None) -> list:
-    """:func:`_leg_topk` of every leg under the merged global stats;
-    ``by_shard`` (leg → routed qids) sends each leg only its queries
-    and skips unrouted legs."""
+    """(qid, doc_id, score): raw-grain top-``k`` of every leg on its own
+    saved layout (path, ``chunk_bits``, ``max_doc_id``), scored with the
+    merged avgdl and the batch vocabulary's merged (df, idf). Each leg
+    takes search_serving's volume rule (planner._serve_layout): a
+    16-query batch on a 6k-doc leg scores in-process in ~20 ms, where a
+    Spark job costs 0.2-0.45 s on 4 cores. ``by_shard`` (leg → routed
+    qids) sends each leg only its queries and skips unrouted legs."""
     gdict, _n, avgdl = merged_global_stats(indexes)
     queries = _query_map(qterms)
     priced = _vocab_stats(gdict, queries)
     spark = qterms.sparkSession
     return [
-        _leg_topk(
+        _serve_layout(
             spark, ix.path,
             queries if by_shard is None
             else {q: queries[q] for q in by_shard[i]},
             priced, avgdl, k,
             chunk_bits=ix.chunk_bits, max_doc_id=ix.max_doc_id,
-        )
+        ).select("qid", "doc_id", "score")
         for i, ix in enumerate(indexes)
         if by_shard is None or i in by_shard
     ]

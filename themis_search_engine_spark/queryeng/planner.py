@@ -13,7 +13,9 @@ PLANS.md records each shape:
   the driver.
 
 Federated, selective and partitioned legs are saved layouts too: each
-leg takes the same local-or-sharded choice (queryeng/federated.py). Only inputs with no
+leg takes the same local-or-sharded choice through
+:func:`_serve_layout`, priced with the federation's global stats
+(queryeng/federated.py). Only inputs with no
 persisted layout (in-memory compressed frames: registry queries, pinned
 snapshots) call :func:`~themis_search_engine_spark.queryeng.wand.wand_topk`;
 it runs the same kernel but is not a serving plan.
@@ -112,27 +114,52 @@ def search_serving(
     an Arrow-built driver-local frame.
     """
     from ..indexing.merge import _base_totals
-    from .sharded import result_frame, wand_topk_sharded
-    from .wand import wand_topk_local
 
     if plan is not None and plan not in PLANS:
         raise ValueError(f"unknown plan {plan!r}; have {PLANS}")
     g = _base_totals(spark, path)
-    avgdl, cb = g["avgdl"], g["chunk_bits"]
-    comp_path = f"{path}/postings_comp"
-
     priced = _price_terms(path, {t for ts in queries.values() for t in ts})
+    return _serve_layout(
+        spark, path, queries, priced, g["avgdl"], k,
+        chunk_bits=g["chunk_bits"], max_doc_id=g["max_doc_id"], plan=plan,
+    )
+
+
+def _serve_layout(
+    spark: SparkSession,
+    path: str,
+    queries: dict[int, list[str]],
+    priced: dict[str, tuple[int, float]],
+    avgdl: float,
+    k: int,
+    *,
+    chunk_bits: int,
+    max_doc_id: int,
+    plan: str | None = None,
+) -> DataFrame:
+    """(qid, doc_id, score, rank): top-``k`` of ``queries`` over the saved
+    layout at ``path`` on its own ``chunk_bits``/``max_doc_id``, scored
+    with ``priced`` (term → (df, idf), :func:`_price_terms`' shape) and
+    ``avgdl``; both may be a larger corpus's global stats (federated
+    legs, partitions). ``plan=None`` applies the volume rule to the
+    priced df of ``queries``' terms."""
+    from .sharded import result_frame, wand_topk_sharded
+    from .wand import wand_topk_local
+
     idf = {t: w for t, (_, w) in priced.items()}
-    chosen = plan or choose_query_plan(
-        len(queries), volume=sum(df for df, _ in priced.values())
-    )["plan"]
-    if chosen == "sharded":
+    if plan is None:
+        vocab = {t for ts in queries.values() for t in ts if t in priced}
+        plan = choose_query_plan(
+            len(queries), volume=sum(priced[t][0] for t in vocab)
+        )["plan"]
+    comp_path = f"{path}/postings_comp"
+    if plan == "sharded":
         return wand_topk_sharded(
-            spark, comp_path, queries, None, avgdl, g["max_doc_id"], k,
-            chunk_bits=cb, idf_map=idf,
+            spark, comp_path, queries, None, avgdl, max_doc_id, k,
+            chunk_bits=chunk_bits, idf_map=idf,
         )
     return result_frame(spark, wand_topk_local(
-        comp_path, queries, idf, avgdl, k, chunk_bits=cb,
+        comp_path, queries, idf, avgdl, k, chunk_bits=chunk_bits,
     ))
 
 

@@ -404,6 +404,42 @@ def test_selective_wand_legs_read_only_routed_queries(
         assert got == {q: want_terms[q] for q in qids}
 
 
+def test_federated_leg_plan_uses_leg_df(spark, docs_df, tmp_path,
+                                       monkeypatch):
+    """A leg picks its plan from its own decode volume (its dictionary's
+    df), not the merged df that scores it: with the crossover between
+    the largest leg volume and the merged volume, every leg runs local,
+    and the result is still the union oracle's."""
+    from themis_search_engine_spark.queryeng import federated, planner
+
+    legs = _serving_legs(spark, [
+        docs_df.where(F.pmod("doc_id", F.lit(2)) == i) for i in range(2)
+    ], tmp_path)
+    qt = qterms_df(spark, QUERIES, stem=False)
+    queries, priced, _ = federated._merged_batch(qt, legs)
+    vocab = {t for ts in queries.values() for t in ts}
+    own = [sum(df for df, _ in planner._price_terms(ix.path, vocab).values())
+           for ix in legs]
+    merged = sum(df for df, _ in priced.values())
+    assert max(own) < merged
+    monkeypatch.setattr(planner, "LOCAL_MAX_VOLUME", max(own))
+    plans = []
+    real = federated._serve_layout
+
+    def spy(*a, **kw):
+        plans.append(kw["plan"])
+        return real(*a, **kw)
+
+    monkeypatch.setattr(federated, "_serve_layout", spy)
+    got = sorted(
+        tuple(r)
+        for r in federated.federated_wand_topk(qt, legs, k=5,
+                                               round_dp=6).collect()
+    )
+    assert plans == ["local", "local"]
+    assert got == _union_oracle(spark, docs_df, qt)
+
+
 def test_selective_wand_empty_selection_keeps_schema(spark, docs_df,
                                                      tmp_path):
     """A batch no leg is routed to returns zero rows with the same

@@ -2,8 +2,8 @@
 
 Pins: filtered WAND over the partition subset is rank-identical to the
 semi-join filtered plan (global scoring semantics), all-parts equals the
-unpartitioned index, excluded partitions contribute zero input (the scan
-reads only selected part paths), and bad values fail loud.
+unpartitioned index, excluded partitions contribute zero input (the
+query runs with their directories deleted), and bad values fail loud.
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from themis_search_engine_spark.indexing import build_index
 from themis_search_engine_spark.indexing.partitioned import (
     build_partitioned_serving,
-    load_partitioned_serving,
     wand_topk_partitioned,
 )
 from themis_search_engine_spark.queryeng import qterms_df
@@ -99,9 +98,11 @@ def test_parts_with_different_auto_chunk_bits(spark, pdocs, tmp_path,
         .otherwise(F.col("doc_id")),
     ).cache()
     p = str(tmp_path / "auto")
-    man = build_partitioned_serving(shifted, p, "lang", stem=False,
-                                    partitions=4)
-    cbs = {v: part["chunk_bits"] for v, part in man["parts"].items()}
+    from themis_search_engine_spark.indexing.merge import _base_totals
+
+    build_partitioned_serving(shifted, p, "lang", stem=False, partitions=4)
+    cbs = {v: _base_totals(spark, f"{p}/parts/{v}")["chunk_bits"]
+           for v in ("de", "en")}
     assert cbs["de"] != cbs["en"], cbs
 
     qt = qterms_df(spark, QS)
@@ -124,23 +125,24 @@ def test_parts_with_different_auto_chunk_bits(spark, pdocs, tmp_path,
         assert _ranked(wand) == _ranked(semi), vals
 
 
-def test_partition_pruning_zero_io_for_excluded(spark, pidx_path):
-    ps = load_partitioned_serving(spark, pidx_path, ["en"])
-    files = [
-        r.filePath
-        for r in ps.compressed.select(
-            F.input_file_name().alias("filePath")
-        ).distinct().collect()
-    ]
-    assert files and all("/parts/en/" in f for f in files)
-    assert ps.values == ["en"]
-    hi, lo = ps.bound_scales
-    assert hi >= 1.0 >= lo > 0.0
+def test_partition_pruning_zero_io_for_excluded(spark, pidx_path, tmp_path):
+    """A query over parts/en runs unchanged with every other part's
+    directory deleted: excluded partitions are never opened."""
+    import shutil
+
+    qt = qterms_df(spark, QS)
+    want = wand_topk_partitioned(spark, pidx_path, qt, ["en"], k=10).collect()
+    pruned = str(tmp_path / "pruned")
+    shutil.copytree(pidx_path, pruned)
+    for v in ("de", "fr"):
+        shutil.rmtree(f"{pruned}/parts/{v}")
+    got = wand_topk_partitioned(spark, pruned, qt, ["en"], k=10).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want)) and want
 
 
 def test_unknown_value_raises(spark, pidx_path):
     with pytest.raises(ValueError, match="unknown partition"):
-        load_partitioned_serving(spark, pidx_path, ["xx"])
+        wand_topk_partitioned(spark, pidx_path, qterms_df(spark, QS), ["xx"])
 
 
 def test_unsafe_value_raises(spark, pdocs, tmp_path):
@@ -152,17 +154,19 @@ def test_unsafe_value_raises(spark, pdocs, tmp_path):
 
 
 def test_duplicate_values_deduplicated(spark, pidx_path):
-    """['en','en'] must read parts/en once — duplicated paths would score
-    every posting twice."""
-    ps = load_partitioned_serving(spark, pidx_path, ["en", "en"])
-    assert ps.values == ["en"]
-    dd = load_partitioned_serving(spark, pidx_path, ["en"])
-    assert ps.compressed.count() == dd.compressed.count()
+    """['en','en'] must serve parts/en once — a part served twice would
+    return every hit twice."""
+    qt = qterms_df(spark, QS)
+    twice = wand_topk_partitioned(spark, pidx_path, qt, ["en", "en"], k=10)
+    once = wand_topk_partitioned(spark, pidx_path, qt, ["en"], k=10)
+    got = sorted(map(tuple, twice.collect()))
+    assert got == sorted(map(tuple, once.collect())) and got
+    assert len({(r[0], r[1]) for r in got}) == len(got)
 
 
 def test_empty_selection_raises(spark, pidx_path):
     with pytest.raises(ValueError, match="empty partition selection"):
-        load_partitioned_serving(spark, pidx_path, [])
+        wand_topk_partitioned(spark, pidx_path, qterms_df(spark, QS), [])
 
 
 def test_explicit_values_must_cover_corpus(spark, pdocs, tmp_path):

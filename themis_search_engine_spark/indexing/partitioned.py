@@ -25,9 +25,8 @@ df/idf and the global avgdl, so a query over a subset of partitions is
 attribute predicate (the partition layout changes I/O, never results).
 :func:`wand_topk_partitioned` serves each selected part like a federated
 leg (queryeng/federated.py), on the part's own ``chunk_bits`` and
-``max_doc_id``; the kernel decodes lengths and scores with the global
-avgdl. Part chunk bounds encoded under the part's avgdl stay checkable
-through the merge path's (hi, lo) bound scales (indexing/merge.py).
+``max_doc_id`` from its global_stats; the kernel decodes lengths and
+scores with the global avgdl.
 
 At 100 TB: a lang='en' query opens only ``parts/en`` (no list, no scan,
 no join for the filter); the per-part build is embarrassingly parallel
@@ -43,7 +42,6 @@ from __future__ import annotations
 import json
 import os
 import re
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -121,7 +119,6 @@ def build_partitioned_serving(
         parts[v] = {
             "n_docs": idx.n_docs,
             "avgdl": idx.avgdl,
-            "chunk_bits": idx.chunk_bits,
             "max_doc_id": idx.max_doc_id,
         }
 
@@ -173,20 +170,6 @@ def build_partitioned_serving(
     return manifest
 
 
-@dataclass
-class PartitionedServing:
-    """A partition subset: its parts' chunk rows (each part keeps its own
-    chunk_bits) and the global dictionary and avgdl."""
-
-    compressed: DataFrame
-    dictionary: DataFrame
-    n_docs: int
-    avgdl: float
-    max_doc_id: int
-    bound_scales: tuple[float, float]
-    values: list[str] = field(default_factory=list)
-
-
 def _read_manifest(path: str, values: list[str] | None) -> tuple[dict, list]:
     """(manifest, selected values) for the partition subset ``values``
     (default: all). Unknown values raise — a typo'd filter must not
@@ -203,37 +186,6 @@ def _read_manifest(path: str, values: list[str] | None) -> tuple[dict, list]:
     return manifest, sel
 
 
-def load_partitioned_serving(
-    spark: SparkSession, path: str, values: list[str] | None = None
-) -> PartitionedServing:
-    """Open the partition subset ``values`` (:func:`_read_manifest`).
-    The compressed frame is the union of ONLY the selected parts' chunk
-    tables (excluded partitions contribute zero I/O — this IS the filter);
-    dictionary/avgdl are the global ones, so scores match the semi-join
-    filtered plan exactly. bound_scales cover the selected parts' encode
-    avgdls per the merge-path soundness rule (indexing/merge.py).
-    """
-    manifest, sel = _read_manifest(path, values)
-    comp = spark.read.parquet(
-        *[f"{_part_dir(path, v)}/postings_comp" for v in sel]
-    )
-    dictionary = spark.read.parquet(f"{path}/dictionary")
-    enc = [manifest["parts"][v]["avgdl"] for v in sel]
-    enc_nz = [a for a in enc if a > 0]
-    g = manifest["avgdl"]
-    hi = max(1.0, *(g / a for a in enc_nz)) if enc_nz else 1.0
-    lo = min(1.0, *(g / a for a in enc_nz)) if enc_nz else 1.0
-    return PartitionedServing(
-        compressed=comp,
-        dictionary=dictionary,
-        n_docs=manifest["n_docs"],
-        avgdl=g,
-        max_doc_id=manifest["max_doc_id"],
-        bound_scales=(hi, lo),
-        values=sel,
-    )
-
-
 def wand_topk_partitioned(
     spark: SparkSession,
     path: str,
@@ -245,10 +197,12 @@ def wand_topk_partitioned(
     whose attribute is in ``values`` — the filter is partition pruning,
     not a join. Scores are identical to metadata.bm25_topk_filtered with
     the equivalent IN-predicate (global df/idf/avgdl): the batch's df and
-    idf come from the root dictionary in one pyarrow read. Parts hold
-    disjoint docs, so the top-k over per-part top-k is exact."""
-    from ..queryeng.federated import _global_topk, _query_map
-    from ..queryeng.planner import _price_terms, _serve_layout
+    idf come from the root dictionary in one pyarrow read. Only the
+    selected parts are opened; each is served on its own layout
+    (queryeng.federated._serve_legs). Parts hold disjoint docs, so the
+    top-k over per-part top-k is exact."""
+    from ..queryeng.federated import _query_map, _serve_legs
+    from ..queryeng.planner import _price_terms
     from .merge import _base_totals
 
     manifest, sel = _read_manifest(path, values)
@@ -256,12 +210,9 @@ def wand_topk_partitioned(
     priced = _price_terms(path, {t for ts in queries.values() for t in ts})
     legs = []
     for v in sel:
-        part = _part_dir(path, v)
-        g = _base_totals(spark, part)
-        legs.append(_serve_layout(
-            spark, part, queries, priced, manifest["avgdl"], k,
-            chunk_bits=g["chunk_bits"], max_doc_id=g["max_doc_id"],
-        ).select("qid", "doc_id", "score"))
-    return _global_topk(legs, k, None).withColumn(
-        "rank", F.col("rank").cast("int")
-    )
+        g = _base_totals(spark, _part_dir(path, v))
+        legs.append((_part_dir(path, v), g["chunk_bits"], g["max_doc_id"],
+                     queries))
+    return _serve_legs(
+        spark, legs, priced, manifest["avgdl"], k, leg_k=k
+    ).withColumn("rank", F.col("rank").cast("int"))

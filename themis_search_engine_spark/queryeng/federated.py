@@ -35,7 +35,7 @@ Two plan shapes, one per input kind:
     broadcast qterms⋈dictionary, one partial-agg shuffle).
   * saved serving layouts (``ServingIndex``) — :func:`federated_wand_topk`
     and :func:`selective_wand_topk` serve each leg on its own layout
-    (:func:`_serving_legs`) with the merged avgdl and the batch vocabulary's
+    (:func:`_serve_legs`) with the merged avgdl and the batch vocabulary's
     merged (df, idf), collected once per batch: dfs_query_then_fetch's
     global-stats phase, then per-partition top-k plus a global merge
     (REPOSE, PAPERS.md). indexing.partitioned serves its parts the same
@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .bm25 import TOPK_SALT, bm25_score_all
-from .planner import _serve_layout
+from .planner import _price_terms, _serve_layout, choose_query_plan
 
 
 def merged_global_stats(indexes) -> tuple[DataFrame, int, float]:
@@ -135,42 +135,46 @@ def _query_map(qterms: DataFrame) -> dict[int, list[str]]:
     return queries
 
 
-def _vocab_stats(gdict: DataFrame, queries: dict) -> dict:
-    """term → (merged df, merged idf) for the batch vocabulary only, in
-    one collect — planner._price_terms' shape."""
+def _merged_batch(qterms: DataFrame, indexes) -> tuple[dict, dict, float]:
+    """(queries, priced, avgdl): the batch as :func:`_query_map`, its
+    vocabulary's merged term → (df, idf) (planner._price_terms' shape,
+    one collect) and the merged avgdl."""
+    gdict, _n, avgdl = merged_global_stats(indexes)
+    queries = _query_map(qterms)
     vocab = sorted({t for ts in queries.values() for t in ts})
-    if not vocab:
-        return {}
-    return {
+    priced = {
         r["term"]: (int(r["df"]), float(r["idf"]))
         for r in gdict.where(F.col("term").isin(vocab))
         .select("term", "df", "idf").collect()
-    }
+    } if vocab else {}
+    return queries, priced, avgdl
 
 
-def _serving_legs(qterms, indexes, k: int, by_shard=None) -> list:
-    """(qid, doc_id, score): raw-grain top-``k`` of every leg on its own
-    saved layout (path, ``chunk_bits``, ``max_doc_id``), scored with the
-    merged avgdl and the batch vocabulary's merged (df, idf). Each leg
-    takes search_serving's volume rule (planner._serve_layout): a
-    16-query batch on a 6k-doc leg scores in-process in ~20 ms, where a
-    Spark job costs 0.2-0.45 s on 4 cores. ``by_shard`` (leg → routed
-    qids) sends each leg only its queries and skips unrouted legs."""
-    gdict, _n, avgdl = merged_global_stats(indexes)
-    queries = _query_map(qterms)
-    priced = _vocab_stats(gdict, queries)
-    spark = qterms.sparkSession
-    return [
-        _serve_layout(
-            spark, ix.path,
-            queries if by_shard is None
-            else {q: queries[q] for q in by_shard[i]},
-            priced, avgdl, k,
-            chunk_bits=ix.chunk_bits, max_doc_id=ix.max_doc_id,
-        ).select("qid", "doc_id", "score")
-        for i, ix in enumerate(indexes)
-        if by_shard is None or i in by_shard
-    ]
+def _serve_legs(spark, legs, priced, avgdl: float, k: int, *, leg_k: int,
+                round_dp=None) -> DataFrame:
+    """(qid, doc_id, score, rank): :func:`_global_topk` over the
+    raw-grain top-``leg_k`` of every leg. A leg is (path, chunk_bits,
+    max_doc_id, queries): a saved layout served on its own chunk layout
+    (planner._serve_layout), scored with the batch's global ``priced``
+    (term → (df, idf)) and ``avgdl``. Each leg takes search_serving's
+    volume rule on its OWN df, one pyarrow read of its dictionary: the
+    global df would overstate a leg's decode volume about |legs|-fold.
+    No legs: zero rows with a non-empty result's schema."""
+    frames = []
+    for path, chunk_bits, max_doc_id, queries in legs:
+        own = _price_terms(path, {t for ts in queries.values() for t in ts})
+        plan = choose_query_plan(
+            len(queries), volume=sum(df for df, _ in own.values())
+        )["plan"]
+        frames.append(_serve_layout(
+            spark, path, queries, priced, avgdl, leg_k,
+            chunk_bits=chunk_bits, max_doc_id=max_doc_id, plan=plan,
+        ).select("qid", "doc_id", "score"))
+    if not frames:
+        return spark.createDataFrame(
+            [], "qid int, doc_id long, score double, rank long"
+        )
+    return _global_topk(frames, k, round_dp)
 
 
 def federated_topk(
@@ -242,8 +246,11 @@ def federated_wand_topk(
     ``term_list`` is accepted and ignored: the one collect of ``qterms``
     already yields the vocabulary.
     """
-    legs = _serving_legs(qterms, indexes, overfetch * k)
-    return _global_topk(legs, k, round_dp)
+    queries, priced, avgdl = _merged_batch(qterms, indexes)
+    legs = [(ix.path, ix.chunk_bits, ix.max_doc_id, queries)
+            for ix in indexes]
+    return _serve_legs(qterms.sparkSession, legs, priced, avgdl, k,
+                       leg_k=overfetch * k, round_dp=round_dp)
 
 
 def selective_wand_topk(
@@ -254,23 +261,25 @@ def selective_wand_topk(
     *,
     round_dp: int | None = None,
     overfetch: int = 3,
-    term_list: list[str] | None = None,
 ) -> DataFrame:
     """Selective search on the SERVING path: CORI-route each query to
     its top-m legs, then :func:`federated_wand_topk`'s per-leg plan with
     merged global stats — :func:`selective_topk`'s routing on the
     serving plan. Same contracts: routing bounds recall, scores stay
     union-index-exact, unselected legs read nothing, and each selected
-    leg reads only its routed sub-batch's vocabulary. ``term_list`` as
-    in :func:`federated_wand_topk`.
+    leg gets only the queries routed to it, so it reads only that
+    sub-batch's vocabulary. A batch routed nowhere returns zero rows
+    with a routed result's schema.
     """
     by_shard = _route(qterms, indexes, m)
-    legs = _serving_legs(qterms, indexes, overfetch * k, by_shard)
-    if not legs:  # no leg routed: empty, with a routed result's schema
-        return qterms.sparkSession.createDataFrame(
-            [], "qid int, doc_id long, score double, rank long"
-        )
-    return _global_topk(legs, k, round_dp)
+    queries, priced, avgdl = _merged_batch(qterms, indexes)
+    legs = [
+        (ix.path, ix.chunk_bits, ix.max_doc_id,
+         {q: queries[q] for q in by_shard[i]})
+        for i, ix in enumerate(indexes) if i in by_shard
+    ]
+    return _serve_legs(qterms.sparkSession, legs, priced, avgdl, k,
+                       leg_k=overfetch * k, round_dp=round_dp)
 
 
 # --- selective search: CORI shard selection ---------------------------------

@@ -13,9 +13,9 @@ PLANS.md records each shape:
   the driver.
 
 Federated, selective and partitioned legs are saved layouts too: each
-leg takes the same local-or-sharded choice through
-:func:`_serve_layout`, priced with the federation's global stats
-(queryeng/federated.py). Only inputs with no
+leg takes the same local-or-sharded choice on its own decode volume and
+runs through :func:`_serve_layout`, scored with the federation's global
+stats (queryeng/federated.py). Only inputs with no
 persisted layout (in-memory compressed frames: registry queries, pinned
 snapshots) call :func:`~themis_search_engine_spark.queryeng.wand.wand_topk`;
 it runs the same kernel but is not a serving plan.
@@ -119,6 +119,10 @@ def search_serving(
         raise ValueError(f"unknown plan {plan!r}; have {PLANS}")
     g = _base_totals(spark, path)
     priced = _price_terms(path, {t for ts in queries.values() for t in ts})
+    if plan is None:
+        plan = choose_query_plan(
+            len(queries), volume=sum(df for df, _ in priced.values())
+        )["plan"]
     return _serve_layout(
         spark, path, queries, priced, g["avgdl"], k,
         chunk_bits=g["chunk_bits"], max_doc_id=g["max_doc_id"], plan=plan,
@@ -135,23 +139,17 @@ def _serve_layout(
     *,
     chunk_bits: int,
     max_doc_id: int,
-    plan: str | None = None,
+    plan: str,
 ) -> DataFrame:
     """(qid, doc_id, score, rank): top-``k`` of ``queries`` over the saved
-    layout at ``path`` on its own ``chunk_bits``/``max_doc_id``, scored
-    with ``priced`` (term → (df, idf), :func:`_price_terms`' shape) and
-    ``avgdl``; both may be a larger corpus's global stats (federated
-    legs, partitions). ``plan=None`` applies the volume rule to the
-    priced df of ``queries``' terms."""
+    layout at ``path`` on its own ``chunk_bits``/``max_doc_id``, by
+    ``plan``, scored with ``priced`` (term → (df, idf), :func:`_price_terms`'
+    shape) and ``avgdl``; both may be a larger corpus's global stats
+    (federated legs, partitions)."""
     from .sharded import result_frame, wand_topk_sharded
     from .wand import wand_topk_local
 
     idf = {t: w for t, (_, w) in priced.items()}
-    if plan is None:
-        vocab = {t for ts in queries.values() for t in ts if t in priced}
-        plan = choose_query_plan(
-            len(queries), volume=sum(priced[t][0] for t in vocab)
-        )["plan"]
     comp_path = f"{path}/postings_comp"
     if plan == "sharded":
         return wand_topk_sharded(
